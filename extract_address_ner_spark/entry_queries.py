@@ -20,7 +20,7 @@ from pyspark.sql import functions as F
 
 from .operators.canonicalize import canonicalize_mentions
 from .operators.link import build_edges, build_nodes, repo_mention_counts
-from .operators.tagger import extract_mentions, extract_mentions_pandas
+from .operators.tagger import extract_mentions
 from .operators.validate import road_address_gate, validate_addresses
 from .sources import corpus as C
 from .sources.admin_regions import hierarchy_edges, name_to_region_id
@@ -227,18 +227,9 @@ def q_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register("extract_mentions", C.gold_mentions_sql(sha256_fn=DUCK_SHA))
 def q_mentions(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Flagship: SQL-HOF tokenize → BIO tag → span merge (narrow plan)."""
+    """Flagship: tokenize → BIO tag → span merge, Arrow-batched
+    ``mapInPandas`` over the reference decode (narrow plan)."""
     return extract_mentions(C.corpus_from_documents(spark, sf_dir))
-
-
-# pytest-carried: equivalence with extract_mentions is pinned by
-# tests/test_tagger.py (all three merge paths equal) and the oracle replay
-# in tests/test_registry_oracles.py — freeing a driver slot (VERDICT r04 #1)
-@register("extract_mentions_pandas", C.gold_mentions_sql(sha256_fn=DUCK_SHA),
-          driver=False)
-def q_mentions_pandas(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Pluggable-tagger path: mapInPandas exact port of reference decode."""
-    return extract_mentions_pandas(C.corpus_from_documents(spark, sf_dir))
 
 
 @register("validate_address", gold_validate_sql())
@@ -350,14 +341,20 @@ SELECT label, CAST(n AS BIGINT) AS n FROM (
 
 @register("tag_distribution", gold_tag_distribution_sql())
 def q_tag_distribution(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """A1 tag-distribution counts over the real labeling pipeline (long
-    format window path → explode-free groupBy)."""
-    from .operators.span_merge import label_tokens_window, tokenize_long
-
+    """A1 tag-distribution counts derived from the extracted mentions: each
+    mention is one B plus (its non-empty tokens - 1) I; every other
+    non-empty token of the corpus is O."""
+    n_toks = "size(filter(split({0}, ' '), t -> t != ''))"
     corpus = C.corpus_from_documents(spark, sf_dir)
-    labeled = label_tokens_window(tokenize_long(corpus))
-    return labeled.groupBy("label").agg(
-        F.count(F.lit(1)).cast("long").alias("n")
+    bi = extract_mentions(corpus).agg(
+        F.count(F.lit(1)).alias("b"),
+        F.coalesce(F.sum(F.expr(n_toks.format("mention_text")) - 1),
+                   F.lit(0)).alias("i"),
+    )
+    total = corpus.agg(F.sum(F.expr(n_toks.format("content"))).alias("t"))
+    return bi.crossJoin(total).selectExpr(
+        "stack(3, 'B-ADDRESS', CAST(b AS BIGINT), 'I-ADDRESS', CAST(i AS BIGINT),"
+        " 'O', CAST(t - b - i AS BIGINT)) AS (label, n)"
     )
 
 

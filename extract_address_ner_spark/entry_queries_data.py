@@ -865,37 +865,6 @@ def q_events_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --------------------------------------------------------------------------
-# window-strategy span merge (alternative physical plan, same semantics)
-# --------------------------------------------------------------------------
-
-# pytest-carried: equivalence with extract_mentions is pinned by
-# tests/test_span_merge.py and the oracle replay in
-# tests/test_registry_oracles.py (VERDICT r04 #1)
-@register(
-    "extract_mentions_window",
-    None,  # set below: gold restricted to its columns
-    driver=False,
-)
-def q_mentions_window(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .operators.span_merge import extract_mentions_window
-    from .sources.corpus import corpus_from_documents
-
-    return extract_mentions_window(corpus_from_documents(spark, sf_dir))
-
-
-# attach the oracle (gold mentions projected to the window path's columns)
-from .entry_queries import _PYTEST_REGISTRY  # noqa: E402
-from .sources.corpus import gold_mentions_sql  # noqa: E402
-
-_PYTEST_REGISTRY["extract_mentions_window"] = (
-    _PYTEST_REGISTRY["extract_mentions_window"][0],
-    "SELECT doc_id, mention_text, m_start, m_end, confidence FROM ("
-    + gold_mentions_sql(sha256_fn="sha256({})")
-    + ")",
-)
-
-
-# --------------------------------------------------------------------------
 # multimodal plumbing
 # --------------------------------------------------------------------------
 

@@ -7,11 +7,11 @@ in entry_queries:
                100 TB this is the cheapest possible dedup — hash computed in
                the scan projection, map-side combine on the group).
 - MinHash:     k-word shingles → n md5-derived min-hashes per doc — computed
-               NARROW (no explode/shuffle until the band join); since round
-               6 the default signature engine is an Arrow-batched vectorized
-               kernel (hashlib md5 + NumPy family minima — the HOF
-               expression path runs interpreted and measured ~7× slower;
-               SPARK_GRAFT_MINHASH_IMPL=expr selects it, values identical).
+               NARROW (no explode/shuffle until the band join); signatures
+               come from an Arrow-batched vectorized kernel (hashlib md5 +
+               NumPy family minima), byte-identical to the SQL expression
+               ``minhash_sig_expr`` that runs interpreted and measured ~7×
+               slower.
 - LSH:         banded minhash signatures → candidate pairs via an equi-join
                on (band_idx, band_signature) — the scale path for near-dup:
                candidates ∝ true duplicates, not n².
@@ -323,17 +323,10 @@ def _minhash_sigs_batch(texts, n_hashes: int = N_HASHES, k: int = SHINGLE_K):
 def _sig_frame(
     df: DataFrame, text_col: str, id_col: str, n_hashes: int = N_HASHES
 ) -> DataFrame:
-    """(id, _sig array<bigint>) — the MinHash signature table. Default
-    engine is the Arrow-vectorized batch path (``_minhash_sigs_batch``);
-    set SPARK_GRAFT_MINHASH_IMPL=expr for the pure-SQL-expression original
-    (same values — equality pinned in tests)."""
-    import os
+    """(id, _sig array<bigint>) — the MinHash signature table, computed by
+    the Arrow-vectorized batch kernel ``_minhash_sigs_batch`` (same values
+    as ``minhash_sig_expr`` — equality pinned in tests)."""
 
-    if os.environ.get("SPARK_GRAFT_MINHASH_IMPL", "arrow") == "expr":
-        sig = minhash_sig_expr("_hs", n_hashes)
-        return with_shingle_hashes(df, text_col).select(
-            id_col, F.expr(sig).alias("_sig")
-        )
     def _sig_fn(texts: pd.Series) -> pd.Series:
         return pd.Series(_minhash_sigs_batch(texts.tolist(), n_hashes))
 

@@ -1,4 +1,4 @@
-"""Mention extraction: tokenize → BIO tag → span merge, as Spark operators.
+"""Mention extraction: tokenize → BIO tag → span merge, as one Spark operator.
 
 Reference semantics (citations into /root/reference/):
 - tokenization with char offsets + special/empty-token skip
@@ -8,27 +8,20 @@ Reference semantics (citations into /root/reference/):
 - span merge state machine incl. bare-I quirk and mean-confidence
   (app/services/ml_model.py:352-437)
 
-Two interchangeable physical strategies (equivalence-tested):
+One engine: ``mapInPandas`` over Arrow batches. Each batch is tagged by a
+``Tagger`` and decoded by the pure-Python oracle's exact port of the
+reference state machine (``oracle.merge_spans``). The plan is narrow
+(scan → filter → MapInPandas, no shuffle) and the batch crosses the
+JVM↔Python boundary as Arrow. Measured 2× faster than the interpreted SQL
+``aggregate`` fold it replaced (higher-order functions get no whole-stage
+codegen).
 
-1. ``extract_mentions`` with ``impl="expr"``: the whole per-document
-   pipeline is expressed with SQL higher-order functions (aggregate /
-   transform / filter over arrays) — a NARROW plan: no shuffle, no Python
-   worker. Each document's token stream is an array; the BIO state machine
-   is an ``aggregate`` fold. NOTE (round 6): HOF lambdas execute
-   INTERPRETED (no whole-stage codegen), which is why this is no longer
-   the default engine — measured 2× slower than the Arrow path at 200k
-   docs. Still a narrow plan, embarrassingly parallel over files.
+The ``Tagger`` protocol is the pluggable-tagger seam: anything returning
+per-token offsets, BIO labels and confidences can replace the default
+``LexiconRegexTagger`` (e.g. the reference's RoBERTa+BiLSTM+CRF tagger,
+ml_model.py:58-247).
 
-2. ``extract_mentions_pandas`` (the round-6 DEFAULT engine behind
-   ``extract_mentions``): mapInPandas over Arrow batches calling the
-   pure-Python oracle (exact imperative port of the reference state
-   machine) — equally narrow (no shuffle), with the batch crossing the
-   JVM↔Python boundary as Arrow.
-   This is also the pluggable-tagger seam: a ``Tagger`` returning per-token
-   labels+confidences can be swapped in (the neural RoBERTa+BiLSTM+CRF tagger
-   of ml_model.py:58-247 slots here when torch is available — import-guarded).
-
-Output schema (both): input key columns + ``mention_text, m_start, m_end,
+Output schema: input key columns + ``mention_text, m_start, m_end,
 confidence`` — one row per mention (reference D5, app/models/address.py:9-13).
 Slice identity ``content[m_start:m_end] == mention_text`` holds
 (ml_model.py:369).
@@ -43,248 +36,6 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .. import CONF_ADDRESS, CONF_OTHER
-from ..sources.admin_regions import start_region_names
-
-# Continuation-token regex — keep in sync with oracle._CONT_RE (asserted in
-# tests). Derived from the reference validation patterns
-# (app/utils/preprocess.py:284-288).
-CONT_REGEX = r"^(?:\S+[시군구동읍면리로길]|\d+(?:-\d+)?(?:번길|번지)?)$"
-
-_TOK_ARR_T = "array<struct<token: string, tok_start: int, tok_end: int>>"
-_LAB_ARR_T = "array<struct<token: string, tok_start: int, tok_end: int, label: string, conf: double>>"
-_SPAN_ARR_T = "array<struct<m_start: int, m_end: int, confidence: double>>"
-
-
-def tokens_with_offsets_expr(text_col: str) -> str:
-    """SQL expression: string → array<struct<token, tok_start, tok_end>>.
-
-    Single-space split with a running char offset (each token consumes
-    length+1 chars); empty tokens from space runs advance the offset but are
-    dropped — mirroring the special-token skip (tok_start == tok_end ⇒ skip,
-    ml_model.py:361-362) and oracle.tokenize_ws."""
-    return f"""
-    aggregate(
-      split({text_col}, ' '),
-      named_struct('pos', 0, 'toks', CAST(array() AS {_TOK_ARR_T})),
-      (acc, t) -> named_struct(
-        'pos', acc.pos + length(t) + 1,
-        'toks', CASE WHEN length(t) > 0
-          THEN concat(acc.toks, array(named_struct(
-            'token', t, 'tok_start', acc.pos, 'tok_end', acc.pos + length(t))))
-          ELSE acc.toks END),
-      acc -> acc.toks)
-    """.strip()
-
-
-def _start_set_expr() -> str:
-    names = ", ".join(f"'{n}'" for n in sorted(start_region_names()))
-    return f"array({names})"
-
-
-def labeled_tokens_expr(toks_expr: str) -> str:
-    """Array fold assigning BIO labels: B at a top-level region token
-    (lexicon), I for continuation tokens while a span is open, O otherwise.
-    Per-token confidence uses the deterministic constants 0.85/0.15
-    (preprocess.py:291-293) — the neural tagger's softmax replaces these when
-    plugged in (ml_model.py:346-350)."""
-    return f"""
-    aggregate(
-      {toks_expr},
-      named_struct('open', false, 'labs', CAST(array() AS {_LAB_ARR_T})),
-      (acc, t) -> CASE
-        WHEN array_contains({_start_set_expr()}, t.token) THEN named_struct(
-          'open', true,
-          'labs', concat(acc.labs, array(named_struct(
-            'token', t.token, 'tok_start', t.tok_start, 'tok_end', t.tok_end,
-            'label', 'B-ADDRESS', 'conf', CAST({CONF_ADDRESS} AS DOUBLE)))))
-        WHEN acc.open AND t.token RLIKE '{CONT_REGEX.replace(chr(92), chr(92) * 2)}' THEN named_struct(
-          'open', true,
-          'labs', concat(acc.labs, array(named_struct(
-            'token', t.token, 'tok_start', t.tok_start, 'tok_end', t.tok_end,
-            'label', 'I-ADDRESS', 'conf', CAST({CONF_ADDRESS} AS DOUBLE)))))
-        ELSE named_struct(
-          'open', false,
-          'labs', concat(acc.labs, array(named_struct(
-            'token', t.token, 'tok_start', t.tok_start, 'tok_end', t.tok_end,
-            'label', 'O', 'conf', CAST({CONF_OTHER} AS DOUBLE)))))
-        END,
-      acc -> acc.labs)
-    """.strip()
-
-
-def merge_spans_expr(labeled_expr: str) -> str:
-    """Array fold replicating the reference BIO→span state machine
-    (ml_model.py:352-437) exactly:
-
-    - B: flush any open span, then open a new one;
-    - I: extend UNCONDITIONALLY — after O/start with no B, a bare-I run still
-      opens a span (the reference appends with no open check,
-      ml_model.py:393-398);
-    - O: flush; trailing open span flushed by the finish lambda
-      (ml_model.py:421-435).
-
-    Span start = first member token's tok_start, end = last member's tok_end,
-    confidence = mean of member confidences (ml_model.py:369-372)."""
-    zero = (
-        "named_struct('cs', -1, 'ce', -1, 'sm', CAST(0 AS DOUBLE), 'n', 0, "
-        f"'spans', CAST(array() AS {_SPAN_ARR_T}))"
-    )
-    flush = (
-        "CASE WHEN acc.n > 0 THEN concat(acc.spans, array(named_struct("
-        "'m_start', acc.cs, 'm_end', acc.ce, 'confidence', acc.sm / acc.n)))"
-        " ELSE acc.spans END"
-    )
-    return f"""
-    aggregate(
-      {labeled_expr},
-      {zero},
-      (acc, x) -> CASE
-        WHEN x.label = 'B-ADDRESS' THEN named_struct(
-          'cs', x.tok_start, 'ce', x.tok_end, 'sm', x.conf, 'n', 1,
-          'spans', {flush})
-        WHEN x.label = 'I-ADDRESS' THEN CASE WHEN acc.n > 0
-          THEN named_struct('cs', acc.cs, 'ce', x.tok_end,
-                            'sm', acc.sm + x.conf, 'n', acc.n + 1,
-                            'spans', acc.spans)
-          ELSE named_struct('cs', x.tok_start, 'ce', x.tok_end,
-                            'sm', x.conf, 'n', 1, 'spans', acc.spans)
-          END
-        ELSE named_struct('cs', -1, 'ce', -1, 'sm', CAST(0 AS DOUBLE), 'n', 0,
-                          'spans', {flush})
-        END,
-      acc -> {flush})
-    """.strip()
-
-
-def fused_spans_expr(text_col: str) -> str:
-    """ONE fold over split(text, ' ') that tokenizes, labels, and merges in a
-    single pass with a constant-size accumulator — the spans array is only
-    copied when a span flushes (rare), so per-token work allocates no
-    intermediate token/label arrays.
-
-    Motivation (measured): the 3-stage composition
-    (tokens→labels→merge, each an aggregate that appends to an array)
-    allocates O(tokens) intermediate arrays per row with O(n²) copy
-    behavior; at 300k docs the job became GC-bound and STOPPED SCALING with
-    cores (26s @32c vs 19s @8c). The fused fold restores linear per-row work.
-
-    Semantics identical to the composition for the lexicon tagger (the
-    bare-I decode quirk only matters for externally-supplied label
-    sequences — covered by the pandas and window paths); equality is
-    asserted against the oracle in tests.
-
-    The ``t >= '가'`` pre-check short-circuits the 30-way start-set scan for
-    non-Hangul tokens (every start name begins with a Hangul syllable ≥
-    U+AC00; ASCII/Latin tokens compare lower) — most corpus tokens take one
-    string compare instead of thirty."""
-    esc_cont = CONT_REGEX.replace("\\", "\\\\")
-    conf = f"CAST({CONF_ADDRESS} AS DOUBLE)"
-    flush = (
-        "CASE WHEN acc.n > 0 THEN concat(acc.spans, array(named_struct("
-        "'m_start', acc.cs, 'm_end', acc.ce, 'confidence', acc.sm / acc.n)))"
-        " ELSE acc.spans END"
-    )
-    return f"""
-    aggregate(
-      split({text_col}, ' '),
-      named_struct('pos', 0, 'open', false, 'cs', -1, 'ce', -1,
-                   'sm', CAST(0 AS DOUBLE), 'n', 0,
-                   'spans', CAST(array() AS {_SPAN_ARR_T})),
-      (acc, t) -> CASE
-        WHEN length(t) = 0 THEN named_struct(
-          'pos', acc.pos + 1, 'open', acc.open, 'cs', acc.cs, 'ce', acc.ce,
-          'sm', acc.sm, 'n', acc.n, 'spans', acc.spans)
-        WHEN t >= '가' AND array_contains({_start_set_expr()}, t) THEN named_struct(
-          'pos', acc.pos + length(t) + 1, 'open', true,
-          'cs', acc.pos, 'ce', acc.pos + length(t), 'sm', {conf}, 'n', 1,
-          'spans', {flush})
-        WHEN acc.open AND t RLIKE '{esc_cont}' THEN named_struct(
-          'pos', acc.pos + length(t) + 1, 'open', true,
-          'cs', acc.cs, 'ce', acc.pos + length(t),
-          'sm', acc.sm + {conf}, 'n', acc.n + 1, 'spans', acc.spans)
-        ELSE named_struct(
-          'pos', acc.pos + length(t) + 1, 'open', false,
-          'cs', -1, 'ce', -1, 'sm', CAST(0 AS DOUBLE), 'n', 0,
-          'spans', {flush})
-        END,
-      acc -> {flush})
-    """.strip()
-
-
-def extract_mentions(
-    corpus: DataFrame,
-    text_col: str = "content",
-    key_cols: Sequence[str] = ("repo", "path", "commit", "content_sha256", "doc_id"),
-    fused: bool = True,
-    prefilter: bool = True,
-    impl: str | None = None,
-) -> DataFrame:
-    """Flagship operator (the reference's POST /extract-address,
-    app/main.py:92-118, as a distributed batch stage).
-
-    Narrow plan: filter blank (P4, app/main.py:97-98) → Hangul prefilter →
-    per-row single-pass fold → posexplode mentions. No shuffle; whole-stage
-    codegen. ``fused=False`` selects the 3-stage composition
-    (tokens→labels→merge) — same results, kept for didactic parity with the
-    reference's staged decode and covered by equivalence tests.
-
-    ``prefilter``: a document with no Hangul syllable cannot contain an
-    address span (every start-lexicon token is Hangul), so one vectorized
-    ``rlike '[가-힣]'`` scan skips the allocation-heavy tokenize/fold for
-    it entirely. At code-corpus scale the overwhelming majority of files
-    are Hangul-free, making extraction throughput ≈ regex-scan throughput.
-
-    ``impl`` (round 6, guide §4.2): ``"arrow"`` (default; override with
-    SPARK_GRAFT_EXTRACT_IMPL=expr) dispatches to the Arrow-batched
-    ``extract_mentions_pandas`` twin — the SQL aggregate fold runs
-    INTERPRETED (higher-order functions have no whole-stage codegen), and
-    the per-token named_struct allocation makes it ~2x slower than the
-    batched Python state machine (measured 1.60s vs 0.83s on the 200k-row
-    synthetic corpus; full KG chain 2.85s → 1.86s). Output equivalence of
-    the two paths is pytest-pinned (tests/test_tagger.py,
-    tests/test_registry_oracles.py)."""
-    import os
-
-    from ..session import ensure_optimizer_confs
-
-    ensure_optimizer_confs(corpus.sparkSession)
-    if impl is None:
-        impl = os.environ.get("SPARK_GRAFT_EXTRACT_IMPL", "arrow")
-    # fused=False explicitly requests the staged SQL composition (didactic /
-    # equivalence tests) — never dispatch it to the Arrow twin
-    if impl == "arrow" and fused:
-        return extract_mentions_pandas(corpus, text_col, key_cols,
-                                       prefilter=prefilter)
-    if fused:
-        spans = fused_spans_expr(text_col)
-    else:
-        spans = merge_spans_expr(
-            labeled_tokens_expr(tokens_with_offsets_expr(text_col))
-        )
-    keys = [c for c in key_cols if c in corpus.columns]
-    if prefilter:
-        corpus = corpus.filter(F.col(text_col).rlike("[가-힣]"))
-    exploded = (
-        corpus
-        .filter(F.length(F.trim(F.col(text_col))) > 0)  # P4 blank guard
-        .select(*keys, F.col(text_col).alias("_text"), F.expr(spans).alias("_spans"))
-        .select(*keys, "_text", F.explode("_spans").alias("_m"))
-    )
-    return exploded.select(
-        *keys,
-        F.expr("substring(_text, _m.m_start + 1, _m.m_end - _m.m_start)").alias(
-            "mention_text"
-        ),
-        F.col("_m.m_start").alias("m_start"),
-        F.col("_m.m_end").alias("m_end"),
-        F.col("_m.confidence").alias("confidence"),
-    )
-
-
-# --------------------------------------------------------------------------
-# Pluggable-tagger path (mapInPandas) — reference-exact twin
-# --------------------------------------------------------------------------
 
 class Tagger(Protocol):
     """Per-batch tagger contract (SURVEY.md §7.5): given texts, return for
@@ -310,51 +61,31 @@ class LexiconRegexTagger:
             yield toks, labels, confs
 
 
-class NeuralTagger:
-    """RoBERTa+BiLSTM+CRF tagger per reference ml_model.py:58-247. Requires
-    torch + transformers (not available in this sandbox); loads weights as an
-    executor-local singleton inside the Python worker (one load per worker,
-    reference's global-instance pattern, ml_model.py:470-471)."""
-
-    def __init__(self, model_path: str):
-        try:
-            import torch  # noqa: F401
-            import transformers  # noqa: F401
-        except ImportError as e:  # pragma: no cover
-            raise NotImplementedError(
-                "NeuralTagger needs torch+transformers; use LexiconRegexTagger "
-                "in this environment"
-            ) from e
-        self.model_path = model_path  # pragma: no cover
-
-    def tag(self, texts):  # pragma: no cover
-        raise NotImplementedError("neural inference not available in sandbox")
-
-
-def extract_mentions_pandas(
+def extract_mentions(
     corpus: DataFrame,
     text_col: str = "content",
     key_cols: Sequence[str] = ("repo", "path", "commit", "content_sha256", "doc_id"),
     tagger_factory=LexiconRegexTagger,
-    prefilter: bool = False,
 ) -> DataFrame:
-    """mapInPandas variant: Arrow-batched, exact imperative port of the
-    reference decode (via the oracle). Used as the pluggable-tagger seam,
-    as a large-scale cross-check of the SQL path, and (round 6) as
-    ``extract_mentions``'s default engine.
+    """Flagship operator (the reference's POST /extract-address,
+    app/main.py:92-118, as a distributed batch stage).
 
-    ``prefilter``: same Hangul pre-scan as ``extract_mentions`` — a
-    no-Hangul document yields no mentions under the lexicon tagger, so it
-    never needs to cross the Python boundary. Off by default here (a
-    plugged neural tagger might not share the lexicon's Hangul-start
-    invariant); the dispatching ``extract_mentions`` turns it on."""
+    Narrow plan: Hangul prefilter → blank guard (P4, app/main.py:97-98) →
+    ``mapInPandas`` over the tagger → ``oracle.merge_spans``.
+
+    The prefilter holds because every start-lexicon token is Hangul: a
+    document with no Hangul syllable cannot contain an address span, so one
+    vectorized ``rlike '[가-힣]'`` scan keeps it from ever crossing the
+    Python boundary. At code-corpus scale most files are Hangul-free."""
     from .. import oracle
+    from ..session import ensure_optimizer_confs
 
+    ensure_optimizer_confs(corpus.sparkSession)
     keys = [c for c in key_cols if c in corpus.columns]
-    if prefilter:
-        corpus = corpus.filter(F.col(text_col).rlike("[가-힣]"))
-    src = corpus.filter(F.length(F.trim(F.col(text_col))) > 0).select(
-        *keys, F.col(text_col).alias("_text")
+    src = (
+        corpus.filter(F.col(text_col).rlike("[가-힣]"))
+        .filter(F.length(F.trim(F.col(text_col))) > 0)
+        .select(*keys, F.col(text_col).alias("_text"))
     )
     fields = ", ".join(f"{f.name} {f.dataType.simpleString()}"
                        for f in src.schema.fields if f.name != "_text")

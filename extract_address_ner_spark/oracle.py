@@ -26,6 +26,7 @@ import re
 from dataclasses import dataclass
 
 from . import CONF_ADDRESS, CONF_OTHER, LABEL_B, LABEL_I, LABEL_O
+from .sources.admin_regions import ADMIN_REGIONS
 
 
 # --------------------------------------------------------------------------
@@ -81,27 +82,21 @@ def bio_tags_from_span(
 # Lexicon/regex tagger (deterministic twin of the distributed tagger)
 # --------------------------------------------------------------------------
 
-# Top-level (si/do) region names that can *start* an address, incl. aliases.
-# The pipeline's runtime set comes from sources.admin_regions; this local copy
-# keeps the oracle dependency-free and is asserted equal in tests.
+# Top-level (si/do) region names that can *start* an address, incl. aliases —
+# derived from the same admin-region table canonicalization joins against,
+# so every name the tagger opens a span on also canonicalizes.
 START_REGIONS = frozenset(
-    {
-        "서울특별시", "서울시",
-        "경기도",
-        "부산광역시", "부산시",
-        "인천광역시", "인천시",
-        "경상북도",
-        "제주특별자치도",
-        "대구광역시", "대전광역시", "광주광역시", "울산광역시",
-        "강원도", "충청북도", "충청남도", "전라북도", "전라남도", "경상남도",
-    }
+    n
+    for _rid, name, _level, parent, aliases in ADMIN_REGIONS
+    if parent is None
+    for n in (name, *aliases)
 )
 
 # A continuation token extends an open address span: an admin-unit suffix
 # (시/군/구/동/읍/면/리/로/길), a road-number token (123번길 / 45번지), a
 # building number (507, 123-45). Derived from the validation patterns,
 # reference: app/utils/preprocess.py:284-288.
-_CONT_RE = re.compile(r"^(?:\S+[시군구동읍면리로길]|\d+(?:-\d+)?(?:번길|번지)?)$")
+CONT_RE = re.compile(r"^(?:\S+[시군구동읍면리로길]|\d+(?:-\d+)?(?:번길|번지)?)$")
 
 
 def is_start_token(tok: str) -> bool:
@@ -109,7 +104,7 @@ def is_start_token(tok: str) -> bool:
 
 
 def is_continuation_token(tok: str) -> bool:
-    return _CONT_RE.match(tok) is not None
+    return CONT_RE.match(tok) is not None
 
 
 def lexicon_bio_tags(tokens: list[tuple[str, int, int]]) -> list[str]:

@@ -49,17 +49,6 @@ def admin_regions_df(spark: SparkSession) -> DataFrame:
     return spark.createDataFrame(ADMIN_REGIONS, schema=SCHEMA)
 
 
-def start_region_names() -> frozenset[str]:
-    """Top-level region names + aliases — the tokens that can open an address
-    span in the lexicon tagger."""
-    out: set[str] = set()
-    for _, name, level, parent, aliases in ADMIN_REGIONS:
-        if parent is None:
-            out.add(name)
-            out.update(aliases)
-    return frozenset(out)
-
-
 def alias_to_canonical() -> dict[str, str]:
     """alias name -> canonical name, for canonicalization (e.g. 서울시 →
     서울특별시)."""

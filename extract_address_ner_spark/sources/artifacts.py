@@ -18,8 +18,6 @@ import json
 import os
 from dataclasses import asdict, dataclass, field
 
-from .admin_regions import start_region_names
-
 
 @dataclass
 class TaggerArtifact:
@@ -31,12 +29,12 @@ class TaggerArtifact:
 
 
 def builtin_artifact(version: str = "builtin") -> TaggerArtifact:
-    from ..operators.tagger import CONT_REGEX
+    from .. import oracle
 
     return TaggerArtifact(
         version=version,
-        start_regions=sorted(start_region_names()),
-        cont_regex=CONT_REGEX,
+        start_regions=sorted(oracle.START_REGIONS),
+        cont_regex=oracle.CONT_RE.pattern,
     )
 
 

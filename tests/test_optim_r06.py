@@ -3,15 +3,13 @@ identical to the path it replaced (the driver's oracles only see sf0.01 —
 these pins cover the switch points and edge cases directly).
 """
 
-import os
+import hashlib
 
 import pytest
 from pyspark.sql import functions as F
 
 from extract_address_ner_spark.operators import dedup
-from extract_address_ner_spark.operators.tagger import extract_mentions
 from extract_address_ner_spark.session import scale_partitions
-from extract_address_ner_spark.sources import corpus as C
 
 
 @pytest.fixture()
@@ -33,19 +31,28 @@ def _rows(df):
     return sorted(tuple(r) for r in df.collect())
 
 
-def test_minhash_arrow_matches_expr_signatures_and_bands(docs, monkeypatch):
-    monkeypatch.setenv("SPARK_GRAFT_MINHASH_IMPL", "expr")
-    sig_expr = _rows(dedup.minhash_signatures(docs))
-    band_expr = _rows(dedup.lsh_band_table(docs))
-    monkeypatch.setenv("SPARK_GRAFT_MINHASH_IMPL", "arrow")
-    sig_arrow = _rows(dedup.minhash_signatures(docs))
-    band_arrow = _rows(dedup.lsh_band_table(docs))
+def test_minhash_arrow_matches_expr_signatures_and_bands(docs):
+    """The Arrow kernel behind _sig_frame is byte-identical to the SQL
+    expression minhash_sig_expr, and the band table bands those exact
+    signatures."""
+    sig_arrow = _rows(dedup._sig_frame(docs, "text", "doc_id"))
+    sig_expr = _rows(dedup.with_shingle_hashes(docs, "text").select(
+        "doc_id", F.expr(dedup.minhash_sig_expr("_hs")).alias("_sig")))
     assert sig_arrow == sig_expr
-    assert band_arrow == band_expr
+    # concat_ws skips NULL elements: an all-NULL band hashes md5('')
+    band_expr = sorted(
+        (doc_id, b, hashlib.md5(",".join(
+            str(v) for v in sig[b * dedup.BAND_SIZE:(b + 1) * dedup.BAND_SIZE]
+            if v is not None).encode()).hexdigest())
+        for doc_id, sig in sig_expr
+        for b in range(dedup.N_HASHES // dedup.BAND_SIZE)
+    )
+    assert _rows(dedup.lsh_band_table(docs)) == band_expr
     # every doc emits 16 rows — the NULL-text doc emits NULL minhashes
     # (ANSI size(NULL) semantics of the expression path, mirrored exactly)
-    assert len(sig_arrow) == 8 * dedup.N_HASHES
-    assert sum(1 for r in sig_arrow if r[2] is None) == dedup.N_HASHES
+    long_rows = _rows(dedup.minhash_signatures(docs))
+    assert len(long_rows) == 8 * dedup.N_HASHES
+    assert sum(1 for r in long_rows if r[2] is None) == dedup.N_HASHES
 
 
 def test_minhash_batch_kernel_edge_cases():
@@ -53,8 +60,6 @@ def test_minhash_batch_kernel_edge_cases():
     assert list(out[0]) == [None] * dedup.N_HASHES
     assert out[1] is not None and len(out[1]) == dedup.N_HASHES
     # 2-word doc hashes the whole normalized text as ONE shingle
-    import hashlib
-
     m = hashlib.md5(b"a b").hexdigest()
     h1 = int(m[:15], 16) % dedup.M31
     assert out[2][0] == h1 % dedup.M31
@@ -89,16 +94,6 @@ def test_dedup_near_fastpath_matches_distributed(spark, docs):
     # rows 2/3/8 form one near-dup cluster (exact 2≡8, near 3) → keeper 2
     ids = {r[0] for r in kept_fast}
     assert 2 in ids and 8 not in ids
-
-
-def test_extract_mentions_arrow_dispatch_matches_expr(spark, sf_smoke):
-    corpus = C.corpus_from_documents(spark, sf_smoke)
-    arrow = _rows(extract_mentions(corpus, impl="arrow"))
-    expr = _rows(extract_mentions(corpus, impl="expr"))
-    assert arrow == expr and len(arrow) > 0
-    # default comes from the env (arrow unless overridden)
-    if os.environ.get("SPARK_GRAFT_EXTRACT_IMPL", "arrow") == "arrow":
-        assert _rows(extract_mentions(corpus)) == arrow
 
 
 def test_punct_translate_equals_regex_count(spark):

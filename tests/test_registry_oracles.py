@@ -1,6 +1,6 @@
 """Oracle replay for the pytest-carried registry entries (VERDICT r04 #1).
 
-The round driver executes at most 50 registry entries; six equivalence-pinned
+The round driver executes at most 50 registry entries; four equivalence-pinned
 variants were folded out of the driver-facing registry to make room for the
 streaming/incremental family. This test replays each demoted entry against
 its DuckDB oracle EXACTLY the way the driver does (column-name-sorted,

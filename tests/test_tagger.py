@@ -1,14 +1,13 @@
-"""SQL-HOF tagger path vs pure-Python oracle — row-for-row equality."""
+"""extract_mentions (Arrow mapInPandas engine) vs the pure-Python oracle —
+row-for-row equality, plus the pluggable-tagger seam and the decode quirks."""
 
 import pandas as pd
 
 from extract_address_ner_spark import oracle
-from extract_address_ner_spark.operators.tagger import (
-    CONT_REGEX,
-    extract_mentions,
-    extract_mentions_pandas,
-)
-from extract_address_ner_spark.sources.admin_regions import start_region_names
+from extract_address_ner_spark.operators.canonicalize import canonicalize_mentions
+from extract_address_ner_spark.operators.tagger import extract_mentions
+from extract_address_ner_spark.operators.validate import road_address_gate
+from extract_address_ner_spark.sources.admin_regions import ADMIN_REGIONS
 
 # Reference sample fixture texts (app/utils/preprocess.py:77-139) + edge cases
 TEXTS = [
@@ -89,23 +88,24 @@ def test_sql_path_equals_oracle(spark):
     assert len(got) > 0
 
 
-def test_fused_equals_staged(spark):
-    """The single-pass fused fold == the 3-stage composition (both against
-    the same fixtures)."""
-    df = _mk_df(spark)
-    fused = spark_mentions(extract_mentions(df, fused=True).collect())
-    staged = spark_mentions(extract_mentions(df, fused=False).collect())
-    assert fused == staged == oracle_mentions(TEXTS)
-
-
-def test_pandas_path_equals_oracle(spark):
-    got = spark_mentions(extract_mentions_pandas(_mk_df(spark)).collect())
-    assert got == oracle_mentions(TEXTS)
-
-
-def test_regex_and_lexicon_in_sync():
-    assert CONT_REGEX == oracle._CONT_RE.pattern
-    assert start_region_names() >= oracle.START_REGIONS
+def test_every_region_name_and_alias_extracts_and_canonicalizes(spark):
+    """One road address per top-level name and alias of ADMIN_REGIONS, incl.
+    the short aliases: the tagger opens a span on it, the road gate keeps it
+    and canonicalization resolves it to the region's id — the tagger's start
+    lexicon and the canonicalization dimension cannot drift apart."""
+    rows, want = [], []
+    for rid, name, _level, parent, aliases in ADMIN_REGIONS:
+        if parent is None:
+            for n in (name, *aliases):
+                want.append((len(rows), rid))
+                rows.append((len(rows), f"본사 {n} 중앙구 상당로 123 입니다"))
+    short_aliases = {"대구시", "대전시", "광주시", "울산시", "충북", "충남",
+                     "전북", "전남", "경북", "경남", "제주도"}
+    assert short_aliases <= {r[1].split(" ")[1] for r in rows}
+    df = spark.createDataFrame(rows, "doc_id long, content string")
+    got = canonicalize_mentions(
+        road_address_gate(extract_mentions(df, key_cols=("doc_id",))))
+    assert sorted((r["doc_id"], r["region_id"]) for r in got.collect()) == want
 
 
 def test_bare_i_quirk():
@@ -139,42 +139,44 @@ def test_bio_inclusion_rule():
 
 
 def test_tagger_seam_contract_with_fake_neural_tagger(spark):
-    """A future NeuralTagger only needs to satisfy Tagger.tag() — canned
+    """A neural tagger only needs to satisfy Tagger.tag() — canned
     (token, label, confidence) sequences (the recorded-fixture surrogate for
-    torch inference) must flow through extract_mentions_pandas unchanged,
+    torch inference) must flow through extract_mentions unchanged,
     including the bare-I and B-B adjacency quirks and the special-token skip
-    of the reference decode (ml_model.py:352-437)."""
+    of the reference decode (ml_model.py:352-437). Every text opens with
+    one Hangul O token so it passes the Hangul prefilter."""
     canned = {
         # plain B-I + trailing O
-        "SEOUL GANGNAM X": (
-            [("SEOUL", 0, 5), ("GANGNAM", 6, 13), ("X", 14, 15)],
-            ["B-ADDRESS", "I-ADDRESS", "O"], [0.9, 0.8, 0.1]),
+        "가 SEOUL GANGNAM X": (
+            [("가", 0, 1), ("SEOUL", 2, 7), ("GANGNAM", 8, 15), ("X", 16, 17)],
+            ["O", "B-ADDRESS", "I-ADDRESS", "O"], [0.1, 0.9, 0.8, 0.1]),
         # B-B adjacency: second B flushes the first → two 1-token spans
-        "A B": ([("A", 0, 1), ("B", 2, 3)],
-                ["B-ADDRESS", "B-ADDRESS"], [0.7, 0.6]),
+        "가 A B": ([("가", 0, 1), ("A", 2, 3), ("B", 4, 5)],
+                  ["O", "B-ADDRESS", "B-ADDRESS"], [0.1, 0.7, 0.6]),
         # bare-I run with no opening B still yields a span (reference quirk)
-        "I alone": ([("I", 0, 1), ("alone", 2, 7)],
-                    ["I-ADDRESS", "I-ADDRESS"], [0.5, 0.5]),
+        "가 I alone": ([("가", 0, 1), ("I", 2, 3), ("alone", 4, 9)],
+                      ["O", "I-ADDRESS", "I-ADDRESS"], [0.1, 0.5, 0.5]),
         # zero-width special token is skipped, span bridges across it
-        "PAD  END": ([("PAD", 0, 3), ("", 4, 4), ("END", 5, 8)],
-                     ["B-ADDRESS", "I-ADDRESS", "I-ADDRESS"], [1.0, 0.0, 0.5]),
+        "가 PAD  END": ([("가", 0, 1), ("PAD", 2, 5), ("", 6, 6), ("END", 7, 10)],
+                       ["O", "B-ADDRESS", "I-ADDRESS", "I-ADDRESS"],
+                       [0.1, 1.0, 0.0, 0.5]),
     }
 
-    class FakeNeuralTagger:
+    class FakeTagger:
         def tag(self, texts):
             for t in texts:
                 yield canned[t]
 
     df = spark.createDataFrame(
         [(i, t) for i, t in enumerate(canned)], "doc_id long, content string")
-    out = extract_mentions_pandas(
-        df, key_cols=("doc_id",), tagger_factory=FakeNeuralTagger)
+    out = extract_mentions(
+        df, key_cols=("doc_id",), tagger_factory=FakeTagger)
     got = {(r["doc_id"], r["mention_text"], r["m_start"], r["m_end"],
             round(r["confidence"], 4)) for r in out.collect()}
     assert got == {
-        (0, "SEOUL GANGNAM", 0, 13, 0.85),
-        (1, "A", 0, 1, 0.7),
-        (1, "B", 2, 3, 0.6),
-        (2, "I alone", 0, 7, 0.5),
-        (3, "PAD  END", 0, 8, 0.75),
+        (0, "SEOUL GANGNAM", 2, 15, 0.85),
+        (1, "A", 2, 3, 0.7),
+        (1, "B", 4, 5, 0.6),
+        (2, "I alone", 2, 9, 0.5),
+        (3, "PAD  END", 2, 10, 0.75),
     }
