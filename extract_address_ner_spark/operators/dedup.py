@@ -51,10 +51,12 @@ issuing many dedup calls have two escape hatches:
 - ``spark.catalog.clearCache()`` between workloads (bench.py does this; it
   also clears caches the caller made, so it is the blunt instrument).
 
-``connected_components`` unpersists every intermediate round itself and
-leaves only its final (already materialized) label table cached — that
-final table is scope-registered too, so a ``dedup_cache_scope`` releases
-it (unpersisting the already-released intermediates is a no-op).
+``connected_components`` checkpoints its pair list once and its label
+table every round (``localCheckpoint`` — lineage truncation, see its
+docstring) and unpersists its persisted edge list and initial labels
+itself. Checkpoint blocks, the final label table's included, are not
+scope-registered: GC and the ContextCleaner release them once the
+returned DataFrame is dereferenced, not a ``dedup_cache_scope`` exit.
 """
 
 from __future__ import annotations
@@ -738,10 +740,15 @@ def connected_components(
     the min of its own label and its neighbors' labels) — converges in
     O(component diameter) rounds; near-dup clusters are small and dense
     (diameter 1-3), so a handful of bounded shuffles, each keyed on the node
-    id. Labels are persisted per round and the previous round is unpersisted
-    (bounded lineage + bounded cache); convergence = no node's label changed
-    this round, detected by an EXISTENCE check (limit(1) short-circuit) on a
-    ``_changed`` flag computed INLINE with the label update
+    id. The pair list is ``localCheckpoint``-ed once at entry, so a lazy
+    generator (MinHash → LSH → verify) runs once however many times the
+    loop reads it; each round's label table is ``localCheckpoint``-ed too,
+    which cuts its lineage (every round's plan references the previous
+    labels twice, so without the cut the plan grows at least 2^rounds and
+    the driver runs out of memory planning and rendering it); convergence
+    = no node's label changed this round, detected by an EXISTENCE check
+    (limit(1) short-circuit) on a ``_changed`` flag computed INLINE with
+    the label update
     (``min_incoming < own`` — round 5: the previous formulation joined the
     new label table back to the old one, a second O(nodes) join per round
     that the flag makes unnecessary at any scale). Round-3
@@ -765,8 +772,11 @@ def connected_components(
     # (threshold+1 rows), an oversized pair list falls back to the
     # distributed loop below at the cost of that one probe action, and the
     # result is pytest-pinned identical between the paths.
+    # One eager checkpoint of the pair list: the probe below and both sides
+    # of the edge union read it, never the generator's plan again.
+    pairs = pairs.select("id_a", "id_b").localCheckpoint()
     if driver_threshold > 0:
-        rows = pairs.select("id_a", "id_b").limit(driver_threshold + 1).collect()
+        rows = pairs.limit(driver_threshold + 1).collect()
         if len(rows) <= driver_threshold:
             remap_rows = _unionfind_remap(rows)
             id_type = docs.schema[id_col].dataType
@@ -784,7 +794,7 @@ def connected_components(
             )
     # Round-4 per-round shuffle diet: edges are pre-partitioned on the
     # message SOURCE key and labels on the node key, both with the session
-    # shuffle-partition count, and both CACHED — a cached DataFrame
+    # shuffle-partition count, and both CACHED or CHECKPOINTED — either
     # preserves its outputPartitioning, so every round's edge⋈label join
     # and the label⋈min-message merge plan with ZERO new exchange
     # (pinned by tests/test_plans.py). The only per-round shuffle left is
@@ -809,9 +819,9 @@ def connected_components(
         # union+groupBy(min) formulation, but labels stay put. _changed is
         # computed inline (min incoming strictly improves the label), so
         # convergence needs NO second O(nodes) join — just an existence
-        # scan of this round's cached labels. Next round's joins project
-        # the flag away for free.
-        new_labels = _persist(
+        # scan of this round's checkpointed labels. Next round's joins
+        # project the flag away for free.
+        new_labels = (
             labels.join(min_msgs, "_id", "left").select(
                 "_id",
                 F.least(
@@ -821,8 +831,11 @@ def connected_components(
                     F.col("_m") < F.col("_lab"), F.lit(False)
                 ).alias("_changed"),
             )
+            .localCheckpoint()
         )
         changed = new_labels.filter("_changed").limit(1).count()
+        # releases round 0's persisted table; checkpoints are reclaimed by
+        # GC + the ContextCleaner once dereferenced (a no-op for them)
         labels.unpersist()
         labels = new_labels
         if changed == 0:
@@ -862,8 +875,9 @@ def connected_components_star(
     this algorithm — the edge expression references the previous round's
     ~5 times, so without truncation Catalyst re-analyzes a plan tree that
     grows ~5^rounds and the driver, not the cluster, becomes the
-    bottleneck. (The propagation variant gets away with persist() because
-    its per-round fan-out is 2 and its round count small.) Checkpoint
+    bottleneck. (The propagation variant checkpoints its labels every
+    round for the same reason: its fan-out is only 2, but with persist()
+    an 8-round chain already exhausted a 4g driver heap.) Checkpoint
     blocks are executor-local storage, dereferenced each round and
     reclaimed by the ContextCleaner; on a real cluster with flaky
     executors you'd point this at reliable checkpoint storage instead.

@@ -88,6 +88,22 @@ def scale_partitions(df, min_parts: int | None = None):
     return df
 
 
+def _default_driver_mem() -> str:
+    """``spark.driver.memory`` when SPARK_GRAFT_DRIVER_MEM is unset: 48g,
+    capped at half the machine's RAM. A heap larger than RAM turns a Java
+    OutOfMemoryError (one failed action) into a kernel OOM-kill of the JVM
+    (every later action in the session fails)."""
+    try:
+        with open("/proc/meminfo") as f:
+            for line in f:
+                if line.startswith("MemTotal:"):
+                    half_mb = int(line.split()[1]) // 2048  # kB → MiB, ½
+                    return f"{min(48 << 10, half_mb)}m"
+    except OSError:
+        pass
+    return "48g"
+
+
 def get_spark(
     app_name: str = "kg-construct",
     master: str | None = None,
@@ -145,7 +161,8 @@ def get_spark(
         # local mode: driver JVM hosts all executor threads — size the heap
         # for the thread count (8g across 32 threads was GC-starved and
         # produced INVERTED core scaling on allocation-heavy stages)
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"))
+        .config("spark.driver.memory",
+                os.environ.get("SPARK_GRAFT_DRIVER_MEM") or _default_driver_mem())
         .config("spark.executorEnv.PYTHONPATH", py_path)
         .config("spark.ui.enabled", "false")
     )

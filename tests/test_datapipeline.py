@@ -329,7 +329,7 @@ def test_connected_components_semantics(spark):
     assert got == {1: 1, 2: 2, 3: 2, 5: 2, 7: 7, 9: 7, 11: 7}
 
 
-def test_connected_components_string_ids(spark):
+def test_connected_components_string_chain_multi_round(spark):
     """Round-3 (ADVICE r02): convergence must not assume numeric ids — the
     old sum-of-labels checksum returned NULL on strings and exited after one
     propagation round, silently under-merging. A 3-hop string chain needs
@@ -342,6 +342,55 @@ def test_connected_components_string_ids(spark):
     got = {r["doc_id"]: r["component_id"]
            for r in dedup.connected_components(docs, pairs).collect()}
     assert got == {"a": "a", "b": "a", "c": "a", "d": "a", "z": "z"}
+
+
+def test_connected_components_reads_pair_list_once(spark):
+    """A lazy pair list (dedup_near's is MinHash → LSH → verify) is
+    computed exactly once per connected_components call, on the driver
+    union-find path and on the distributed loop alike: the driver_threshold
+    probe and both sides of the edge union read one checkpoint. Counted by
+    an accumulator bumped once per evaluated pair row."""
+    evaluated = spark.sparkContext.accumulator(0)
+
+    def tick(x):
+        evaluated.add(1)
+        return x
+
+    docs = spark.createDataFrame([(i,) for i in range(12)], "doc_id long")
+    raw = spark.createDataFrame(
+        [(1, 2), (2, 3), (5, 6), (9, 10), (10, 11), (9, 11)],
+        "id_a long, id_b long")
+    pairs = raw.select(F.udf(tick, "long")("id_a").alias("id_a"), "id_b")
+    want = {0: 0, 1: 1, 2: 1, 3: 1, 4: 4, 5: 5, 6: 5, 7: 7, 8: 8,
+            9: 9, 10: 9, 11: 9}
+    for driver_threshold in (100, 3):  # driver union-find, then the loop
+        evaluated.value = 0
+        comp = dedup.connected_components(
+            docs, pairs, driver_threshold=driver_threshold)
+        got = {r["doc_id"]: r["component_id"] for r in comp.collect()}
+        assert got == want, driver_threshold
+        assert evaluated.value == raw.count(), driver_threshold
+
+
+def test_connected_components_plan_stays_bounded(spark):
+    """Min-label propagation on a string-id chain of n nodes runs n rounds,
+    and every round's label table is built from the previous one twice. The
+    per-round checkpoint cuts that lineage, so the returned plan is the
+    same few lines whatever the round count; without the cut it grows
+    exponentially (over 1 MB of plan text after 4 rounds) and planning the
+    next rounds exhausts the driver heap. The short chain runs first so a
+    regression fails on the bound before the long chain is attempted."""
+    for n in (4, 12):
+        ids = [f"n{i:02d}" for i in range(n)]
+        docs = spark.createDataFrame([(x,) for x in ids + ["zz"]],
+                                     "doc_id string")
+        pairs = spark.createDataFrame(list(zip(ids, ids[1:])),
+                                      "id_a string, id_b string")
+        out = dedup.connected_components(docs, pairs)
+        plan = out._jdf.queryExecution().optimizedPlan().toString()
+        assert len(plan) < 2000, (n, len(plan))
+        got = {r["doc_id"]: r["component_id"] for r in out.collect()}
+        assert got == {**{x: "n00" for x in ids}, "zz": "zz"}, n
 
 
 def _cached_rdd_ids(sc) -> set:
@@ -389,9 +438,10 @@ def test_dedup_cache_scope_releases_blocks(spark, sf_smoke):
                 docs, prefilter_candidates=True).count() >= 0
     # no NEW persisted RDDs with live blocks remain
     assert _no_new_residual(sc, baseline) == set()
-    # connected_components' FINAL label table is scope-registered too —
-    # the full dedup_near chain inside a scope leaves nothing cached
-    # (its per-round localCheckpoints are GC-cleaned, hence the retry)
+    # the full dedup_near chain inside a scope leaves nothing cached:
+    # connected_components' persists are scope-registered, and its
+    # checkpoints (pair list, every round's labels) are GC-cleaned,
+    # hence the retry
     with dedup.dedup_cache_scope():
         assert dedup.dedup_near(docs).count() >= 0
     assert _no_new_residual(sc, baseline) == set()

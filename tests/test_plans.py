@@ -213,8 +213,9 @@ def test_asof_join_is_single_shuffle_no_join(spark, sf_smoke):
 
 def test_components_round_shuffles_messages_not_labels(spark):
     """Round-4 shuffle diet for connected_components: with edges cached
-    partitioned on the message source and labels cached partitioned on the
-    node id, ONE propagation round must plan exactly ONE new exchange —
+    partitioned on the message source and labels checkpointed partitioned
+    on the node id (a localCheckpoint keeps its outputPartitioning), ONE
+    propagation round must plan exactly ONE new exchange —
     the message aggregation (∝ edges) — and must never re-shuffle the
     O(nodes) label table (the old union+groupBy formulation did, every
     round). AQE/broadcast are disabled in-test to force the at-scale
@@ -233,8 +234,8 @@ def test_components_round_shuffles_messages_not_labels(spark):
                  .repartition(F.col("_u")).persist())
         labels = (spark.range(200)
                   .select(F.col("id").alias("_id"), F.col("id").alias("_lab"))
-                  .repartition(F.col("_id")).persist())
-        edges.count(); labels.count()
+                  .repartition(F.col("_id")).localCheckpoint())
+        edges.count()
         msgs = edges.join(labels, edges["_u"] == labels["_id"]).select(
             F.col("_v").alias("_id"), "_lab")
         mm = msgs.groupBy("_id").agg(F.min("_lab").alias("_m"))
@@ -243,8 +244,9 @@ def test_components_round_shuffles_messages_not_labels(spark):
                            F.coalesce(F.col("_m"), F.col("_lab"))).alias("_lab"))
 
         def count_ex(p):
-            if "InMemoryTableScan" in p.nodeName():
-                return 0  # the cache boundary: its child plan is history
+            if any(b in p.nodeName()
+                   for b in ("InMemoryTableScan", "ExistingRDD")):
+                return 0  # cache/checkpoint boundary: its input is history
             c = 1 if "Exchange" in p.nodeName() else 0
             ch = p.children()
             return c + sum(count_ex(ch.apply(i)) for i in range(ch.size()))
@@ -254,7 +256,7 @@ def test_components_round_shuffles_messages_not_labels(spark):
     finally:
         conf.set("spark.sql.adaptive.enabled", old_aqe)
         conf.set("spark.sql.autoBroadcastJoinThreshold", old_bc)
-        edges.unpersist(); labels.unpersist()
+        edges.unpersist()
 
 
 def test_integrity_report_anti_join_budget(spark):
