@@ -5,8 +5,8 @@ capabilities of the reference repo ``hyeonhobyun/extract-address-ner``
 (Korean-address NER service): distributed triple extraction (BIO tagging +
 span merge), address canonicalization against a broadcast admin-region
 hierarchy, fuzzy variant matching (MinHash-LSH), skew-aware entity linking,
-and graph materialization with per-partition lineage and checkpoint-resumable
-stages.
+and graph materialization with per-stage lineage from the write's Observation
+and checkpoint-resumable stages.
 
 Reference semantics are cited per-module as ``reference: <file>:<lines>``
 into the read-only snapshot at /root/reference/.

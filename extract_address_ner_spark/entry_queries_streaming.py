@@ -33,11 +33,12 @@ from __future__ import annotations
 import shutil
 import tempfile
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from .entry_queries import DUCK_SHA, register
 from .entry_queries_data import DUP_DOCS_DUCK, dup_documents
+from .session import stage
 from .sources import corpus as C
 from .streaming import stream as S
 
@@ -300,6 +301,11 @@ EDGE_SNAPSHOT_BUCKETS = 16
 
 _MANIFEST = "manifest.json"
 
+#: the schema of every snapshot bucket file. The merge writes exactly these
+#: columns (``confidence`` cast to double), so reads take it as given
+#: instead of running a schema-inference job over the files.
+EDGE_SCHEMA = "subj string, pred string, obj string, confidence double"
+
 
 def _edge_bucket(n_buckets: int):
     """Deterministic bucket of an edge row — pmod(xxhash64(subj), n). Keyed
@@ -329,6 +335,7 @@ def _read_manifest(edges_root: str, version: int) -> dict:
         return json.load(f)
 
 
+@stage("refresh.merge")
 def merge_edge_snapshot(delta: DataFrame, edges_root: str,
                         batch_id: int,
                         n_buckets: int = EDGE_SNAPSHOT_BUCKETS) -> None:
@@ -362,7 +369,8 @@ def merge_edge_snapshot(delta: DataFrame, edges_root: str,
       simply re-staged on replay).
 
     Old versions accumulate until ``expire_snapshots`` prunes them to a
-    retention window (manifest-liveness aware)."""
+    retention window (manifest-liveness aware). The merge's jobs run under
+    the ``refresh.merge`` stage label (``session.stage``)."""
     import json
     import os
     import shutil
@@ -373,18 +381,21 @@ def merge_edge_snapshot(delta: DataFrame, edges_root: str,
     if prev_manifest is not None:
         n_buckets = prev_manifest["n_buckets"]  # layout is chain-wide
 
-    # EAGER lineage truncation (round-5 code review): the delta plan —
-    # typically the whole extract→canonicalize→link chain over the
-    # micro-batch — is consumed TWICE below (touched-bucket collect, then
-    # the staged write); unpersisted it would run end-to-end twice per
-    # batch. The delta is micro-batch-sized, so checkpointing it is cheap.
-    delta = delta.select(*MERGE_KEYS, "confidence").withColumn(
-        "bucket", _edge_bucket(n_buckets)
-    ).localCheckpoint()
-    # touched-bucket set: ≤ n_buckets scalars to the driver, never row data
-    touched = sorted(
-        r["bucket"] for r in delta.select("bucket").distinct().collect()
+    # EAGER checkpoint of the delta (micro-batch-sized, so cheap): the write
+    # below can only be planned once the touched buckets are known, so the
+    # delta plan — typically the whole extract→canonicalize→link chain —
+    # runs once here and the write reads the checkpoint. The touched-bucket
+    # set (≤ n_buckets scalars, never row data) is observed by that same
+    # job: the observe sits in its result stage, so it costs no job of its
+    # own.
+    obs = Observation()
+    delta = (
+        delta.select(*MERGE_KEYS, "confidence")
+        .withColumn("bucket", _edge_bucket(n_buckets))
+        .observe(obs, F.collect_set("bucket").alias("touched"))
+        .localCheckpoint()
     )
+    touched = sorted(obs.get["touched"])
     prev_pointers: dict[str, str] = (
         dict(prev_manifest["buckets"]) if prev_manifest else {}
     )
@@ -395,13 +406,13 @@ def merge_edge_snapshot(delta: DataFrame, edges_root: str,
     ]
     merged = delta
     if prev_paths:
-        prev_df = spark.read.parquet(*prev_paths).select(
-            *MERGE_KEYS, "confidence"
+        prev_df = spark.read.schema(EDGE_SCHEMA).parquet(
+            *prev_paths
         ).withColumn("bucket", _edge_bucket(n_buckets))
         merged = merged.unionByName(prev_df)
     merged = (
         merged.groupBy("bucket", *MERGE_KEYS)
-        .agg(F.max("confidence").alias("confidence"))
+        .agg(F.max("confidence").cast("double").alias("confidence"))
     )
 
     staged = f"{edges_root}/v{batch_id}.tmp"
@@ -709,7 +720,7 @@ def read_edge_snapshot(
     if not pointers:
         return None
     paths = [f"{edges_root}/{rel}" for rel in pointers.values()]
-    return spark.read.parquet(*paths).select(*MERGE_KEYS, "confidence")
+    return spark.read.schema(EDGE_SCHEMA).parquet(*paths)
 
 
 def _latest_edge_snapshot(spark: SparkSession, edges_root: str):

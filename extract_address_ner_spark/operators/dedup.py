@@ -757,7 +757,9 @@ def connected_components(
     raises under ANSI) and None == None exited after one round,
     under-merging; huge numeric ids could also overflow the ANSI sum. The
     flag comparison works for any orderable id type. ``max_iter`` bounds
-    pathological chain-shaped graphs — for those (long drift series where
+    pathological chain-shaped graphs: if the last allowed round still
+    changed a label, this raises ``RuntimeError`` rather than return a
+    partial labelling. For those graphs (long drift series where
     each doc is near-dup only of its neighbor) use
     ``connected_components_star``, the large-star/small-star variant that
     converges in ~log₂(chain) rounds; near-dup graphs are usually dense
@@ -840,6 +842,13 @@ def connected_components(
         labels = new_labels
         if changed == 0:
             break
+    else:
+        edges.unpersist()
+        raise RuntimeError(
+            f"connected_components: labels still changing after "
+            f"max_iter={max_iter} rounds; raise max_iter or use "
+            f"connected_components_star"
+        )
     edges.unpersist()
     out = labels.select(
         F.col("_id").alias(id_col), F.col("_lab").alias("component_id")
@@ -883,7 +892,8 @@ def connected_components_star(
     executors you'd point this at reliable checkpoint storage instead.
     Convergence = the edge set reached a fixed point (stars), checked by
     two left-anti existence probes over the two checkpointed sets that
-    short-circuit at the first differing edge. ``stats``, if given,
+    short-circuit at the first differing edge; if round ``max_iter`` still
+    changed the edge set, this raises ``RuntimeError``. ``stats``, if given,
     receives ``{"rounds": n_rounds_run}`` so callers/tests can assert the
     round bound."""
     e = (
@@ -948,6 +958,11 @@ def connected_components_star(
         e = new_e
         if changed == 0:
             break
+    else:
+        raise RuntimeError(
+            f"connected_components_star: edge set still changing after "
+            f"max_iter={max_iter} rounds; raise max_iter"
+        )
     if stats is not None:
         stats["rounds"] = rounds
     # at the fixed point every edge is (node, component_min); centers and

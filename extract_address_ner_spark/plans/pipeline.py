@@ -8,18 +8,24 @@ artifact, so a resumed run is bit-identical to a clean one (idempotency test
 in tests/test_pipeline.py).
 
 Lineage (generalizing the reference's model_versions metrics table,
-db_service.py:55-62): per stage, per output partition —
-``lineage(run_id, stage, partition_id, rows, sha_crc_sum, wall_ms)``.
-``sha_crc_sum`` is an order-independent integrity aggregate
-(sum of crc32(content_sha256) over rows) used for the end-to-end sha256
-invariant: the per-document aggregate at the sink must equal the one at the
-scan (input_hint). ``wall_ms`` is measured on the DRIVER around the stage
-action — never wall-clock inside a task (FIXTURES.md determinism rule).
+db_service.py:55-62): per-stage lineage from the write's Observation —
+``lineage(run_id, stage, rows, sha_crc_sum, wall_ms, partitions)``, one row
+per stage. ``rows`` and ``sha_crc_sum`` are observed metrics of the write
+job itself (``DataFrame.observe``), so lineage costs no Spark job of its
+own: the row is written on the driver with pyarrow. ``sha_crc_sum`` is an
+order-independent integrity aggregate (sum of crc32(content_sha256) over
+rows) used for the end-to-end sha256 invariant: the per-document aggregate
+at the sink must equal the one at the scan (input_hint). ``wall_ms`` is
+measured on the DRIVER around the stage action — never wall-clock inside a
+task (FIXTURES.md determinism rule). ``partitions`` counts the part files
+the write left in the stage directory (a driver listing).
 
 Scale notes: stage outputs are parquet (columnar, predicate-pushdown-able);
 lineage is a tiny side table; the resume check is a filesystem probe, not a
-data read. At cluster scale the warehouse dir is object storage and
-``_SUCCESS`` semantics carry over unchanged (this is exactly Iceberg-style
+data read. Each stage runs under ``session.stage(<name>)``, so its jobs
+carry the stage name in the event log and the UI. At cluster scale the
+warehouse dir is object storage and ``_SUCCESS`` semantics carry over
+unchanged (this is exactly Iceberg-style
 snapshot commit semantics with a parquet-dir backend; an Iceberg catalog can
 be swapped in via spark.jars.packages without changing stage logic —
 SURVEY.md §7.3; no network in this sandbox, so the parquet warehouse is the
@@ -29,21 +35,30 @@ default).
 from __future__ import annotations
 
 import os
+import shutil
 import time
 from collections.abc import Callable
 
-from pyspark.sql import DataFrame, SparkSession
+import pyarrow as pa
+import pyarrow.parquet as pq
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.canonicalize import canonicalize_mentions
 from ..operators.link import build_edges, build_nodes
 from ..operators.tagger import extract_mentions
 from ..operators.validate import road_address_gate
+from ..session import stage as stage_label
 
 LINEAGE_SCHEMA = (
-    "run_id string, stage string, partition_id int, rows long, "
-    "sha_crc_sum long, wall_ms long"
+    "run_id string, stage string, rows long, sha_crc_sum long, "
+    "wall_ms long, partitions long"
 )
+_LINEAGE_ARROW = pa.schema([
+    ("run_id", pa.string()), ("stage", pa.string()), ("rows", pa.int64()),
+    ("sha_crc_sum", pa.int64()), ("wall_ms", pa.int64()),
+    ("partitions", pa.int64()),
+])
 
 
 def _success_path(stage_dir: str) -> str:
@@ -83,41 +98,49 @@ class StagedPipeline:
         return self.spark.read.parquet(self.stage_dir(stage))
 
     def _write_stage(self, stage: str, df: DataFrame) -> DataFrame:
-        """Write stage output + per-partition lineage; return the re-read
-        artifact (downstream consumes the durable copy)."""
+        """Write stage output + its lineage row; return the re-read artifact
+        (downstream consumes the durable copy). One Spark job: the write.
+        Rows and the sha aggregate are observed in the write's result stage
+        (no exchange above the ``observe``), and the read-back takes the
+        written schema instead of inferring it."""
         t0 = time.monotonic()
         out = self.stage_dir(stage)
-        df.write.mode("overwrite").parquet(out)
-        wall_ms = int((time.monotonic() - t0) * 1000)
-        written = self.spark.read.parquet(out)
+        obs = Observation()
         sha = (
             F.sum(F.crc32(F.col(self.sha_col))).cast("long")
-            if self.sha_col in written.columns
+            if self.sha_col in df.columns
             else F.lit(None).cast("long")
         )
-        lineage = (
-            written.groupBy(F.spark_partition_id().alias("partition_id"))
-            .agg(
-                F.count(F.lit(1)).cast("long").alias("rows"),
-                sha.alias("sha_crc_sum"),
-            )
-            .select(
-                F.lit(self.run_id).alias("run_id"),
-                F.lit(stage).alias("stage"),
-                "partition_id",
-                "rows",
-                "sha_crc_sum",
-                F.lit(wall_ms).cast("long").alias("wall_ms"),
-            )
+        df.observe(
+            obs, F.count(F.lit(1)).alias("rows"), sha.alias("sha_crc_sum")
+        ).write.mode("overwrite").parquet(out)
+        wall_ms = int((time.monotonic() - t0) * 1000)
+        metrics = obs.get
+        lineage_dir = self._lineage_dir(stage)
+        shutil.rmtree(lineage_dir, ignore_errors=True)
+        os.makedirs(lineage_dir)
+        row = {
+            "run_id": self.run_id,
+            "stage": stage,
+            "rows": metrics["rows"],
+            "sha_crc_sum": metrics["sha_crc_sum"],
+            "wall_ms": wall_ms,
+            "partitions": sum(
+                1 for fn in os.listdir(out) if fn.startswith("part-")
+            ),
+        }
+        pq.write_table(
+            pa.Table.from_pylist([row], schema=_LINEAGE_ARROW),
+            os.path.join(lineage_dir, "part-00000.parquet"),
         )
-        lineage.write.mode("overwrite").parquet(self._lineage_dir(stage))
         self.ran_stages.append(stage)
-        return written
+        return self.spark.read.schema(df.schema).parquet(out)
 
     def _stage(self, stage: str, compute: Callable[[], DataFrame]) -> DataFrame:
-        if self.is_done(stage):
-            return self.read_stage(stage)
-        return self._write_stage(stage, compute())
+        with stage_label(stage):
+            if self.is_done(stage):
+                return self.read_stage(stage)
+            return self._write_stage(stage, compute())
 
     # -- the plan ----------------------------------------------------------
 
@@ -148,18 +171,10 @@ class StagedPipeline:
     def info(self) -> DataFrame:
         """Pipeline/run summary from the lineage table — the analogue of the
         reference's GET /model-info (app/main.py:182-189): per stage, latest
-        run id, rows, partitions, wall time."""
-        lin = self.lineage()
-        return (
-            lin.groupBy("stage")
-            .agg(
-                F.max("run_id").alias("run_id"),
-                F.sum("rows").alias("rows"),
-                F.count(F.lit(1)).cast("long").alias("partitions"),
-                F.max("wall_ms").alias("wall_ms"),
-            )
-            .orderBy("stage")
-        )
+        run id, rows, partitions (part files written), wall time."""
+        return self.lineage().select(
+            "stage", "run_id", "rows", "partitions", "wall_ms"
+        ).orderBy("stage")
 
     # -- invariants --------------------------------------------------------
 

@@ -23,6 +23,8 @@ Scale notes (designed for 1000-executor / 100 TB, tested on local[32]):
 from __future__ import annotations
 
 import os
+from collections.abc import Iterator
+from contextlib import contextmanager
 
 from pyspark.sql import SparkSession
 
@@ -35,6 +37,31 @@ from pyspark.sql import SparkSession
 EXCLUDED_OPTIMIZER_RULES = (
     "org.apache.spark.sql.catalyst.optimizer.InferFiltersFromGenerate"
 )
+
+
+#: Spark local property naming the program stage a job belongs to; it
+#: reaches every job's and stage's ``Properties`` in the event log and every
+#: task's ``TaskContext.getLocalProperty``.
+STAGE_PROPERTY = "kg.stage"
+_JOB_DESCRIPTION = "spark.job.description"
+
+
+@contextmanager
+def stage(name: str) -> Iterator[None]:
+    """Label every Spark job started inside the block with ``name``: the
+    ``kg.stage`` local property and the job description (the UI's job
+    name). The previous values come back on exit, so labels nest. The job
+    group (``spark.jobGroup.id``) is never touched: a caller's own grouping
+    of jobs survives."""
+    sc = SparkSession.active().sparkContext
+    prev = {k: sc.getLocalProperty(k) for k in (STAGE_PROPERTY, _JOB_DESCRIPTION)}
+    sc.setLocalProperty(STAGE_PROPERTY, name)
+    sc.setLocalProperty(_JOB_DESCRIPTION, name)
+    try:
+        yield
+    finally:
+        for k, v in prev.items():
+            sc.setLocalProperty(k, v)
 
 
 def ensure_optimizer_confs(spark: SparkSession) -> None:

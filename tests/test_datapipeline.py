@@ -1,5 +1,6 @@
 """Dedup / ANN / text-analysis operator properties."""
 
+import pytest
 from pyspark.sql import functions as F
 
 from extract_address_ner_spark.entry_queries_data import (
@@ -370,6 +371,24 @@ def test_connected_components_reads_pair_list_once(spark):
         got = {r["doc_id"]: r["component_id"] for r in comp.collect()}
         assert got == want, driver_threshold
         assert evaluated.value == raw.count(), driver_threshold
+
+
+def test_components_raise_when_the_round_cap_is_hit(spark):
+    """A 40-node chain needs 39 propagation rounds. At the default cap of
+    25 the loop must raise instead of returning a partial labelling (it
+    used to return 15 components); with room to converge it finds one.
+    The star variant raises the same way when its cap is hit."""
+    n = 40
+    docs = spark.createDataFrame([(i,) for i in range(n)], "doc_id long")
+    pairs = spark.createDataFrame(
+        [(i, i + 1) for i in range(n - 1)], "id_a long, id_b long")
+    with pytest.raises(RuntimeError, match="max_iter=25"):
+        dedup.connected_components(docs, pairs)
+    got = dedup.connected_components(docs, pairs, max_iter=64).collect()
+    assert {r["component_id"] for r in got} == {0}
+    assert len(got) == n
+    with pytest.raises(RuntimeError, match="max_iter=1"):
+        dedup.connected_components_star(docs, pairs, max_iter=1)
 
 
 def test_connected_components_plan_stays_bounded(spark):

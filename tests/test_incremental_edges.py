@@ -207,6 +207,26 @@ def test_empty_delta_merge_is_pointer_only(spark, sf_smoke, tmp_path):
     assert _edge_rows(ES.read_edge_snapshot(spark, root)) == want
 
 
+def test_snapshot_read_runs_no_job(spark, sf_smoke, tmp_path, jobs_run_by):
+    """Snapshot files hold exactly EDGE_SCHEMA (the merge casts confidence
+    to double), so reading a snapshot takes that schema as given: building
+    the read launches no schema-inference job."""
+    corpus = C.corpus_from_documents(spark, sf_smoke)
+    full = build_edges(
+        canonicalize_mentions(road_address_gate(extract_mentions(corpus)))
+    )
+    root = str(tmp_path / "w")
+    ES.merge_edge_snapshot(full, root, 0)
+    snap, n_jobs = jobs_run_by(lambda: ES.read_edge_snapshot(spark, root))
+    assert n_jobs == 0
+    paths = [f"{root}/{rel}" for rel in ES._read_manifest(root, 0)["buckets"].values()]
+    on_disk = spark.read.parquet(*paths).schema
+    assert [(f.name, f.dataType) for f in on_disk] == [
+        (f.name, f.dataType) for f in snap.schema
+    ]
+    assert _edge_rows(snap) == _edge_rows(full)
+
+
 def test_replay_never_reads_its_own_version(spark, sf_smoke, tmp_path):
     """ADVICE r04: replay of batch N merges against the latest version
     STRICTLY BELOW N — even if v<N> exists with corrupt/partial content,

@@ -3,9 +3,12 @@
 import shutil
 
 import pytest
+from pyspark import TaskContext
+from pyspark.sql import functions as F
 
 from extract_address_ner_spark.plans.evaluate import span_prf
 from extract_address_ner_spark.plans.pipeline import StagedPipeline
+from extract_address_ner_spark.session import STAGE_PROPERTY
 from extract_address_ner_spark.sources import corpus as C
 
 
@@ -75,6 +78,80 @@ def test_pipeline_info(spark, warehouse, sf_smoke):
         assert r["run_id"] == "r1"
         assert r["rows"] == p.read_stage(stage).count()
         assert r["partitions"] >= 1 and r["wall_ms"] >= 0
+
+
+def _sha_frame(spark, n):
+    return spark.range(n).withColumn(
+        "content_sha256", F.sha2(F.col("id").cast("string"), 256))
+
+
+def test_write_stage_is_one_job(spark, warehouse, jobs_run_by):
+    """A stage write is ONE Spark job: rows and the sha aggregate arrive
+    with the write (an Observation), the lineage row is written on the
+    driver, and the returned read-back frame takes the written schema, so
+    building it runs no schema-inference job."""
+    p = StagedPipeline(spark, warehouse, run_id="r1")
+    df = _sha_frame(spark, 1000)
+    written, n_jobs = jobs_run_by(lambda: p._write_stage("corpus", df))
+    assert n_jobs == 1
+    assert written.schema == spark.read.parquet(p.stage_dir("corpus")).schema
+    assert written.count() == 1000
+
+
+def test_lineage_reconciles_with_stages(spark, warehouse, sf_smoke):
+    """One lineage row per stage; its rows equal the re-read stage's count,
+    and on the sha-carrying stages its sha_crc_sum equals the aggregate
+    recomputed over the re-read stage."""
+    p = StagedPipeline(spark, warehouse, run_id="r1")
+    p.run(lambda: C.corpus_from_documents(spark, sf_smoke))
+    lin = {}
+    for r in p.lineage().collect():
+        assert r["stage"] not in lin, r["stage"]
+        lin[r["stage"]] = r
+    assert set(lin) == set(StagedPipeline.STAGES)
+    for stage, r in lin.items():
+        assert r["rows"] == p.read_stage(stage).count(), stage
+    for stage in ("corpus", "mentions"):
+        want = p.read_stage(stage).agg(
+            F.sum(F.crc32("content_sha256")).cast("long")
+        ).collect()[0][0]
+        assert lin[stage]["sha_crc_sum"] == want, stage
+
+
+def test_empty_stage_records_a_lineage_row(spark, warehouse):
+    """An empty stage still gets its lineage row (rows = 0), so info()
+    keeps the stage."""
+    p = StagedPipeline(spark, warehouse, run_id="r1")
+    p._write_stage("edges", _sha_frame(spark, 10).filter("id < 0"))
+    lin = p.lineage().collect()
+    assert [(r["stage"], r["rows"]) for r in lin] == [("edges", 0)]
+    info = p.info().collect()
+    assert [(r["stage"], r["rows"]) for r in info] == [("edges", 0)]
+    assert info[0]["partitions"] >= 1
+
+
+def test_stages_run_under_their_label(spark, warehouse, sf_smoke):
+    """Each stage's jobs carry its name as the ``kg.stage`` local property:
+    a task of the corpus stage sees "corpus". The label is gone after
+    run(), and a caller's job group is left as it was."""
+
+    @F.udf("string")
+    def task_stage():
+        return TaskContext.get().getLocalProperty(STAGE_PROPERTY)
+
+    sc = spark.sparkContext
+    p = StagedPipeline(spark, warehouse, run_id="r1")
+    sc.setJobGroup("caller-group", "caller")
+    try:
+        out = p.run(lambda: C.corpus_from_documents(spark, sf_smoke)
+                    .withColumn("task_stage", task_stage()))
+        assert sc.getLocalProperty("spark.jobGroup.id") == "caller-group"
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    labels = {r[0] for r in out["corpus"].select("task_stage").distinct().collect()}
+    assert labels == {"corpus"}
+    assert sc.getLocalProperty(STAGE_PROPERTY) is None
 
 
 def test_sha_row_level_invariant(spark, warehouse, sf_smoke):
