@@ -80,7 +80,7 @@ def oracle_sql() -> dict[str, str]:
 
 def all_queries() -> dict[str, QueryFn]:
     """Driver-facing + pytest-only queries — the full operator surface, for
-    bench.py / scripts/driver_check.py / tests."""
+    scripts/driver_check.py and tests."""
     return {k: v[0] for k, v in {**_driver_ordered(), **_PYTEST_REGISTRY}.items()}
 
 

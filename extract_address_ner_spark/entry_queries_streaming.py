@@ -337,8 +337,7 @@ def _read_manifest(edges_root: str, version: int) -> dict:
 
 @stage("refresh.merge")
 def merge_edge_snapshot(delta: DataFrame, edges_root: str,
-                        batch_id: int,
-                        n_buckets: int = EDGE_SNAPSHOT_BUCKETS) -> None:
+                        batch_id: int) -> None:
     """One INCREMENTAL KG merge step (the foreachBatch body of
     ``q_streaming_edges``, exposed for pytest): merge the micro-batch's edge
     delta into the snapshot chain under ``edges_root`` as version
@@ -378,8 +377,10 @@ def merge_edge_snapshot(delta: DataFrame, edges_root: str,
     spark = delta.sparkSession
     prior = [v for v in _version_dirs(edges_root) if v < batch_id]
     prev_manifest = _read_manifest(edges_root, prior[-1]) if prior else None
-    if prev_manifest is not None:
-        n_buckets = prev_manifest["n_buckets"]  # layout is chain-wide
+    # the layout is chain-wide: a new chain takes the default, an existing
+    # one keeps the bucket count its first version was written with
+    n_buckets = (prev_manifest["n_buckets"] if prev_manifest is not None
+                 else EDGE_SNAPSHOT_BUCKETS)
 
     # EAGER checkpoint of the delta (micro-batch-sized, so cheap): the write
     # below can only be planned once the touched buckets are known, so the

@@ -48,8 +48,8 @@ issuing many dedup calls have two escape hatches:
           pairs = lsh_verified_pairs(docs).collect()
       # no residual cached blocks here
 
-- ``spark.catalog.clearCache()`` between workloads (bench.py does this; it
-  also clears caches the caller made, so it is the blunt instrument).
+- ``spark.catalog.clearCache()`` between workloads (it also clears caches
+  the caller made, so it is the blunt instrument).
 
 ``connected_components`` checkpoints its pair list once and its label
 table every round (``localCheckpoint`` — lineage truncation, see its
@@ -983,8 +983,7 @@ def connected_components_star(
 def dedup_near(
     docs: DataFrame, pairs: DataFrame | None = None,
     text_col: str = "text", id_col: str = "doc_id",
-    threshold: float = 0.8, algorithm: str = "propagation",
-    driver_threshold: int = 100_000,
+    threshold: float = 0.8, driver_threshold: int = 100_000,
 ) -> DataFrame:
     """END-TO-END near-dedup: keep exactly one representative (the min-id
     keeper) per near-duplicate component. Composes the full production
@@ -994,24 +993,15 @@ def dedup_near(
     The semi-join back to the corpus is keyed on the id (broadcast-able
     keeper side when duplicates are sparse).
 
-    ``algorithm``: ``"propagation"`` (min-label — O(diameter) rounds, the
-    right default for dense near-dup clusters) or ``"star"``
-    (large-star/small-star — chain-safe, ~log₂ rounds on path-shaped
-    components). Identical output either way (pytest-pinned)."""
-    if algorithm not in ("propagation", "star"):
-        raise ValueError(f"unknown algorithm {algorithm!r}")
+    ``driver_threshold``: bounded union-find fast path for small verified
+    pair lists (see ``connected_components``); identical output, falls back
+    to the distributed loop past the threshold."""
     if pairs is None:
         pairs = lsh_verified_pairs(docs, text_col, id_col,
                                    threshold=threshold)
-    if algorithm == "propagation":
-        # driver_threshold: bounded union-find fast path for small verified
-        # pair lists (see connected_components); identical output, falls
-        # back to the distributed loop past the threshold
-        comp = connected_components(
-            docs, pairs, id_col, driver_threshold=driver_threshold
-        )
-    else:
-        comp = connected_components_star(docs, pairs, id_col)
+    comp = connected_components(
+        docs, pairs, id_col, driver_threshold=driver_threshold
+    )
     keepers = comp.filter(F.col(id_col) == F.col("component_id")).select(id_col)
     return docs.join(keepers, id_col, "left_semi")
 

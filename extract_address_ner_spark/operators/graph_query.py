@@ -24,8 +24,8 @@ SCOPE-REGISTERED: the blocks outlive the call (the returned DataFrame is
 lazy, so the operator cannot know when unpersisting is safe), and a
 long-lived session issuing many graph reads should either wrap
 materialization in ``dedup.dedup_cache_scope()`` or call
-``spark.catalog.clearCache()`` between workloads (bench.py and the
-``--bucketed-edges`` job path do the latter).
+``spark.catalog.clearCache()`` between workloads (the
+``--bucketed-edges`` job path does the latter).
 """
 
 from __future__ import annotations

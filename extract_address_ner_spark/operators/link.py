@@ -19,7 +19,7 @@ from __future__ import annotations
 
 from collections.abc import Sequence
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..sources.admin_regions import hierarchy_edges
@@ -84,44 +84,6 @@ def salted_agg(
     """
     partial = salted_partials(df, keys, partial_aggs, n_salts, salt_seed)
     return partial.groupBy(*keys).agg(*final_aggs)
-
-
-def mention_edges(canonical_mentions: DataFrame) -> DataFrame:
-    """(repo:path, mentions_address, canonical_id) triples, deduped with max
-    confidence per triple. Generalizes the reference's D5 result rows into the
-    edge table (reference result shape: app/models/address.py:9-13)."""
-    m = canonical_mentions.filter(F.col("canonical_id").isNotNull())
-    return salted_agg(
-        m.select(
-            F.concat_ws(":", "repo", "path").alias("subj"),
-            F.lit("mentions_address").alias("pred"),
-            F.col("canonical_id").alias("obj"),
-            F.col("confidence"),
-        ),
-        keys=("subj", "pred", "obj"),
-        partial_aggs=[F.max("confidence").alias("_pc")],
-        final_aggs=[F.max("_pc").alias("confidence")],
-    )
-
-
-def located_in_edges(canonical_mentions: DataFrame) -> DataFrame:
-    """(canonical_address, located_in, admin_region) + the static region
-    hierarchy backbone (admin_regions parent links)."""
-    spark = canonical_mentions.sparkSession
-    addr_region = (
-        canonical_mentions.filter(F.col("canonical_id").isNotNull())
-        .select(
-            F.col("canonical_id").alias("subj"),
-            F.lit("located_in").alias("pred"),
-            F.col("region_id").alias("obj"),
-        )
-        .dropDuplicates(["subj", "pred", "obj"])
-        .withColumn("confidence", F.lit(1.0))
-    )
-    backbone = spark.createDataFrame(
-        hierarchy_edges(), "subj string, pred string, obj string"
-    ).withColumn("confidence", F.lit(1.0))
-    return addr_region.unionByName(backbone)
 
 
 def build_edges(canonical_mentions: DataFrame, persist: bool = False) -> DataFrame:

@@ -93,14 +93,6 @@ def iri_decode(col: Column | str) -> Column:
                   reversed(IRI_ESCAPES), c)
 
 
-def iri_decode_sql(expr: str) -> str:
-    """DuckDB twin of :func:`iri_decode`, generated from the one shared
-    escape table so the engines cannot drift."""
-    for ch, esc in reversed(IRI_ESCAPES):
-        expr = f"replace({expr}, '{esc}', '{ch}')"
-    return expr
-
-
 def from_ntriples(lines: DataFrame, base: str = DEFAULT_BASE,
                   line_col: str = "line") -> DataFrame:
     """Parse N-Triples ``line`` rows written by :func:`to_ntriples` back into

@@ -9,8 +9,6 @@ app/utils/preprocess.py:284-288).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
-
 # (region_id, name, level, parent_id, aliases)
 ADMIN_REGIONS: list[tuple[str, str, str, str | None, list[str]]] = [
     # top level: special city / metropolitan city / province (si/do)
@@ -41,22 +39,6 @@ ADMIN_REGIONS: list[tuple[str, str, str, str | None, list[str]]] = [
     # third level: gu under city
     ("kr/gyeonggi/seongnam/bundang", "분당구", "gu", "kr/gyeonggi/seongnam", []),
 ]
-
-SCHEMA = "region_id string, name string, level string, parent_id string, aliases array<string>"
-
-
-def admin_regions_df(spark: SparkSession) -> DataFrame:
-    return spark.createDataFrame(ADMIN_REGIONS, schema=SCHEMA)
-
-
-def alias_to_canonical() -> dict[str, str]:
-    """alias name -> canonical name, for canonicalization (e.g. 서울시 →
-    서울특별시)."""
-    out: dict[str, str] = {}
-    for _, name, _level, _parent, aliases in ADMIN_REGIONS:
-        for a in aliases:
-            out[a] = name
-    return out
 
 
 def name_to_region_id() -> dict[str, str]:

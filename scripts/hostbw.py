@@ -14,7 +14,7 @@ deadlocking the gate during sustained moderate pressure; the recorded
 pre/post rates distinguish a 2.5-state run from a 5.5-state run after the
 fact.
 
-Used by bench.py (north-metric gate) and scripts/scaling_bench.py (per-leg
+Used by scripts/scaling_bench.py and scripts/bus_probe.py (per-leg
 gate): wait until the copy rate says the bus is actually quiet, and record
 the pre/post rates next to every timed number so a contaminated trial is
 visible in the output rather than silently averaged in.
@@ -122,13 +122,3 @@ def wait_for_bw(min_gbps: float = 2.0, max_wait_s: int = 600,
         if time.monotonic() >= deadline:
             return copy_gbps()
         time.sleep(10)
-
-
-def median_of(values) -> float:
-    """Median with the repo's reporting convention (even case: mean of the
-    two mid values rounded to 3dp) — ONE implementation shared by bench.py
-    (headline + KG-leg stats) and drift_probe so the three reports stay
-    comparable (round-5 code review: three hand-rolled copies)."""
-    t = sorted(values)
-    mid = len(t) // 2
-    return t[mid] if len(t) % 2 else round((t[mid - 1] + t[mid]) / 2, 3)

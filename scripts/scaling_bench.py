@@ -388,8 +388,8 @@ representative per-executor proxy; BENCH.md's multi-process executor-proxy
 measurement is the executor-shaped evidence.
 
 Per-query suite timings are NOT reproduced here (this file records only
-what THIS run measured): see the latest BENCH_r*.json (driver-recorded,
-`python bench.py` at sf0.1) and the hand-curated aggregate in BENCH.md.
+what THIS run measured): see the BENCH_r*.json records (the rounds 1-6
+suite at sf0.1) and the hand-curated aggregate in BENCH.md.
 """
     # BENCH.md is the hand-curated report (it aggregates the distribution of
     # repeated runs — see its contention analysis); each raw run lands here

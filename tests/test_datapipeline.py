@@ -489,14 +489,6 @@ def test_dedup_near_keeps_one_per_component(spark, sf_smoke):
     # planted exact-copy (i, i+200000) pairs: only i survives
     for i in range(0, 500, 35):
         assert i in kept and (i + 200000) not in kept
-    # round 4: the chain-safe star variant is a drop-in — identical keepers
-    star = {r["doc_id"]
-            for r in dedup.dedup_near(docs, pairs,
-                                      algorithm="star").collect()}
-    assert star == kept
-    import pytest
-    with pytest.raises(ValueError):
-        dedup.dedup_near(docs, pairs, algorithm="bogus")
 
 
 def test_connected_components_on_planted_dups(spark, sf_smoke):
