@@ -470,7 +470,7 @@ def q_code_mentions(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register("repo_mention_counts", gold_repo_counts_sql())
 def q_repo_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Salted two-phase hot-key aggregation (mega-repo skew)."""
+    """Hot-key count (mega-repo skew), partial aggregate before exchange."""
     m = extract_mentions(C.corpus_from_documents(spark, sf_dir))
     return repo_mention_counts(m).withColumn(
         "n_mentions", F.col("n_mentions").cast("long")
@@ -502,7 +502,7 @@ FROM ind GROUP BY 1, 2, 3"""
 
 @register("graph_query_degrees", gold_degree_sql())
 def q_graph_degrees(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Degree distribution over the built KG (salted per-node counts)."""
+    """Degree distribution over the built KG (plain per-node counts)."""
     from .operators.graph_query import degree_distribution
 
     return degree_distribution(_built_edges(spark, sf_dir))
@@ -523,7 +523,7 @@ FROM r WHERE rank <= {k}"""
 
 @register("graph_query_top_addresses", gold_top_addresses_sql())
 def q_graph_top_addresses(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Top-3 most-mentioned addresses per repo (salted counts + bounded
+    """Top-3 most-mentioned addresses per repo (plain counts + bounded
     rank window)."""
     from .operators.graph_query import top_addresses_per_repo
 

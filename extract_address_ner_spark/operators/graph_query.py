@@ -9,23 +9,30 @@ warehouse-persisted edge table.
 
 Scale notes: degree counting keys on nodes — the canonical ids are FEW and
 HOT (a handful of dictionary addresses receive edges from half the corpus
-via the mega-repo), so per-node counts go through the positional-salt
-two-phase ``salted_agg``. The file→address→region hop broadcasts the
+via the mega-repo). The counts are algebraic, so a plain ``groupBy`` bounds
+them: the partial aggregate before the exchange ships a hot node as one row
+per map partition. The file→address→region hop broadcasts the
 located_in side (bounded by the admin-region dictionary times the address
 vocabulary — a dimension, not a fact). The per-repo top-k ranks run on
 pre-aggregated (repo, address) counts — the window input is bounded by
 |repos| × |address vocabulary|, not by corpus rows.
 
-Caching contract (same as operators/dedup.py): ``degree_distribution`` and
-``region_rollup`` consume their ``edges`` input in 2-3 branches, so they
-persist() it — otherwise an unmaterialized upstream pipeline would run
-per branch. The persist is MEMORY_AND_DISK, LRU-evictable, and
-SCOPE-REGISTERED: the blocks outlive the call (the returned DataFrame is
-lazy, so the operator cannot know when unpersisting is safe), and a
-long-lived session issuing many graph reads should either wrap
-materialization in ``dedup.dedup_cache_scope()`` or call
-``spark.catalog.clearCache()`` between workloads (the
-``--bucketed-edges`` job path does the latter).
+Caching contract: the first three reads (``degree_distribution``,
+``top_addresses_per_repo``, ``region_rollup``) cache nothing, and each reads
+its ``edges`` input once per branch (two branches in the degree
+distribution, three in the rollup). The caller must make that cheap. A file
+scan (``read_edge_snapshot``, a staged or bucketed table) costs nothing
+extra. Neither does an input that ends in a shuffle, as ``build_edges``
+does: Spark reuses that exchange across the branches (``ReusedExchange`` in
+the plan), so the upstream pipeline runs once. A caller with any other lazy
+input materializes it first.
+
+The operators below them that iterate, probe or self-join a subplan persist
+it themselves (same contract as operators/dedup.py): MEMORY_AND_DISK,
+LRU-evictable and SCOPE-REGISTERED. The blocks outlive the call, so a
+long-lived session should wrap materialization in
+``dedup.dedup_cache_scope()`` or call ``spark.catalog.clearCache()``
+between workloads.
 """
 
 from __future__ import annotations
@@ -35,7 +42,6 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from .dedup import _persist
-from .link import salted_agg
 
 MENTIONS = "mentions_address"
 LOCATED_IN = "located_in"
@@ -44,19 +50,14 @@ LOCATED_IN = "located_in"
 def degree_distribution(edges: DataFrame) -> DataFrame:
     """(pred, direction, degree, n_nodes): how many nodes have a given
     out-/in-degree, per predicate — the first sanity query over any KG.
-    Per-node degrees are salted two-phase (hot canonical addresses), the
-    histogram over (pred, degree) is uniform by construction. The edges
-    input feeds BOTH direction branches, so it is persisted (scope-aware,
-    see dedup.dedup_cache_scope) — without it an unmaterialized upstream
-    pipeline would run twice."""
-    edges = _persist(edges)
+    Per-node degrees are a plain count (hot canonical addresses cross the
+    exchange once per map partition); the histogram over (pred, degree) is
+    uniform by construction. The edges input feeds both direction
+    branches (see the module caching contract)."""
 
     def degrees(node_col: str, direction: str) -> DataFrame:
-        per_node = salted_agg(
-            edges.select("pred", F.col(node_col).alias("node")),
-            keys=("pred", "node"),
-            partial_aggs=[F.count(F.lit(1)).alias("_pc")],
-            final_aggs=[F.sum("_pc").cast("long").alias("degree")],
+        per_node = edges.groupBy("pred", F.col(node_col).alias("node")).agg(
+            F.count(F.lit(1)).cast("long").alias("degree")
         )
         return per_node.groupBy("pred", "degree").agg(
             F.count(F.lit(1)).cast("long").alias("n_nodes")
@@ -70,17 +71,15 @@ def top_addresses_per_repo(edges: DataFrame, k: int = 3) -> DataFrame:
     """(repo, address_id, n_files, rank): the k most-mentioned canonical
     addresses per repo, by number of distinct mentioning files (each
     mentions_address edge IS one distinct (file, address) pair — the edge
-    table is deduped), ties broken by address id. The count is salted
-    (mega-repo skew); the rank window runs on the aggregated counts."""
+    table is deduped), ties broken by address id. The count's partial
+    aggregate before the exchange absorbs the mega-repo skew; the rank
+    window runs on the aggregated counts."""
     m = edges.filter(F.col("pred") == MENTIONS).select(
         F.substring_index("subj", ":", 1).alias("repo"),
         F.col("obj").alias("address_id"),
     )
-    counts = salted_agg(
-        m,
-        keys=("repo", "address_id"),
-        partial_aggs=[F.count(F.lit(1)).alias("_pc")],
-        final_aggs=[F.sum("_pc").cast("long").alias("n_files")],
+    counts = m.groupBy("repo", "address_id").agg(
+        F.count(F.lit(1)).cast("long").alias("n_files")
     )
     w = Window.partitionBy("repo").orderBy(
         F.desc("n_files"), F.asc("address_id")
@@ -99,9 +98,8 @@ def region_rollup(edges: DataFrame) -> DataFrame:
     → region, plus the static region hierarchy) is broadcast — it is
     bounded by the address vocabulary, never by corpus size — so the only
     shuffle is the final distinct-count aggregation. The edges input feeds
-    three branches (mentions, located_in, backbone), so it is persisted
-    (scope-aware) — an unmaterialized upstream pipeline would run 3x."""
-    edges = _persist(edges)
+    three branches (mentions, located_in, backbone; see the module caching
+    contract)."""
     ma = edges.filter(F.col("pred") == MENTIONS).select(
         F.col("subj").alias("file_id"), F.col("obj").alias("address_id")
     )

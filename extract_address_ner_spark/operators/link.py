@@ -9,96 +9,32 @@ Produces the KG tables:
 
 Skew: repos are Zipf-distributed (one mega-repo can hold ~half the corpus)
 and canonical address ids are few and hot. Aggregations keyed on either are
-therefore two-phase SALTED: partial aggregate on (key, salt) — map-side
-combine spreads the hot key over ``n_salts`` reducers — then final aggregate
-on key. ``salted_agg`` is the generic operator; AQE skew-join splitting
-covers the join side (session.py).
+algebraic (count, max), so a plain ``groupBy().agg()`` already bounds the hot
+key: Spark runs a partial aggregate before the exchange, and each map
+partition ships the key as one row. Work that cannot be combined, such as
+joins, is where skew needs more; AQE skew-join splitting covers it
+(session.py).
 """
 
 from __future__ import annotations
 
-from collections.abc import Sequence
-
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..sources.admin_regions import hierarchy_edges
 
 
-def salted_partials(
-    df: DataFrame,
-    keys: Sequence[str],
-    partial_aggs: Sequence[Column],
-    n_salts: int = 16,
-    salt_seed: int = 42,
-) -> DataFrame:
-    """Phase 1 of salted aggregation: aggregate within (keys, salt). Exposed
-    so tests can assert the skew bound directly — a hot key's rows land in
-    ~n_salts groups of ~|hot|/n_salts rows each, so no single reducer sees
-    the whole key.
-
-    The salt MUST vary within a group: both production call sites
-    (repo_mention_counts feeds only the group key; build_edges' only
-    non-key column is a per-tagger-constant confidence) have every non-key
-    column constant within the hot group, so any salt derived from column
-    VALUES degenerates to one salt per key and phase 1 becomes a plain
-    groupBy — silently, exactly where the salt is supposed to defend.
-
-    The salt is ``pmod(hash(spark_partition_id() + seed), n_salts)``:
-
-    - It varies within a hot group because a key is only HOT when its rows
-      span many input partitions — each partition contributes its own salt,
-      so the key spreads over ~min(n_partitions, n_salts) partials. (A key
-      confined to ONE partition gets one salt, which is fine: phase-1
-      map-side aggregation collapses it locally to a single row and no
-      reducer ever sees its raw rows.)
-    - It is DETERMINISTIC under stage retries: the salt is constant per
-      partition and independent of intra-partition row ORDER, so a
-      recomputed map task emits identical partials even though shuffle
-      fetch order differs between attempts. (A per-row ordinal salt like
-      monotonically_increasing_id would make retried partials disagree
-      with the first attempt's — reducers holding a mix of attempt-1 and
-      attempt-2 blocks would double-count or drop rows.)
-    - ``pmod`` not ``abs``: under ANSI mode (Spark 4 default)
-      ``abs(hash(...))`` raises ARITHMETIC_OVERFLOW when the 32-bit hash
-      lands exactly on Int.MinValue (~1 row in 2^32 — near-certain at
-      100 TB scale)."""
-    salt = F.pmod(
-        F.hash(F.spark_partition_id() + F.lit(salt_seed)), F.lit(n_salts)
-    ).alias("_salt")
-    return df.withColumn("_salt", salt).groupBy(*keys, "_salt").agg(*partial_aggs)
-
-
-def salted_agg(
-    df: DataFrame,
-    keys: Sequence[str],
-    partial_aggs: Sequence[Column],
-    final_aggs: Sequence[Column],
-    n_salts: int = 16,
-    salt_seed: int = 42,
-) -> DataFrame:
-    """Two-phase aggregation defeating hot-key skew.
-
-    ``partial_aggs`` aggregate within (keys, salt); ``final_aggs`` combine the
-    partials per key (they see the partial columns by alias).
-    """
-    partial = salted_partials(df, keys, partial_aggs, n_salts, salt_seed)
-    return partial.groupBy(*keys).agg(*final_aggs)
-
-
-def build_edges(canonical_mentions: DataFrame, persist: bool = False) -> DataFrame:
+def build_edges(canonical_mentions: DataFrame) -> DataFrame:
     """Both edge families in ONE pass: each canonical mention emits its
     mentions_address edge and its located_in edge (a 2-element inline
-    explode), then a single salted two-phase aggregate dedupes/maxes
-    confidence for both families at once. The upstream extraction DAG runs
-    exactly once with NO caching — at 3M rows the previous
-    persist-then-two-branches formulation spent more time writing cache
-    blocks under 32-thread MemoryStore contention than recomputing
-    (+70s @32c) and doubled the shuffles.
+    explode), then a single aggregate (partial aggregate before the
+    exchange) dedupes/maxes confidence for both families at once. The
+    upstream extraction DAG runs exactly once with NO caching — at 3M rows
+    the previous persist-then-two-branches formulation spent more time
+    writing cache blocks under 32-thread MemoryStore contention than
+    recomputing (+70s @32c) and doubled the shuffles.
 
     The static region hierarchy backbone is unioned afterwards (tiny)."""
-    if persist:
-        canonical_mentions = canonical_mentions.persist()
     m = canonical_mentions.filter(F.col("canonical_id").isNotNull())
     both = m.select(
         F.explode(
@@ -118,11 +54,8 @@ def build_edges(canonical_mentions: DataFrame, persist: bool = False) -> DataFra
             )
         ).alias("_e")
     ).select("_e.subj", "_e.pred", "_e.obj", "_e.confidence")
-    deduped = salted_agg(
-        both,
-        keys=("subj", "pred", "obj"),
-        partial_aggs=[F.max("confidence").alias("_pc")],
-        final_aggs=[F.max("_pc").alias("confidence")],
+    deduped = both.groupBy("subj", "pred", "obj").agg(
+        F.max("confidence").alias("confidence")
     )
     spark = canonical_mentions.sparkSession
     backbone = spark.createDataFrame(
@@ -181,16 +114,16 @@ def write_edges_bucketed(
     then plan with ZERO Exchange: the bucket files are the co-location
     (`SelectedBucketsCount` in the scan, partial+final HashAggregate with
     no shuffle between; pinned by tests/test_plans.py). This is the §2.6
-    storage-layer answer to the same problem `salted_agg` solves at
-    shuffle time: write once bucketed, aggregate forever shuffle-free.
+    storage-layer answer to the same problem the partial aggregate before
+    the exchange solves at shuffle time: write once bucketed, aggregate
+    forever shuffle-free.
 
     At 100 TB: n_buckets should be sized so a bucket fits one task
     (corpus_edges/n_buckets rows); a pathologically hot subj concentrates
-    in ONE bucket's task — streaming aggregation keeps memory flat, but
-    for wall-clock-critical reads on extremely skewed keys the salted
-    shuffle path remains the fallback. Catalog note: bucketing metadata
-    lives in the session catalog (saveAsTable) — on a cluster this is the
-    Hive/Iceberg metastore; plain `.parquet()` writes cannot carry it.
+    in ONE bucket's task — streaming aggregation keeps memory flat.
+    Catalog note: bucketing metadata lives in the session catalog
+    (saveAsTable) — on a cluster this is the Hive/Iceberg metastore; plain
+    `.parquet()` writes cannot carry it.
 
     The write REPARTITIONS on the bucket key first (round 4): Spark emits
     one file per (write task × bucket it holds rows of), so bucketing a
@@ -213,12 +146,10 @@ def write_edges_bucketed(
     return edges.sparkSession.table(table)
 
 
-def repo_mention_counts(canonical_mentions: DataFrame, n_salts: int = 16) -> DataFrame:
+def repo_mention_counts(canonical_mentions: DataFrame) -> DataFrame:
     """Per-repo mention counts — the canonical hot-key aggregation (the
-    mega-repo holds ~half the rows), done salted two-phase."""
-    return salted_agg(
-        canonical_mentions.select("repo"),
-        keys=("repo",),
-        partial_aggs=[F.count(F.lit(1)).alias("_pc")],
-        final_aggs=[F.sum("_pc").alias("n_mentions")],
+    mega-repo holds ~half the rows). The partial aggregate before the
+    exchange ships the mega-repo as one row per map partition."""
+    return canonical_mentions.groupBy("repo").agg(
+        F.count(F.lit(1)).alias("n_mentions")
     )

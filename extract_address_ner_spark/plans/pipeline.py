@@ -151,9 +151,7 @@ class StagedPipeline:
             "canonical",
             lambda: canonicalize_mentions(road_address_gate(mentions)),
         )
-        edges = self._stage(
-            "edges", lambda: build_edges(canonical, persist=False)
-        )
+        edges = self._stage("edges", lambda: build_edges(canonical))
         nodes = self._stage("nodes", lambda: build_nodes(canonical))
         return {
             "corpus": corpus,

@@ -19,8 +19,8 @@ Two generators:
 2. ``synthesize_corpus`` — pure-Spark distributed generator (spark.range +
    built-in expressions only, no Python UDFs, no driver materialization) for
    bench/skew runs at arbitrary row counts, with Zipf-ish repo skew (one
-   mega-repo holds ~half the rows) to exercise salted-key linking and AQE
-   skew handling.
+   mega-repo holds ~half the rows) to exercise the hot-key aggregates in
+   linking (partial aggregate before the exchange) and AQE skew handling.
 
 No wall-clock, no unseeded randomness anywhere (FIXTURES.md).
 """

@@ -329,22 +329,19 @@ def main() -> int:
 
         def _time_reads(edges_df) -> dict[str, float]:
             """Steady-state read times: one untimed warm-up (codegen/JIT)
-            then best-of-2, cache cleared between runs (the queries
-            persist() their input scope-aware; plain vs bucketed and
-            successive runs must never share blocks)."""
+            then best-of-2. The queries cache nothing, so every run reads
+            its edge table from the files."""
             times = {}
             for name, fn in (("degrees", GQ.degree_distribution),
                              ("top_addresses", GQ.top_addresses_per_repo),
                              ("region_rollup", GQ.region_rollup)):
                 best = None
                 for trial in range(3):  # first = warm-up, untimed
-                    spark.catalog.clearCache()
                     t = time.monotonic()
                     fn(edges_df).write.format("noop").mode("overwrite").save()
                     dt = time.monotonic() - t
                     if trial > 0 and (best is None or dt < best):
                         best = dt
-                spark.catalog.clearCache()
                 times[name] = best
             return times
 

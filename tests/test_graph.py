@@ -6,11 +6,7 @@ from pyspark.sql import functions as F
 
 from extract_address_ner_spark import oracle
 from extract_address_ner_spark.operators.canonicalize import canonicalize_mentions
-from extract_address_ner_spark.operators.link import (
-    build_edges,
-    build_nodes,
-    salted_agg,
-)
+from extract_address_ner_spark.operators.link import build_edges, build_nodes
 from extract_address_ner_spark.operators.tagger import extract_mentions
 from extract_address_ner_spark.operators.validate import (
     road_address_gate,
@@ -88,84 +84,6 @@ def test_canonicalize_alias_expansion(spark):
     assert rows[C.PLANTED_ADDRESSES[1]]["region_id"] == "kr/gyeonggi"
     # unknown leading token → NULLs, row kept
     assert rows["모름 어딘가 123로"]["canonical_id"] is None
-
-
-def test_salted_agg_equals_plain(spark):
-    df = C.synthesize_corpus(spark, 2000, seed=1)
-    plain = {
-        (r["repo"], r["n"]) for r in
-        df.groupBy("repo").agg(F.count(F.lit(1)).alias("n")).collect()
-    }
-    salted = {
-        (r["repo"], r["n"]) for r in
-        salted_agg(
-            df.select("repo"), ("repo",),
-            [F.count(F.lit(1)).alias("_p")], [F.sum("_p").alias("n")],
-        ).withColumn("n", F.col("n").cast("long")).collect()
-    }
-    assert salted == plain
-
-
-def test_salted_partials_bound_hot_key(spark):
-    """SURVEY §5.2.5: mega-repo skew — post-salting, no single group holds
-    the hot key; its rows spread over ~n_salts groups of bounded size."""
-    from extract_address_ner_spark.operators.link import salted_partials
-
-    # at scale the input spans many partitions (the salt is per-partition);
-    # 64 here stands in for the thousands a real corpus scan produces
-    df = C.synthesize_corpus(spark, 20000, seed=1).repartition(64) \
-        .select("repo", "path")
-    hot_rows = df.filter(F.col("repo") == "repo_mega").count()
-    partials = salted_partials(
-        df, ("repo",), [F.count(F.lit(1)).alias("n")], n_salts=16
-    ).filter(F.col("repo") == "repo_mega").collect()
-    assert hot_rows == 10000  # mega repo holds half of all rows
-    assert len(partials) >= 12  # hot key spreads over ~all salt buckets
-    assert sum(r["n"] for r in partials) == hot_rows
-    # bounded: no bucket more than 3x the ideal share — no reducer ever
-    # sees more than a small fraction of the hot key
-    assert max(r["n"] for r in partials) <= 3 * hot_rows / 16
-    # deterministic re-run
-    again = salted_partials(
-        df, ("repo",), [F.count(F.lit(1)).alias("n")], n_salts=16
-    ).filter(F.col("repo") == "repo_mega").collect()
-    assert {(r["_salt"], r["n"]) for r in again} == {
-        (r["_salt"], r["n"]) for r in partials
-    }
-
-
-def test_salted_partials_spread_when_nonkey_columns_constant(spark):
-    """Round-3 regression test for the degenerate-salt bug (VERDICT r02 #2):
-    the production call sites feed rows whose NON-KEY columns are constant
-    within the hot group (repo_mention_counts passes only the group key;
-    build_edges' confidence is tagger-constant). A value-derived salt is
-    then constant per group and phase 1 degenerates to a plain groupBy.
-    The positional salt must spread the hot key over ~n_salts partials even
-    in this shape."""
-    from extract_address_ner_spark.operators.link import salted_partials
-
-    # exactly the repo_mention_counts shape: the single group-key column,
-    # nothing else — zero per-row variability in the VALUES
-    df = C.synthesize_corpus(spark, 20000, seed=1).repartition(64) \
-        .select("repo")
-    hot_rows = df.filter(F.col("repo") == "repo_mega").count()
-    partials = salted_partials(
-        df, ("repo",), [F.count(F.lit(1)).alias("n")], n_salts=16
-    ).filter(F.col("repo") == "repo_mega").collect()
-    assert hot_rows == 10000
-    # the hot key must occupy (nearly) every salt bucket, not one
-    assert len(partials) >= 12
-    assert sum(r["n"] for r in partials) == hot_rows
-    # bounded: no single partial holds more than 3x the ideal share —
-    # i.e. no reducer ever sees the whole hot key
-    assert max(r["n"] for r in partials) <= 3 * hot_rows / 16
-
-    # and the build_edges shape: constant non-key column alongside the keys
-    df2 = df.withColumn("confidence", F.lit(0.85))
-    partials2 = salted_partials(
-        df2, ("repo",), [F.max("confidence").alias("c")], n_salts=16
-    ).filter(F.col("repo") == "repo_mega").collect()
-    assert len(partials2) >= 12
 
 
 def test_edges_and_nodes(spark, sf_smoke):

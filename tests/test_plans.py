@@ -84,12 +84,59 @@ def test_ann_query_filter_pushed_to_scan(spark, sf_smoke):
     assert "LessThan(vec_id,5)" in plan  # PushedFilters reaches parquet
 
 
+def _shuffle_records_written(spark, fn) -> int:
+    """Run ``fn`` under a job group of its own and return the shuffle
+    records its jobs' stages wrote, read from the status store."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"records-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()  # the store fills async
+    tracker, store = sc.statusTracker(), sc._jsc.sc().statusStore()
+    stage_ids = {sid for j in tracker.getJobIdsForGroup(group)
+                 for sid in tracker.getJobInfo(j).stageIds}
+    total = 0
+    for sid in stage_ids:
+        attempts = store.stageData(sid, False, None, False, None)
+        for i in range(attempts.size()):
+            total += attempts.apply(i).shuffleWriteRecords()
+    return total
+
+
 def test_repo_counts_aggregation_has_map_side_partial(spark, sf_smoke):
+    """The hot-key bound of the plain aggregate: a partial count runs
+    below the exchange, so the mega-repo (half of all rows) crosses the
+    shuffle as at most one record per input partition."""
+    from collections import Counter
+
     from extract_address_ner_spark.operators.link import repo_mention_counts
 
     m = extract_mentions(C.corpus_from_documents(spark, sf_smoke))
     plan = _plan(repo_mention_counts(m))
     assert "partial_" in plan  # partial agg before every exchange
+
+    n_parts = 32
+    df = C.synthesize_corpus(spark, 20000, seed=1).repartition(n_parts) \
+        .localCheckpoint()
+    mega = df.filter(F.col("repo") == "repo_mega")
+    assert mega.count() == 10000  # the mega-repo holds half of all rows
+
+    counts = repo_mention_counts(df)
+    plan = _plan(counts)  # before execution: the one, initial plan
+    assert plan.index("partial_count") > plan.index(
+        "Exchange hashpartitioning(repo"), plan
+    plain = Counter(r["repo"] for r in df.select("repo").collect())
+    assert {r["repo"]: r["n_mentions"] for r in counts.collect()} == plain
+
+    written = _shuffle_records_written(
+        spark, lambda: repo_mention_counts(mega).collect())
+    assert 0 < written <= n_parts, written
 
 
 def _built_edges(spark, sf_smoke):
@@ -102,10 +149,12 @@ def _built_edges(spark, sf_smoke):
     )
 
 
-def test_graph_queries_no_sort_merge_join(spark, sf_smoke):
+def test_graph_queries_no_sort_merge_join(spark, sf_smoke, tmp_path):
     """Round-3 read-side KG queries: every join must be broadcast (the
     located_in / backbone sides are dimensions bounded by the address
-    vocabulary); a SortMergeJoin here would shuffle the 100 TB fact side."""
+    vocabulary); a SortMergeJoin here would shuffle the 100 TB fact side.
+    The reads keep the module's caching contract: no cache of their own,
+    and a lazy ``build_edges`` input is computed once across branches."""
     from extract_address_ner_spark.operators import graph_query as GQ
 
     edges = _built_edges(spark, sf_smoke)
@@ -117,6 +166,23 @@ def test_graph_queries_no_sort_merge_join(spark, sf_smoke):
         plan = _plan(df)
         assert "SortMergeJoin" not in plan
         assert "ShuffledHashJoin" not in plan
+
+    # the reads cache nothing: over a file scan, each branch re-reads it
+    path = str(tmp_path / "edges")
+    edges.write.parquet(path)
+    scanned = spark.read.parquet(path)
+    for read in (GQ.degree_distribution, GQ.top_addresses_per_repo,
+                 GQ.region_rollup):
+        plan = _plan(read(scanned))
+        assert "InMemoryRelation" not in plan, read.__name__
+        assert "InMemoryTableScan" not in plan, read.__name__
+
+    # over the lazy build, the branches share build_edges' final exchange,
+    # so the tagger upstream runs once (AQE reuses it at execution time)
+    for read in (GQ.degree_distribution, GQ.region_rollup):
+        df = read(edges)
+        df.collect()
+        assert "ReusedExchange" in _plan(df), read.__name__
 
 
 def test_refine_centroids_mean_is_partially_aggregated(spark, sf_smoke):
