@@ -194,8 +194,8 @@ def q_exact_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     return dedup.exact_dup_groups(dup_documents(spark, sf_dir, floor=False))
 
 
-# Double-hashing minhash term (mirrors dedup.hash_pairs_expr /
-# minhash_sig_expr): h1, h2 from hex chars 1-15 / 16-30 of ONE md5.
+# Double-hashing minhash term (mirrors dedup's Arrow kernel,
+# _minhash_batch): h1, h2 from hex chars 1-15 / 16-30 of ONE md5.
 _D_H1 = f"({_D_H64.format('s')} % 2147483647)"
 _D_H2 = "(CAST(concat('0x', substr(md5(s), 16, 15)) AS BIGINT) % 2147483647)"
 _D_MINHASH_J = f"min(({_D_H1} + j * {_D_H2}) % 2147483647)"

@@ -7,18 +7,19 @@ in entry_queries:
                100 TB this is the cheapest possible dedup — hash computed in
                the scan projection, map-side combine on the group).
 - MinHash:     k-word shingles → n md5-derived min-hashes per doc — computed
-               NARROW (no explode/shuffle until the band join); signatures
-               come from an Arrow-batched vectorized kernel (hashlib md5 +
-               NumPy family minima), byte-identical to the SQL expression
-               ``minhash_sig_expr`` that runs interpreted and measured ~7×
-               slower.
+               NARROW (no explode/shuffle until the band join) by ONE
+               Arrow-batched kernel (hashlib md5 + NumPy), the only place
+               word shingles are cut: it emits each doc's signature and
+               its sorted distinct shingle hashes, which every family
+               below reads.
 - LSH:         banded minhash signatures → candidate pairs via an equi-join
                on (band_idx, band_signature) — the scale path for near-dup:
                candidates ∝ true duplicates, not n².
 - n-gram Jaccard: exact verification on candidates (or, small-scale, on the
-               shingle inverted index) — inter/union over distinct shingles.
-- SimHash:     16-bit sign-sum sketch, narrow HOF compute; hamming-distance
-               pairing for near-dup.
+               shingle inverted index) — inter/union over distinct shingle
+               hashes.
+- SimHash:     16-bit sign-sum sketch over the same shingler and digests;
+               hamming-distance pairing for near-dup.
 - embedding:   cosine near-dup over an embedding column (brute pairs at test
                scale; the ANN module's LSH buckets are the 100 TB path).
 - components:  connected components over the near-dup pair list — cluster
@@ -31,13 +32,14 @@ in entry_queries:
 All hash material derives from md5 hex prefixes so DuckDB oracles reproduce
 values exactly (cross-engine bridge: conv(substr(md5(x),1,15),16,10)).
 
-Caching contract: operators that feed one subplan into a self-join
+Caching contract: operators that read one subplan more than once
 (``lsh_candidate_pairs``, ``jaccard_pairs``, ``simhash_near_pairs``, and
-``lsh_verified_pairs`` with prefilter) persist() that subplan so the
-shingle/sketch work runs once, and the blocks stay cached after the result
-is materialized (the laziness of the returned DataFrame means the operator
-itself cannot know when it is safe to unpersist). Storage is MEMORY_AND_DISK
-and LRU-evictable, so correctness is never at risk, but LONG-LIVED sessions
+the signature frame of ``lsh_verified_pairs``, ``similar_docs`` and
+``jaccard_verify``) persist() that subplan so the shingle/sketch work runs
+once, and the blocks stay cached after the result is materialized (the
+laziness of the returned DataFrame means the operator itself cannot know
+when it is safe to unpersist). Storage is MEMORY_AND_DISK and
+LRU-evictable, so correctness is never at risk, but LONG-LIVED sessions
 issuing many dedup calls have two escape hatches:
 
 - ``dedup_cache_scope()`` (the library-friendly one): a context manager that
@@ -62,8 +64,10 @@ returned DataFrame is dereferenced, not a ``dedup_cache_scope`` exit.
 from __future__ import annotations
 
 import contextlib
+import hashlib
 import threading
 
+import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
@@ -160,199 +164,113 @@ def dedup_exact(
 
 
 # --------------------------------------------------------------------------
-# shingles + minhash (narrow, HOF)
+# shingles + minhash: one Arrow kernel
 # --------------------------------------------------------------------------
-
-def shingles_expr(text_col: str, k: int = SHINGLE_K) -> str:
-    """k-word shingles as an array<string>; docs shorter than k words yield a
-    single shingle of the whole text (so every doc has ≥1 shingle).
-
-    Implementation: ONE regex scan (zero-width lookbehind anchors each word
-    start, lookahead captures the k-word window) over space-normalized text —
-    equivalent to the textbook filter/split/slice/concat_ws HOF pipeline but
-    ~6x faster per row (the HOF form allocates a slice + concat per word
-    position in the interpreted-expression path; measured 2.27s -> 0.37s on
-    6.7k docs). Word = maximal run of non-space chars after collapsing runs
-    of ' ' (tabs/newlines stay inside tokens, matching split(text, ' ') with
-    empty segments dropped — the DuckDB oracle's formulation)."""
-    norm = f"trim(regexp_replace({text_col}, ' +', ' '))"
-    rx = r"'(?<=^| )(?=(([^ ]+ ){" + str(k - 1) + r"}[^ ]+))'"
-    return f"""
-    CASE WHEN size(split({norm}, ' ')) < {k} THEN array({norm})
-    ELSE regexp_extract_all({norm}, {rx}, 1)
-    END""".strip()
-
-
-def _h64(expr: str) -> str:
-    """Cross-engine 64-bit hash of a string expression (md5 hex prefix)."""
-    return f"CAST(conv(substr(md5({expr}), 1, 15), 16, 10) AS BIGINT)"
-
 
 # Minhash family: DOUBLE HASHING (Kirsch-Mitzenmacher) — two independent
 # 60-bit values h1, h2 from ONE md5 per shingle (hex chars 1-15 and 16-30),
 # each reduced mod the Mersenne prime M31; family j is (h1 + j·h2) mod M31.
-# Round-1 used an affine family (2j+1)·h + 7919j over a SINGLE base hash —
-# small odd multipliers are piecewise-monotone transforms of h, so the
-# families in a band were strongly correlated and accidental band
-# collisions exploded with corpus size (measured: 20k distinct 24-word-
-# vocab docs → 35,773 accidental candidate pairs affine vs 600 with double
-# hashing; at 200k docs the affine family produced 1.87M candidates whose
-# verification dominated the dedup job and killed its core-scaling).
-# Products stay < 2^36 — exact in BIGINT on both engines (Spark 4 runs ANSI
-# mode: overflow would raise, so staying in range is load-bearing).
+# An affine family over ONE base hash correlated the families in a band
+# (20k distinct docs: 35,773 accidental candidates vs 600 with double
+# hashing). Products stay < 2^36, so the int64 arithmetic is exact.
 M31 = 2147483647
 
 
-def hash_pairs_expr(arr_col: str) -> str:
-    """array<bigint> with BOTH base hashes PACKED per element of a
-    string-array column: ``(h1 << 31) | h2`` (each h < M31 < 2^31, so the
-    pack fits 62 bits — exact in BIGINT under ANSI). ONE md5 per element
-    (the nested transform materializes the hex string before both substr
-    reads; inlining by CollapseProject cannot duplicate the md5 because the
-    inner transform is a separate HOF).
-
-    Round-3 change: the round-2 formulation emitted a 2-element
-    array<bigint> per shingle; packing into one primitive long removes that
-    per-shingle ArrayData allocation + per-read element boxing in the
-    interpreted-HOF path — measured 15-20% faster on the signature query at
-    60k docs with byte-identical output."""
-    return (
-        f"transform(transform({arr_col}, s -> md5(s)), m -> "
-        f"shiftleft(CAST(conv(substr(m, 1, 15), 16, 10) AS BIGINT) % {M31}, 31)"
-        f" + CAST(conv(substr(m, 16, 15), 16, 10) AS BIGINT) % {M31})"
-    )
-
-
-def minhash_sig_expr(hash_col: str, n_hashes: int = N_HASHES) -> str:
-    """array<bigint> of length n_hashes over a pre-computed packed-hash
-    column (see hash_pairs_expr): sig[j] = min over shingles of
-    (h1 + j·h2) mod M31, with h1 = p >> 31 and h2 = p & (2^31-1).
-
-    md5 runs ONCE per shingle (the per-j work is integer bit ops), and the
-    whole expression is wrapped in a dummy second reference to ``hash_col``:
-    CollapseProject inlines single-referenced aliases into lambda bodies,
-    where they are re-evaluated PER SEQUENCE ELEMENT — without the guard the
-    shingle+md5 pipeline ran n_hashes× per row (measured 38.9s → 3.9s on 6.7k
-    docs)."""
-    sig = (
-        f"transform(sequence(0, {n_hashes - 1}), "
-        f"j -> array_min(transform({hash_col}, "
-        f"p -> (shiftright(p, 31) + j * (p & {(1 << 31) - 1})) % {M31})))"
-    )
-    return f"CASE WHEN size({hash_col}) = -1 THEN NULL ELSE {sig} END"
-
-
-def _minhash_sigs_batch(texts, n_hashes: int = N_HASHES, k: int = SHINGLE_K):
-    """Vectorized Python twin of shingles_expr → hash_pairs_expr →
-    minhash_sig_expr for ONE Arrow batch: returns a list (per text) of
-    length-``n_hashes`` int lists (all-NULL elements for a NULL text —
-    matching the expression path's ANSI semantics), byte-identical
-    to the SQL-expression path (equality pinned in tests).
-
-    Why it exists (optimization round 6, guide §4.2): Spark's higher-order
-    functions (transform/aggregate lambdas) run INTERPRETED — no whole-stage
-    codegen — so the md5+conv pack plus the 16-family min fold measured
-    ~9.5s of the 14s dedup_minhash_signatures query at sf1.0 (67k docs,
-    3.1M shingles, 32 cores). Here the md5s run through hashlib (C) and the
-    (h1 + j*h2) % M31 family minima through one NumPy broadcast +
-    minimum.reduceat per batch — same values, ~10x less per-shingle cost.
-
-    Exactness notes: md5 hashes the UTF-8 bytes (same as Spark/DuckDB);
-    int(hex[:15], 16) == conv(substr(md5, 1, 15), 16, 10) (60-bit, exact in
-    int64); products stay < 2^36 so the int64 NumPy arithmetic is exact."""
-    import hashlib
-
-    import numpy as np
-
+def _shingle_digests(texts):
+    """The one word shingler: cut each text of ONE Arrow batch into
+    ``SHINGLE_K``-word shingles and md5 each once. Returns int64 arrays
+    ``(counts, h1, h2)``: shingles per text (-1 for NULL) and, over all
+    shingles in order, the 60-bit hash halves ``conv(substr(md5_hex, 1,
+    15), 16, 10)`` and ``conv(substr(md5_hex, 16, 15), 16, 10)`` that the
+    DuckDB oracles compute. Words come from ``text.split(" ")`` with
+    empties dropped (tabs/newlines stay inside tokens); a doc shorter than
+    k words is one shingle of its words, so every non-NULL doc has ≥ 1.
+    Python, not SQL: Spark's higher-order functions run interpreted, and
+    the SQL shingle + md5 fold measured ~7× slower than hashlib + NumPy."""
     md5 = hashlib.md5
     fb = int.from_bytes
     m60 = (1 << 60) - 1
     counts: list[int] = []
     h1l: list[int] = []
     h2l: list[int] = []
-    null_rows: list[int] = []
     ap1, ap2 = h1l.append, h2l.append
-    for i, text in enumerate(texts):
+    for text in texts:
         if text is None:
-            null_rows.append(i)
-            counts.append(0)
+            counts.append(-1)
             continue
         # encode words ONCE (each word sits in up to k shingles — hashing
-        # the UTF-8 byte concatenation is identical to encoding the joined
-        # string); generic slice path only for k != 3
+        # the UTF-8 byte concatenation equals encoding the joined string)
         words = [w.encode("utf-8") for w in text.split(" ") if w]
-        if len(words) < k:
+        if len(words) < SHINGLE_K:
             sh = [b" ".join(words)]
-        elif k == 3:
-            sh = [b"%s %s %s" % t for t in zip(words, words[1:], words[2:])]
         else:
-            sh = [b" ".join(words[i0:i0 + k])
-                  for i0 in range(len(words) - k + 1)]
+            sh = [b" ".join(t)
+                  for t in zip(*[words[i:] for i in range(SHINGLE_K)])]
         counts.append(len(sh))
         for s in sh:
             # digest bytes, not hexdigest: hex chars [0,15) are the first
             # 60 bits (d[:8] >> 4), chars [15,30) the next 60 (low 60 bits
-            # of d[7:15]) — same values as conv(substr(md5_hex,...),16,10)
+            # of d[7:15])
             d = md5(s).digest()
             ap1(fb(d[:8], "big") >> 4)
             ap2(fb(d[7:15], "big") & m60)
-    # NULL text mirrors the expression path exactly: under ANSI size(NULL)
-    # is NULL (never -1), so minhash_sig_expr's ELSE branch yields an array
-    # of n_hashes NULL elements — not a NULL array (and the band table then
-    # hashes concat_ws of all-null slices, i.e. md5('')). Byte-identical
-    # here: [None] * n_hashes per null row.
-    null_sig = [None] * n_hashes
-    if not h1l:
-        return [null_sig for _ in counts]
-    h1 = np.asarray(h1l, dtype=np.int64) % M31
-    h2 = np.asarray(h2l, dtype=np.int64) % M31
+    return (np.asarray(counts, dtype=np.int64),
+            np.asarray(h1l, dtype=np.int64), np.asarray(h2l, dtype=np.int64))
+
+
+def _minhash_batch(texts, n_hashes: int = N_HASHES):
+    """MinHash signature and shingle set of every text of ONE Arrow batch:
+    ``(sigs, shs)``, per text a length-``n_hashes`` signature —
+    ``sig[j] = min over shingles of (h1 + j·h2) mod M31`` — and the sorted
+    distinct shingle hashes ``(h1 % M31) << 31 | (h2 % M31)`` (62 bits).
+    A NULL text gets ``[None] * n_hashes`` (its band rows then hash
+    ``md5('')``, as the DuckDB oracle's ``concat_ws`` does) and NULL
+    hashes. Two distinct shingles collide on all 62 bits with probability
+    ~2^-62, so Jaccard over the hashes equals Jaccard over the strings
+    short of a ~10^-15-per-pair chance."""
+    counts, h1, h2 = _shingle_digests(texts)
+    sigs: list = [[None] * n_hashes] * len(counts)
+    shs: list = [None] * len(counts)
+    live = np.flatnonzero(counts >= 0)
+    if not live.size:
+        return sigs, shs
+    n = counts[live]
+    starts = np.cumsum(n) - n
+    h1, h2 = h1 % M31, h2 % M31
     j = np.arange(n_hashes, dtype=np.int64)
-    mat = (h1[:, None] + j[None, :] * h2[:, None]) % M31
-    ends = np.cumsum(np.asarray(counts, dtype=np.int64))
-    starts = ends - np.asarray(counts, dtype=np.int64)
-    null_set = set(null_rows)
-    # reduceat needs non-empty segments; compute per-doc minima only over
-    # docs that have shingles (every non-null doc has >= 1 by construction)
-    live = [i for i in range(len(counts)) if i not in null_set]
-    if live:
-        sigs = np.minimum.reduceat(mat, starts[live], axis=0)
-    out: list = [null_sig] * len(counts)
+    mins = np.minimum.reduceat((h1[:, None] + j * h2[:, None]) % M31,
+                               starts, axis=0)
+    # per-doc sort + dedupe in one pass: order by (doc, hash), keep the
+    # first of each run, then cut at the doc boundaries
+    doc = np.repeat(np.arange(live.size), n)
+    packed = (h1 << 31) | h2
+    order = np.lexsort((packed, doc))
+    packed, doc = packed[order], doc[order]
+    first = np.ones(packed.size, dtype=bool)
+    first[1:] = (packed[1:] != packed[:-1]) | (doc[1:] != doc[:-1])
+    packed, doc = packed[first], doc[first]
+    parts = np.split(packed, np.flatnonzero(np.diff(doc)) + 1)
     for pos, i in enumerate(live):
-        out[i] = sigs[pos]
-    return out
+        sigs[i], shs[i] = mins[pos], parts[pos]
+    return sigs, shs
 
 
 def _sig_frame(
     df: DataFrame, text_col: str, id_col: str, n_hashes: int = N_HASHES
 ) -> DataFrame:
-    """(id, _sig array<bigint>) — the MinHash signature table, computed by
-    the Arrow-vectorized batch kernel ``_minhash_sigs_batch`` (same values
-    as ``minhash_sig_expr`` — equality pinned in tests)."""
+    """(id, _sig array<bigint>, _sh array<bigint>): each doc's MinHash
+    signature and sorted distinct shingle hashes, from ONE Arrow-batched
+    pass of ``_minhash_batch`` — the only place word shingles are cut.
+    Every word-shingle operator reads this frame; a caller that needs both
+    columns persists it so the kernel runs once."""
 
-    def _sig_fn(texts: pd.Series) -> pd.Series:
-        return pd.Series(_minhash_sigs_batch(texts.tolist(), n_hashes))
+    def _fn(texts: pd.Series) -> pd.DataFrame:
+        sigs, shs = _minhash_batch(texts.tolist(), n_hashes)
+        return pd.DataFrame({"_sig": sigs, "_sh": shs})
 
-    _sig_udf = F.pandas_udf(_sig_fn, "array<bigint>")
-    return df.select(id_col, _sig_udf(F.col(text_col)).alias("_sig"))
-
-
-def with_shingles(
-    df: DataFrame, text_col: str = "text", out_col: str = "_shingles",
-    k: int = SHINGLE_K,
-) -> DataFrame:
-    """Materialize the shingle array once as a column (shared subplan for
-    signature / band / jaccard stages)."""
-    return df.withColumn(out_col, F.expr(shingles_expr(text_col, k)))
-
-
-def with_shingle_hashes(
-    df: DataFrame, text_col: str = "text", out_col: str = "_hs",
-    k: int = SHINGLE_K,
-) -> DataFrame:
-    """Packed (h1 << 31) + h2 base-hash pair per shingle (one md5 per
-    shingle, shared by all hash families via double hashing)."""
-    return with_shingles(df, text_col, "_shingles", k).withColumn(
-        out_col, F.expr(hash_pairs_expr("_shingles"))
+    udf = F.pandas_udf(_fn, "struct<_sig:array<bigint>,_sh:array<bigint>>")
+    return df.select(id_col, udf(F.col(text_col)).alias("_k")).select(
+        id_col, "_k._sig", "_k._sh"
     )
 
 
@@ -371,6 +289,23 @@ def minhash_signatures(
     )
 
 
+def _bands(
+    sigs: DataFrame, id_col: str, n_hashes: int, band_size: int
+) -> DataFrame:
+    """(id, band_idx, band_sig) from a ``_sig_frame``: one row per band,
+    the band's signature slice md5-ed."""
+    n_bands = n_hashes // band_size
+    return sigs.select(
+        id_col,
+        F.posexplode(
+            F.expr(
+                f"transform(sequence(0, {n_bands - 1}), "
+                f"b -> md5(concat_ws(',', slice(_sig, b * {band_size} + 1, {band_size}))))"
+            )
+        ).alias("band_idx", "band_sig"),
+    )
+
+
 def lsh_band_table(
     df: DataFrame, text_col: str = "text", id_col: str = "doc_id",
     n_hashes: int = N_HASHES, band_size: int = BAND_SIZE,
@@ -380,18 +315,44 @@ def lsh_band_table(
     self-join (``lsh_candidate_pairs``) and the incremental probe
     (``incremental_lsh_pairs``, which accumulates this table as the
     durable band INDEX across batches)."""
-    n_bands = n_hashes // band_size
+    return _bands(_sig_frame(df, text_col, id_col, n_hashes), id_col,
+                  n_hashes, band_size)
+
+
+def _cap_buckets(bands: DataFrame, max_bucket_size: int | None) -> DataFrame:
+    """Drop the LSH buckets holding more than ``max_bucket_size`` docs
+    (None keeps every bucket): one aggregation on the SAME key the pair
+    join shuffles on (the exchange is reused), then a filter — buckets
+    above the cap never reach the join. See ``lsh_candidate_pairs``."""
+    if max_bucket_size is None:
+        return bands
+    sizes = bands.groupBy("band_idx", "band_sig").agg(
+        F.count(F.lit(1)).alias("_bn")
+    )
     return (
-        _sig_frame(df, text_col, id_col, n_hashes)
-        .select(
-            id_col,
-            F.posexplode(
-                F.expr(
-                    f"transform(sequence(0, {n_bands - 1}), "
-                    f"b -> md5(concat_ws(',', slice(_sig, b * {band_size} + 1, {band_size}))))"
-                )
-            ).alias("band_idx", "band_sig"),
+        bands.join(sizes, ["band_idx", "band_sig"])
+        .filter(F.col("_bn") <= max_bucket_size)
+        .drop("_bn")
+    )
+
+
+def _bucket_pairs(bands: DataFrame, id_col: str) -> DataFrame:
+    """(id_a < id_b) for every two docs sharing a bucket: one equi-join
+    keyed on (band_idx, band_sig)."""
+    a = bands.alias("a")
+    b = bands.alias("b")
+    return (
+        a.join(
+            b,
+            (F.col("a.band_idx") == F.col("b.band_idx"))
+            & (F.col("a.band_sig") == F.col("b.band_sig"))
+            & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")),
         )
+        .select(
+            F.col(f"a.{id_col}").alias("id_a"),
+            F.col(f"b.{id_col}").alias("id_b"),
+        )
+        .dropDuplicates(["id_a", "id_b"])
     )
 
 
@@ -417,37 +378,13 @@ def lsh_candidate_pairs(
     from ..session import ensure_optimizer_confs
 
     ensure_optimizer_confs(df.sparkSession)
-    bands = lsh_band_table(df, text_col, id_col, n_hashes, band_size)
-    if max_bucket_size is not None:
-        # one extra aggregation on the SAME key the join shuffles on (the
-        # exchange is reused), then filter — buckets above the cap never
-        # reach the pair join
-        sizes = bands.groupBy("band_idx", "band_sig").agg(
-            F.count(F.lit(1)).alias("_bn")
-        )
-        bands = (
-            bands.join(sizes, ["band_idx", "band_sig"])
-            .filter(F.col("_bn") <= max_bucket_size)
-            .drop("_bn")
-        )
     # the self-join would recompute the signature DAG for each side —
-    # persist (LRU-evictable) so shingle/minhash work runs once
-    bands = _persist(bands)
-    a = bands.alias("a")
-    b = bands.alias("b")
-    return (
-        a.join(
-            b,
-            (F.col("a.band_idx") == F.col("b.band_idx"))
-            & (F.col("a.band_sig") == F.col("b.band_sig"))
-            & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")),
-        )
-        .select(
-            F.col(f"a.{id_col}").alias("id_a"),
-            F.col(f"b.{id_col}").alias("id_b"),
-        )
-        .dropDuplicates(["id_a", "id_b"])
-    )
+    # persist (LRU-evictable) so the kernel runs once
+    bands = _persist(_cap_buckets(
+        lsh_band_table(df, text_col, id_col, n_hashes, band_size),
+        max_bucket_size,
+    ))
+    return _bucket_pairs(bands, id_col)
 
 
 # --------------------------------------------------------------------------
@@ -459,15 +396,14 @@ def jaccard_pairs(
     threshold: float = 0.8,
 ) -> DataFrame:
     """Exact shingle-Jaccard for every pair sharing ≥1 shingle, filtered to
-    J ≥ threshold. Shuffle keyed on shingle (inverted index) then on the
-    pair — at 100 TB this runs on LSH candidates instead of the full index
-    (compose: lsh_candidate_pairs → semi-join this)."""
+    J ≥ threshold. Shuffle keyed on shingle hash (inverted index) then on
+    the pair — at 100 TB this runs on LSH candidates instead of the full
+    index (compose: lsh_candidate_pairs → semi-join this)."""
     from ..session import ensure_optimizer_confs
 
     ensure_optimizer_confs(df.sparkSession)
-    sh = shingles_expr(text_col)
-    toks = (
-        df.select(id_col, F.explode(F.array_distinct(F.expr(sh))).alias("shingle"))
+    toks = _sig_frame(df, text_col, id_col).select(
+        id_col, F.explode("_sh").alias("shingle")
     )
     toks = _persist(toks)  # consumed 3x: both join sides + counts
     counts = toks.groupBy(id_col).agg(F.count(F.lit(1)).alias("n_sh"))
@@ -503,11 +439,17 @@ def jaccard_pairs(
     )
 
 
+def _jaccard(sa: str, sb: str):
+    """4-dp Jaccard of two distinct-shingle-hash array columns."""
+    n_inter = F.size(F.array_intersect(sa, sb))
+    return F.round(n_inter / (F.size(sa) + F.size(sb) - n_inter), 4
+                   ).cast("double")
+
+
 def lsh_verified_pairs(
     df: DataFrame, text_col: str = "text", id_col: str = "doc_id",
     threshold: float = 0.8,
     n_hashes: int = N_HASHES, band_size: int = BAND_SIZE,
-    prefilter_candidates: bool = False,
     max_bucket_size: int | None = None,
 ) -> DataFrame:
     """THE 100 TB near-dup path: banded-LSH candidate generation composed
@@ -516,24 +458,22 @@ def lsh_verified_pairs(
     co-occurrence, i.e. corpus size), verification here touches only pairs
     LSH already bucketed together, so total cost scales with the duplicate
     volume. Jaccard is computed per candidate pair from the two docs'
-    distinct-shingle arrays (array_intersect), matching jaccard_pairs'
+    distinct shingle hashes (array_intersect), matching jaccard_pairs'
     values exactly on shared pairs.
 
-    ``prefilter_candidates``: semi-join the corpus to candidate-pair ids
-    before shingling the verification sides. Turn ON at cluster scale,
-    where candidates are a small fraction of the corpus (~1% near-dup rate
-    → ~100x less verification scan+shingle work). OFF by default because
-    at small/dup-dense scale (tests, sf0.1 bench: candidates cover most
-    docs) the extra distinct+semi-join exchanges cost more than the
-    shingling they avoid (measured 1.7s → 5.2s on 6.7k docs). Result is
-    identical either way (equality-tested).
+    The signature frame is computed ONCE and persisted: its ``_sig``
+    column feeds the band table, its ``_sh`` column the verify gathers —
+    so each doc is shingled and hashed by one kernel pass.
+    ``max_bucket_size`` caps boilerplate buckets (see
+    ``lsh_candidate_pairs``)."""
+    from ..session import ensure_optimizer_confs
 
-    ``max_bucket_size`` is forwarded to ``lsh_candidate_pairs`` (boilerplate-
-    bucket cap — see there)."""
-    cand = lsh_candidate_pairs(df, text_col, id_col, n_hashes, band_size,
-                               max_bucket_size)
-    return jaccard_verify(df, cand, text_col, id_col, threshold,
-                          prefilter_candidates)
+    ensure_optimizer_confs(df.sparkSession)
+    frame = _persist(_sig_frame(df, text_col, id_col, n_hashes))
+    bands = _cap_buckets(_bands(frame, id_col, n_hashes, band_size),
+                         max_bucket_size)
+    cand = _persist(_bucket_pairs(bands, id_col))
+    return _verified(frame, cand, id_col, threshold)
 
 
 def similar_docs(
@@ -553,13 +493,12 @@ def similar_docs(
 
     Scale shape (100 TB corpus, handful-to-thousands of queries):
 
-    - The corpus is scanned ONCE for its band table; the query band table
-      (n_bands rows per query) is broadcast, so candidate generation is a
+    - The corpus is scanned ONCE: one persisted signature frame feeds both
+      its band table and the verification side; the query frame (n_bands
+      band rows per query) is broadcast, so candidate generation is a
       map-side BroadcastHashJoin — no corpus self-join, no corpus shuffle.
     - Exact Jaccard runs on candidates only (same candidate-bounded cost
-      argument as ``lsh_verified_pairs``); the corpus is semi-joined to
-      candidate ids BEFORE shingling the verification side, so the
-      shingle+intersect work is ∝ candidates, not corpus.
+      argument as ``lsh_verified_pairs``).
     - The per-query top-k window sees only that query's candidates —
       bounded by its duplicate family, never the corpus.
     - ``max_bucket_size`` (default None = exact) drops boilerplate buckets
@@ -574,62 +513,75 @@ def similar_docs(
     durable ``bands/v*`` parquet index the incremental dedup path
     accumulates (entry_queries_streaming.merge_dedup_labels /
     compact_band_index) — so serving skips re-banding the corpus
-    entirely: the probe reads the index, and the only corpus scan left is
-    shingling the candidate docs. Must have been built with the same
-    (n_hashes, band_size) and id/text columns; results are identical to
-    the from-scratch path (pytest-pinned)."""
+    entirely: the probe reads the index, and the only corpus work left is
+    shingling the candidate docs (the corpus is semi-joined to candidate
+    ids first). Must have been built with the same (n_hashes, band_size)
+    and id/text columns; results are identical to the from-scratch path
+    (pytest-pinned)."""
     from ..session import ensure_optimizer_confs
 
     ensure_optimizer_confs(df.sparkSession)
-    if band_index is not None:
-        bands = band_index
+    if band_index is None:
+        frame = _persist(_sig_frame(df, text_col, id_col, n_hashes))
+        bands = _bands(frame, id_col, n_hashes, band_size)
     else:
-        bands = lsh_band_table(df, text_col, id_col, n_hashes, band_size)
-    if max_bucket_size is not None:
-        sizes = bands.groupBy("band_idx", "band_sig").agg(
-            F.count(F.lit(1)).alias("_bn")
-        )
-        bands = (
-            bands.join(sizes, ["band_idx", "band_sig"])
-            .filter(F.col("_bn") <= max_bucket_size)
-            .drop("_bn")
-        )
-    q_bands = lsh_band_table(queries, text_col, id_col, n_hashes, band_size
-                             ).withColumnRenamed(id_col, "query_id")
+        bands = band_index
+    bands = _cap_buckets(bands, max_bucket_size)
+    q = _persist(_sig_frame(queries, text_col, id_col, n_hashes)
+                 ).withColumnRenamed(id_col, "query_id")
+    q_bands = _bands(q, "query_id", n_hashes, band_size)
     cand = (
         bands.join(F.broadcast(q_bands), ["band_idx", "band_sig"])
         .filter(F.col(id_col) != F.col("query_id"))
         .select("query_id", id_col)
         .distinct()
     )
-    cand = _persist(cand)  # feeds the semi-join AND the verify join
-    corpus_sh = (
-        with_shingles(df.join(cand.select(id_col).distinct(),
-                              id_col, "left_semi"), text_col)
-        .select(id_col, F.array_distinct(F.col("_shingles")).alias("_sb"))
-    )
-    q_sh = (
-        with_shingles(queries, text_col)
-        .select(F.col(id_col).alias("query_id"),
-                F.array_distinct(F.col("_shingles")).alias("_sa"))
-    )
-    n_inter = F.size(F.array_intersect("_sa", "_sb"))
+    if band_index is not None:
+        cand = _persist(cand)  # feeds the semi-join AND the verify join
+        frame = _sig_frame(
+            df.join(cand.select(id_col).distinct(), id_col, "left_semi"),
+            text_col, id_col, n_hashes,
+        )
+    corpus_sh = frame.select(id_col, F.col("_sh").alias("_sb"))
+    q_sh = q.select("query_id", F.col("_sh").alias("_sa"))
     w = Window.partitionBy("query_id").orderBy(
         F.desc("jaccard"), F.asc(id_col)
     )
     return (
         cand.join(corpus_sh, id_col)
         .join(F.broadcast(q_sh), "query_id")
-        .withColumn(
-            "jaccard",
-            F.round(
-                n_inter / (F.size("_sa") + F.size("_sb") - n_inter), 4
-            ).cast("double"),
-        )
+        .withColumn("jaccard", _jaccard("_sa", "_sb"))
         .withColumn("rank", F.row_number().over(w))
         .filter(F.col("rank") <= k)
         .select("query_id", id_col, "jaccard",
                 F.col("rank").cast("int").alias("rank"))
+    )
+
+
+def _verified(
+    frame: DataFrame, cand: DataFrame, id_col: str, threshold: float
+) -> DataFrame:
+    """(id_a, id_b, jaccard ≥ threshold) for the candidate pairs, reading
+    both endpoints' ``_sh`` from a signature frame. Each input is read
+    twice: pass both persisted. The two endpoints are gathered by TWO
+    INDEPENDENT id-keyed joins whose halves then join on (id_a, id_b), so
+    array payloads shuffle ∝ candidates only (a serial cand⋈a⋈b chain
+    re-shuffled the growing intermediate: 3.65s → 2.93s at sf1.0)."""
+    r1 = frame.join(cand, frame[id_col] == cand["id_a"]).select(
+        "id_a", "id_b", F.col("_sh").alias("_sa")
+    )
+    r2 = frame.join(cand, frame[id_col] == cand["id_b"]).select(
+        F.col("id_a").alias("_ia"), F.col("id_b").alias("_ib"),
+        F.col("_sh").alias("_sb"),
+    )
+    return (
+        r1.join(
+            r2,
+            (r1["id_a"] == r2["_ia"]) & (r1["id_b"] == r2["_ib"]),
+        )
+        .withColumn("jaccard", _jaccard("_sa", "_sb"))
+        .filter(F.col("jaccard") >= threshold)
+        .select("id_a", "id_b", "jaccard")
     )
 
 
@@ -639,71 +591,40 @@ def jaccard_verify(
     prefilter_candidates: bool = False,
 ) -> DataFrame:
     """Exact shingle-Jaccard verification of a candidate pair list
-    (id_a, id_b) against the corpus — the shared back half of
-    ``lsh_verified_pairs`` and the incremental probe path. See
-    ``lsh_verified_pairs`` for the ``prefilter_candidates`` trade-off.
+    (id_a, id_b) against the corpus — the back half of the incremental
+    probe path (``incremental_dedup_batch``). It computes its own
+    signature frame; ``lsh_verified_pairs`` shares one frame between its
+    band table and verification instead.
 
-    Join shape (round 6): both endpoints' shingle arrays are gathered by
-    TWO INDEPENDENT joins of the pair list against the (persisted) shingle
-    table — both keyed on the doc id, so the shingle table's exchange is
-    planned once and reused — and the two array-carrying halves then join
-    on the full (id_a, id_b) pair key. The previous serial
-    cand⋈a⋈b chain re-shuffled the array payload of the growing
-    intermediate between the two joins; this shape shuffles array payloads
-    ∝ candidates only and runs the two gathers as independent stages
-    (measured 3.65s → 2.93s at sf1.0, identical output)."""
+    ``prefilter_candidates``: semi-join the corpus to candidate-pair ids
+    before shingling. Turn ON when candidates are a small fraction of the
+    corpus (a micro-batch's delta against the whole corpus; ~1% near-dup
+    rate → ~100x less shingling); at dup-dense scale, where candidates
+    cover most docs, the extra distinct + semi-join exchanges cost more
+    than the shingling they avoid. The result is identical either way
+    (equality-tested)."""
     cand = _persist(cand.select("id_a", "id_b"))  # both gathers + pair join
-    base = df
     if prefilter_candidates:
         cand_ids = (
             cand.select(F.col("id_a").alias(id_col))
             .union(cand.select(F.col("id_b").alias(id_col)))
             .distinct()
         )
-        base = df.join(cand_ids, id_col, "left_semi")
-    # persist: the shingle table feeds BOTH gathers — without it the regex
-    # shingling of the corpus runs twice (measured ~0.9s per pass at sf1.0)
-    sh = _persist(
-        with_shingles(base, text_col).select(
-            id_col, F.array_distinct(F.col("_shingles")).alias("_sh")
-        )
-    )
-    r1 = sh.join(cand, sh[id_col] == cand["id_a"]).select(
-        "id_a", "id_b", F.col("_sh").alias("_sa")
-    )
-    r2 = sh.join(cand, sh[id_col] == cand["id_b"]).select(
-        F.col("id_a").alias("_ia"), F.col("id_b").alias("_ib"),
-        F.col("_sh").alias("_sb"),
-    )
-    n_inter = F.size(F.array_intersect("_sa", "_sb"))
-    return (
-        r1.join(
-            r2,
-            (r1["id_a"] == r2["_ia"]) & (r1["id_b"] == r2["_ib"]),
-        )
-        .withColumn(
-            "jaccard",
-            F.round(
-                n_inter
-                / (F.size("_sa") + F.size("_sb") - n_inter),
-                4,
-            ).cast("double"),
-        )
-        .filter(F.col("jaccard") >= threshold)
-        .select("id_a", "id_b", "jaccard")
-    )
+        df = df.join(cand_ids, id_col, "left_semi")
+    frame = _persist(_sig_frame(df, text_col, id_col).select(id_col, "_sh"))
+    return _verified(frame, cand, id_col, threshold)
 
 
 # --------------------------------------------------------------------------
 # near-dup connected components (cluster collapse / keeper selection)
 # --------------------------------------------------------------------------
 
-def _unionfind_remap(rows) -> list:
-    """Driver-side union-find over a bounded pair list: returns
-    ``(node, root)`` tuples for every non-root member, roots being the MIN
-    id of each component — exactly the min-label CC contract. Shared by
-    ``incremental_components`` and the bounded fast path of
-    ``connected_components``."""
+def _unionfind_remap(spark, rows, id_type: T.DataType) -> DataFrame:
+    """Driver-side union-find over a bounded pair list: returns the
+    ``(_old, _new)`` DataFrame mapping every non-root member to its root,
+    roots being the MIN id of each component — exactly the min-label CC
+    contract. Shared by ``incremental_components`` and the bounded fast
+    path of ``connected_components``."""
     parent: dict = {}
 
     def find(x):
@@ -718,13 +639,12 @@ def _unionfind_remap(rows) -> list:
         ra, rb = find(row["id_a"]), find(row["id_b"])
         if ra != rb:
             parent[max(ra, rb)] = min(ra, rb)
-    groups: dict = {}
-    for n in parent:
-        groups.setdefault(find(n), []).append(n)
-    return [
-        (n, root) for root, members in groups.items()
-        for n in members if n != root
-    ]
+    remap = [(n, r) for n in parent if (r := find(n)) != n]
+    schema = T.StructType([
+        T.StructField("_old", id_type),
+        T.StructField("_new", id_type),
+    ])
+    return spark.createDataFrame(remap, schema)
 
 
 def connected_components(
@@ -780,13 +700,8 @@ def connected_components(
     if driver_threshold > 0:
         rows = pairs.limit(driver_threshold + 1).collect()
         if len(rows) <= driver_threshold:
-            remap_rows = _unionfind_remap(rows)
-            id_type = docs.schema[id_col].dataType
-            schema = T.StructType([
-                T.StructField("_old", id_type),
-                T.StructField("_new", id_type),
-            ])
-            remap = docs.sparkSession.createDataFrame(remap_rows, schema)
+            remap = _unionfind_remap(docs.sparkSession, rows,
+                                     docs.schema[id_col].dataType)
             return docs.select(id_col).join(
                 F.broadcast(remap),
                 F.col(id_col) == F.col("_old"), "left"
@@ -1094,15 +1009,9 @@ def incremental_components(
     if driver_threshold > 0:
         ce_rows = ce.limit(driver_threshold + 1).collect()
         if len(ce_rows) <= driver_threshold:
-            remap_rows = _unionfind_remap(ce_rows)
-            id_type = ce.schema["id_a"].dataType
-            schema = T.StructType([
-                T.StructField("_old", id_type),
-                T.StructField("_new", id_type),
-            ])
-            remap = _persist(
-                prev_labels.sparkSession.createDataFrame(remap_rows, schema)
-            )
+            remap = _persist(_unionfind_remap(
+                prev_labels.sparkSession, ce_rows, ce.schema["id_a"].dataType
+            ))
     if remap is None:
         remap = _persist(
             connected_components(snodes, ce, id_col=id_col, max_iter=max_iter)
@@ -1160,16 +1069,10 @@ def incremental_lsh_pairs(
     nb = _persist(
         lsh_band_table(new_docs, text_col, id_col, n_hashes, band_size)
     )
-    all_b = nb if band_index is None else band_index.unionByName(nb)
-    if max_bucket_size is not None:
-        sizes = all_b.groupBy("band_idx", "band_sig").agg(
-            F.count(F.lit(1)).alias("_bn")
-        )
-        all_b = (
-            all_b.join(sizes, ["band_idx", "band_sig"])
-            .filter(F.col("_bn") <= max_bucket_size)
-            .drop("_bn")
-        )
+    all_b = _cap_buckets(
+        nb if band_index is None else band_index.unionByName(nb),
+        max_bucket_size,
+    )
     a = nb.alias("a")
     b = all_b.alias("b")
     pairs = (
@@ -1275,30 +1178,26 @@ SIMHASH_BITS = 16
 def simhash_signatures(
     df: DataFrame, text_col: str = "text", id_col: str = "doc_id"
 ) -> DataFrame:
-    # materialize shingles, then per-shingle hashes, then the bit fold —
-    # each computed once per row, not once per bit
-    return (
-        with_shingles(df, text_col)
-        .withColumn(
-            "_hashes", F.expr(f"transform(_shingles, s -> {_h64('s')})")
-        )
-        .select(
-            id_col,
-            # the double reference to _hashes (size guard) stops
-            # CollapseProject from inlining the md5 pipeline into the per-bit
-            # lambda (same trap as minhash_sig_expr)
-            F.expr(
-                f"""
-    CASE WHEN size(_hashes) = -1 THEN NULL ELSE
-    aggregate(sequence(0, {SIMHASH_BITS - 1}), CAST(0 AS BIGINT),
-      (acc, b) -> acc + CASE WHEN
-        aggregate(_hashes, 0, (c, h64) ->
-          c + CASE WHEN shiftright(h64, b) % 2 = 1 THEN 1 ELSE -1 END) > 0
-        THEN CAST(pow(2, b) AS BIGINT) ELSE CAST(0 AS BIGINT) END) END
-    """.strip()
-            ).alias("simhash"),
-        )
-    )
+    """(id, simhash bigint): a ``SIMHASH_BITS``-bit sign-sum sketch over
+    the word shingles of ``_shingle_digests`` — bit b is set iff more
+    shingles (repeats counted) have bit b of their 60-bit h1 set than
+    clear. A NULL text gets 0. One Arrow-batched pass, like
+    ``_sig_frame``."""
+
+    def _fn(texts: pd.Series) -> pd.Series:
+        counts, h1, _ = _shingle_digests(texts.tolist())
+        out = np.zeros(len(counts), dtype=np.int64)
+        live = np.flatnonzero(counts >= 0)
+        if live.size:
+            n = counts[live]
+            b = np.arange(SIMHASH_BITS, dtype=np.int64)
+            ones = np.add.reduceat((h1[:, None] >> b) & 1, np.cumsum(n) - n,
+                                   axis=0)
+            out[live] = ((2 * ones > n[:, None]) << b).sum(axis=1)
+        return pd.Series(out)
+
+    udf = F.pandas_udf(_fn, "bigint")
+    return df.select(id_col, udf(F.col(text_col)).alias("simhash"))
 
 
 def simhash_near_pairs(

@@ -29,11 +29,14 @@ from contextlib import contextmanager
 from pyspark.sql import SparkSession
 
 # InferFiltersFromGenerate injects `size(e) > 0 AND isnotnull(e)` beneath
-# every explode; with our higher-order-function span pipeline the generator
-# input is an expensive nested aggregate, and predicate pushdown substitutes
-# it INTO the filter — the whole tagger then runs ~3× per row (measured 4.5×
-# slowdown on the flagship query). The runtime explode already skips empty
-# arrays, so the inferred filter is pure overhead here.
+# every (pos)explode, and predicate pushdown substitutes the generator's
+# input expression INTO that filter, so the input is computed twice per row
+# (measured 4.5× on an earlier higher-order-function span tagger). The
+# generators it still guards take computed arrays: the LSH band table's
+# posexplode over md5-ed signature slices (dedup._bands), SimHash's chunk
+# posexplode and fuzzy's char-n-gram explode and band posexplode. The
+# runtime explode already skips empty arrays, so the inferred filter is
+# pure overhead here.
 EXCLUDED_OPTIMIZER_RULES = (
     "org.apache.spark.sql.catalyst.optimizer.InferFiltersFromGenerate"
 )

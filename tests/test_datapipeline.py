@@ -80,38 +80,6 @@ def test_lsh_skewed_boilerplate_bucket_cap(spark):
     assert not any(a < 200 and b < 200 for a, b in verified)
 
 
-def test_shingles_expr_matches_python_reference(spark):
-    """The one-regex-scan shingle implementation must equal the definition
-    (k-word windows over split-on-space words, empties dropped; short docs
-    yield the whole text) on adversarial whitespace/unicode inputs."""
-    import random
-
-    rng = random.Random(7)
-    pieces = ["a", "bb", "한국", "서울시", "x1", "--", "a\tb", "c\nd",
-              "é", "𝄞", ".", "word"]
-    texts = [""]
-    for _ in range(300):
-        n = rng.randint(0, 8)
-        sep = lambda: " " * rng.randint(1, 3)  # noqa: E731
-        t = sep().join(rng.choice(pieces) for _ in range(n))
-        if rng.random() < 0.3:
-            t = " " + t + "  "
-        texts.append(t)
-
-    def ref_shingles(text, k=3):
-        words = [w for w in text.split(" ") if w]
-        if len(words) < k:
-            return [" ".join(words)]
-        return [" ".join(words[i:i + k]) for i in range(len(words) - k + 1)]
-
-    df = spark.createDataFrame([(i, t) for i, t in enumerate(texts)],
-                               "i int, text string")
-    got = {r["i"]: r["s"] for r in df.selectExpr(
-        "i", f"{dedup.shingles_expr('text')} AS s").collect()}
-    for i, t in enumerate(texts):
-        assert got[i] == ref_shingles(t), repr(t)
-
-
 def test_lsh_verified_pairs_composition(spark, sf_smoke):
     """The scale path (LSH candidates → exact Jaccard on candidates only)
     must equal the exhaustive inverted-index Jaccard restricted to LSH
@@ -132,8 +100,9 @@ def test_lsh_verified_pairs_composition(spark, sf_smoke):
     assert all(verified[p] == 1.0 for p in exact_pairs)
     # the cluster-scale candidate prefilter changes the plan, not the result
     prefiltered = {(r["id_a"], r["id_b"]): r["jaccard"]
-                   for r in dedup.lsh_verified_pairs(
-                       df, prefilter_candidates=True).collect()}
+                   for r in dedup.jaccard_verify(
+                       df, dedup.lsh_candidate_pairs(df),
+                       prefilter_candidates=True).collect()}
     assert prefiltered == verified
 
 
@@ -453,8 +422,9 @@ def test_dedup_cache_scope_releases_blocks(spark, sf_smoke):
             assert dedup.lsh_verified_pairs(docs).count() >= 0
             assert dedup.jaccard_pairs(docs).count() >= 0
             assert dedup.simhash_near_pairs(docs).count() >= 0
-            assert dedup.lsh_verified_pairs(
-                docs, prefilter_candidates=True).count() >= 0
+            assert dedup.jaccard_verify(
+                docs, dedup.lsh_candidate_pairs(docs),
+                prefilter_candidates=True).count() >= 0
     # no NEW persisted RDDs with live blocks remain
     assert _no_new_residual(sc, baseline) == set()
     # the full dedup_near chain inside a scope leaves nothing cached:

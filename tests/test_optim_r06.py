@@ -12,59 +12,117 @@ from extract_address_ner_spark.operators import dedup
 from extract_address_ner_spark.session import scale_partitions
 
 
+EDGE_TEXTS = [
+    "서울특별시 강남구 테헤란로 123번길 45 the fast key order sort table scan",
+    "the fast key order sort table scan merge part window small hash",
+    "DUP the fast key order sort table scan merge part window small hash",
+    "one two",  # < k words → whole-text shingle
+    "",  # empty → single empty shingle
+    "  spaced   out   tokens   here   now  ",  # space runs
+    None,  # NULL text
+    "the fast key order sort table scan merge part window small hash",
+    "a b c a b c a b c a b",  # repeated shingles: 3 distinct of 9
+]
+
+
 @pytest.fixture()
 def docs(spark):
-    rows = [
-        (1, "서울특별시 강남구 테헤란로 123번길 45 the fast key order sort table scan"),
-        (2, "the fast key order sort table scan merge part window small hash"),
-        (3, "DUP the fast key order sort table scan merge part window small hash"),
-        (4, "one two"),  # < k words → whole-text shingle
-        (5, ""),  # empty → single empty shingle
-        (6, "  spaced   out   tokens   here   now  "),  # space runs
-        (7, None),  # NULL text
-        (8, "the fast key order sort table scan merge part window small hash"),
-    ]
-    return spark.createDataFrame(rows, "doc_id int, text string")
+    return spark.createDataFrame(list(enumerate(EDGE_TEXTS, start=1)),
+                                 "doc_id int, text string")
 
 
 def _rows(df):
     return sorted(tuple(r) for r in df.collect())
 
 
-def test_minhash_arrow_matches_expr_signatures_and_bands(docs):
-    """The Arrow kernel behind _sig_frame is byte-identical to the SQL
-    expression minhash_sig_expr, and the band table bands those exact
-    signatures."""
-    sig_arrow = _rows(dedup._sig_frame(docs, "text", "doc_id"))
-    sig_expr = _rows(dedup.with_shingle_hashes(docs, "text").select(
-        "doc_id", F.expr(dedup.minhash_sig_expr("_hs")).alias("_sig")))
-    assert sig_arrow == sig_expr
+def _reference(text):
+    """The word-shingle kernel's definition in plain Python: ``(sig, sh,
+    simhash)`` of one text. Words come from split(" ") with empties
+    dropped; a doc shorter than k words is one shingle of its words; each
+    shingle's md5 hex gives h1 = hex[:15] and h2 = hex[15:30]."""
+    n, k, m31 = dedup.N_HASHES, dedup.SHINGLE_K, dedup.M31
+    if text is None:
+        return [None] * n, None, 0
+    words = [w for w in text.split(" ") if w]
+    shingles = ([" ".join(words)] if len(words) < k else
+                [" ".join(words[i:i + k]) for i in range(len(words) - k + 1)])
+    hexes = [hashlib.md5(s.encode("utf-8")).hexdigest() for s in shingles]
+    h = [(int(m[:15], 16), int(m[15:30], 16)) for m in hexes]
+    sig = [min((h1 % m31 + j * (h2 % m31)) % m31 for h1, h2 in h)
+           for j in range(n)]
+    sh = sorted({(h1 % m31) << 31 | (h2 % m31) for h1, h2 in h})
+    simhash = sum(
+        1 << b for b in range(dedup.SIMHASH_BITS)
+        if sum(1 if h1 >> b & 1 else -1 for h1, _ in h) > 0
+    )
+    return sig, sh, simhash
+
+
+def _random_texts():
+    """300 adversarial whitespace/unicode texts: tabs and newlines inside
+    tokens, astral chars, runs of 1-3 spaces, leading/trailing spaces."""
+    import random
+
+    rng = random.Random(7)
+    pieces = ["a", "bb", "한국", "서울시", "x1", "--", "a\tb", "c\nd",
+              "é", "𝄞", ".", "word"]
+    texts = [""]
+    for _ in range(300):
+        n = rng.randint(0, 8)
+        sep = lambda: " " * rng.randint(1, 3)  # noqa: E731
+        t = sep().join(rng.choice(pieces) for _ in range(n))
+        if rng.random() < 0.3:
+            t = " " + t + "  "
+        texts.append(t)
+    return texts
+
+
+def test_minhash_arrow_matches_python_reference(spark, docs):
+    """_sig_frame's signature and shingle hashes, and simhash_signatures,
+    equal the plain-Python definition on the edge docs and 300 random
+    whitespace/unicode texts; the band table bands those signatures."""
+    texts = EDGE_TEXTS + _random_texts()
+    df = spark.createDataFrame(list(enumerate(texts)), "doc_id int, text string")
+    frame = {r["doc_id"]: (r["_sig"], r["_sh"])
+             for r in dedup._sig_frame(df, "text", "doc_id").collect()}
+    simhash = dict(dedup.simhash_signatures(df).collect())
+    for i, t in enumerate(texts):
+        sig, sh, sim = _reference(t)
+        assert frame[i] == (sig, sh), repr(t)
+        assert simhash[i] == sim, repr(t)
     # concat_ws skips NULL elements: an all-NULL band hashes md5('')
-    band_expr = sorted(
+    band_ref = sorted(
         (doc_id, b, hashlib.md5(",".join(
             str(v) for v in sig[b * dedup.BAND_SIZE:(b + 1) * dedup.BAND_SIZE]
             if v is not None).encode()).hexdigest())
-        for doc_id, sig in sig_expr
+        for doc_id, sig in _rows(dedup._sig_frame(docs, "text", "doc_id")
+                                 .select("doc_id", "_sig"))
         for b in range(dedup.N_HASHES // dedup.BAND_SIZE)
     )
-    assert _rows(dedup.lsh_band_table(docs)) == band_expr
+    assert _rows(dedup.lsh_band_table(docs)) == band_ref
     # every doc emits 16 rows — the NULL-text doc emits NULL minhashes
-    # (ANSI size(NULL) semantics of the expression path, mirrored exactly)
     long_rows = _rows(dedup.minhash_signatures(docs))
-    assert len(long_rows) == 8 * dedup.N_HASHES
+    assert len(long_rows) == len(EDGE_TEXTS) * dedup.N_HASHES
     assert sum(1 for r in long_rows if r[2] is None) == dedup.N_HASHES
 
 
 def test_minhash_batch_kernel_edge_cases():
-    out = dedup._minhash_sigs_batch([None, "", "a b", "a b c d"])
-    assert list(out[0]) == [None] * dedup.N_HASHES
-    assert out[1] is not None and len(out[1]) == dedup.N_HASHES
+    texts = [None, "", "a b", "a b c d", "a b c a b c a b c a b"]
+    sigs, shs = dedup._minhash_batch(texts)
+    for t, sig, sh in zip(texts, sigs, shs):
+        ref_sig, ref_sh, _ = _reference(t)
+        assert list(sig) == ref_sig, repr(t)
+        assert (None if sh is None else list(sh)) == ref_sh, repr(t)
+    assert shs[0] is None and list(sigs[0]) == [None] * dedup.N_HASHES
     # 2-word doc hashes the whole normalized text as ONE shingle
     m = hashlib.md5(b"a b").hexdigest()
-    h1 = int(m[:15], 16) % dedup.M31
-    assert out[2][0] == h1 % dedup.M31
-    # 4-word doc: 2 shingles, sig[j] is the min over both
-    assert len(out[3]) == dedup.N_HASHES
+    assert list(shs[2]) == [(int(m[:15], 16) % dedup.M31) << 31
+                            | int(m[15:30], 16) % dedup.M31]
+    # repeated shingles: 9 shingles, 3 distinct hashes
+    assert len(shs[4]) == 3
+    # an all-NULL batch still returns one row per text
+    assert dedup._minhash_batch([None, None]) == (
+        [[None] * dedup.N_HASHES] * 2, [None, None])
 
 
 def test_connected_components_driver_fastpath_identity(spark):

@@ -424,3 +424,21 @@ def test_label_propagation_no_window_no_cartesian(spark):
     assert "BroadcastNestedLoopJoin" not in plan, plan
     assert "Window" not in plan, plan
     assert "row_number" not in plan, plan
+
+
+def test_word_shingles_come_from_the_arrow_kernel_only(spark, sf_smoke):
+    """Every word-shingle operator reads the Arrow kernel's frame
+    (ArrowEvalPython): no plan cuts shingles a second way, with the SQL
+    regex (regexp_extract_all)."""
+    from extract_address_ner_spark.entry_queries_data import dup_documents
+    from extract_address_ner_spark.operators import dedup
+
+    docs = dup_documents(spark, sf_smoke).limit(50)
+    qs = docs.limit(3)
+    with dedup.dedup_cache_scope():
+        for df in (dedup.lsh_verified_pairs(docs), dedup.jaccard_pairs(docs),
+                   dedup.similar_docs(docs, qs),
+                   dedup.simhash_signatures(docs)):
+            plan = _plan(df)
+            assert "regexp_extract_all" not in plan
+            assert "ArrowEvalPython" in plan
