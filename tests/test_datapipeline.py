@@ -80,6 +80,64 @@ def test_lsh_skewed_boilerplate_bucket_cap(spark):
     assert not any(a < 200 and b < 200 for a, b in verified)
 
 
+def test_shingles_expr_matches_python_reference(spark):
+    """The Arrow kernel's shingler must equal the definition (k-word
+    windows over split-on-space words, empties dropped; short docs yield
+    the whole text) on adversarial whitespace/unicode inputs: the same
+    shingles, md5-hashed in order, and the same distinct hashes in
+    _sig_frame's shingle set."""
+    import hashlib
+    import random
+
+    rng = random.Random(7)
+    pieces = ["a", "bb", "한국", "서울시", "x1", "--", "a\tb", "c\nd",
+              "é", "𝄞", ".", "word"]
+    texts = [""]
+    for _ in range(300):
+        n = rng.randint(0, 8)
+        sep = lambda: " " * rng.randint(1, 3)  # noqa: E731
+        t = sep().join(rng.choice(pieces) for _ in range(n))
+        if rng.random() < 0.3:
+            t = " " + t + "  "
+        texts.append(t)
+
+    def ref_shingles(text, k=3):
+        words = [w for w in text.split(" ") if w]
+        if len(words) < k:
+            return [" ".join(words)]
+        return [" ".join(words[i:i + k]) for i in range(len(words) - k + 1)]
+
+    def ref_digests(text):
+        hexes = [hashlib.md5(s.encode("utf-8")).hexdigest()
+                 for s in ref_shingles(text)]
+        return [(int(m[:15], 16), int(m[15:30], 16)) for m in hexes]
+
+    counts, h1, h2 = dedup._shingle_digests(texts)
+    pos = 0
+    for t, c in zip(texts, counts):
+        ref = ref_digests(t)
+        assert c == len(ref), repr(t)
+        assert list(zip(h1[pos:pos + c], h2[pos:pos + c])) == ref, repr(t)
+        pos += c
+    assert pos == len(h1) == len(h2)
+
+    m31 = dedup.M31
+    df = spark.createDataFrame([(i, t) for i, t in enumerate(texts)],
+                               "i int, text string")
+    got = {r["i"]: (r["_sig"], r["_sh"])
+           for r in dedup._sig_frame(df, "text", "i").collect()}
+    simhash = dict(dedup.simhash_signatures(df, id_col="i").collect())
+    for i, t in enumerate(texts):
+        h = ref_digests(t)
+        sig = [min((a % m31 + j * (b % m31)) % m31 for a, b in h)
+               for j in range(dedup.N_HASHES)]
+        sh = sorted({(a % m31) << 31 | (b % m31) for a, b in h})
+        assert got[i] == (sig, sh), repr(t)
+        assert simhash[i] == sum(
+            1 << bit for bit in range(dedup.SIMHASH_BITS)
+            if sum(1 if a >> bit & 1 else -1 for a, _ in h) > 0), repr(t)
+
+
 def test_lsh_verified_pairs_composition(spark, sf_smoke):
     """The scale path (LSH candidates → exact Jaccard on candidates only)
     must equal the exhaustive inverted-index Jaccard restricted to LSH

@@ -58,35 +58,14 @@ def _reference(text):
     return sig, sh, simhash
 
 
-def _random_texts():
-    """300 adversarial whitespace/unicode texts: tabs and newlines inside
-    tokens, astral chars, runs of 1-3 spaces, leading/trailing spaces."""
-    import random
-
-    rng = random.Random(7)
-    pieces = ["a", "bb", "한국", "서울시", "x1", "--", "a\tb", "c\nd",
-              "é", "𝄞", ".", "word"]
-    texts = [""]
-    for _ in range(300):
-        n = rng.randint(0, 8)
-        sep = lambda: " " * rng.randint(1, 3)  # noqa: E731
-        t = sep().join(rng.choice(pieces) for _ in range(n))
-        if rng.random() < 0.3:
-            t = " " + t + "  "
-        texts.append(t)
-    return texts
-
-
-def test_minhash_arrow_matches_python_reference(spark, docs):
+def test_minhash_arrow_matches_expr_signatures_and_bands(spark, docs):
     """_sig_frame's signature and shingle hashes, and simhash_signatures,
-    equal the plain-Python definition on the edge docs and 300 random
-    whitespace/unicode texts; the band table bands those signatures."""
-    texts = EDGE_TEXTS + _random_texts()
-    df = spark.createDataFrame(list(enumerate(texts)), "doc_id int, text string")
+    equal the plain-Python definition on the edge docs; the band table
+    bands those signatures."""
     frame = {r["doc_id"]: (r["_sig"], r["_sh"])
-             for r in dedup._sig_frame(df, "text", "doc_id").collect()}
-    simhash = dict(dedup.simhash_signatures(df).collect())
-    for i, t in enumerate(texts):
+             for r in dedup._sig_frame(docs, "text", "doc_id").collect()}
+    simhash = dict(dedup.simhash_signatures(docs).collect())
+    for i, t in enumerate(EDGE_TEXTS, start=1):
         sig, sh, sim = _reference(t)
         assert frame[i] == (sig, sh), repr(t)
         assert simhash[i] == sim, repr(t)
@@ -95,8 +74,7 @@ def test_minhash_arrow_matches_python_reference(spark, docs):
         (doc_id, b, hashlib.md5(",".join(
             str(v) for v in sig[b * dedup.BAND_SIZE:(b + 1) * dedup.BAND_SIZE]
             if v is not None).encode()).hexdigest())
-        for doc_id, sig in _rows(dedup._sig_frame(docs, "text", "doc_id")
-                                 .select("doc_id", "_sig"))
+        for doc_id, (sig, _) in sorted(frame.items())
         for b in range(dedup.N_HASHES // dedup.BAND_SIZE)
     )
     assert _rows(dedup.lsh_band_table(docs)) == band_ref
