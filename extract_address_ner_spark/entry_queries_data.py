@@ -1344,94 +1344,3 @@ def q_text_normalize(spark: SparkSession, sf_dir: str) -> DataFrame:
     return normalize_text(spark.sql(NORM_DOCS)).select(
         "doc_id", "text_norm", "changed"
     )
-
-
-# --------------------------------------------------------------------------
-# deterministic sampling & corpus mixing
-# --------------------------------------------------------------------------
-
-from .operators.sampling import (  # noqa: E402
-    hash_bucket_sql,
-    hash_sample,
-    mix_corpora,
-    mix_corpora_sql,
-    stratified_quota_sample,
-    stratified_quota_sql,
-)
-
-#: The three "sources" the mixture query draws from (doc_id % 3 classes of
-#: the documents table), expressed once in the shared dialect subset so both
-#: engines see identical inputs. Weights 0.6/0.3/0.1 at target 300: the
-#: biggest weight EXCEEDS its source's size (~167 rows at sf0.01), so the
-#: keep-all cap branch is exercised alongside the thinning branch.
-_MIX_PARTS_SQL = [
-    ("web", "SELECT doc_id, lang FROM documents WHERE doc_id % 3 = 0", 0.6),
-    ("books", "SELECT doc_id, lang FROM documents WHERE doc_id % 3 = 1", 0.3),
-    ("code", "SELECT doc_id, lang FROM documents WHERE doc_id % 3 = 2", 0.1),
-]
-_MIX_TARGET = 300
-
-
-@register(
-    "docs_hash_sample",
-    "SELECT doc_id, lang FROM documents WHERE "
-    + hash_bucket_sql("doc_id", 42, duck=True)
-    + " < 250000",
-    # pytest-carried (tests/test_registry_oracles.py): driver registry is at
-    # its 50-entry cap.
-    driver=False,
-)
-def q_hash_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Deterministic 25% Bernoulli sample: membership is a pure function of
-    (seed, doc_id) — reproducible across runs, partitionings, and engines
-    (df.sample is none of those). Pure narrow filter, zero Exchange
-    (pinned in tests/test_sampling.py)."""
-    register_documents(spark, sf_dir)
-    return hash_sample(
-        spark.sql("SELECT doc_id, lang FROM documents"), 0.25
-    )
-
-
-@register(
-    "docs_stratified_sample",
-    stratified_quota_sql(
-        "SELECT doc_id, lang FROM documents", "lang", 40,
-        select_cols="doc_id, lang",
-    ),
-    # pytest-carried (tests/test_registry_oracles.py): driver registry is at
-    # its 50-entry cap.
-    driver=False,
-)
-def q_stratified_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-language quota of 40 docs, chosen as the 40 smallest (hash, key)
-    rows per group — a deterministic per-group reservoir. Two-phase: big
-    groups (en holds ~44% of the corpus) are prefiltered to ~oversample·quota
-    smallest-hash rows before the exact row_number window, so the per-group
-    sort is bounded no matter how skewed the group sizes are (the 100 TB
-    shape; see operators/sampling.py scale notes)."""
-    register_documents(spark, sf_dir)
-    return stratified_quota_sample(
-        spark.sql("SELECT doc_id, lang FROM documents"), "lang", 40
-    )
-
-
-@register(
-    "docs_corpus_mix",
-    mix_corpora_sql(_MIX_PARTS_SQL, _MIX_TARGET, select_cols="doc_id, lang"),
-    # pytest-carried (tests/test_registry_oracles.py): driver registry is at
-    # its 50-entry cap.
-    driver=False,
-)
-def q_corpus_mix(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Weighted three-source mixture at target 300 rows: each source keeps a
-    hash sample sized weight·target in expectation (capped at the source's
-    size — the 'web' source is smaller than its 0.6 share and is kept
-    whole). Keep-fractions are computed IN the plan (broadcast one-row
-    count joined back), so the mixture is lazy end-to-end with no driver
-    collect, and the cuts nest: raising the target keeps every previously
-    selected row."""
-    register_documents(spark, sf_dir)
-    parts = [
-        (name, spark.sql(sql), w) for name, sql, w in _MIX_PARTS_SQL
-    ]
-    return mix_corpora(parts, _MIX_TARGET)

@@ -724,10 +724,6 @@ def read_edge_snapshot(
     return spark.read.schema(EDGE_SCHEMA).parquet(*paths)
 
 
-def _latest_edge_snapshot(spark: SparkSession, edges_root: str):
-    return read_edge_snapshot(spark, edges_root)
-
-
 @register("streaming_graph_edges", None)  # oracle attached below (shared)
 def q_streaming_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     """INCREMENTAL KG construction end-to-end: the corpus arrives as three
@@ -772,7 +768,7 @@ def q_streaming_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
             .start()
         )
         q.awaitTermination()
-        out = _latest_edge_snapshot(spark, edges_root)
+        out = read_edge_snapshot(spark, edges_root)
         assert out is not None, "stream drained but no edge snapshot exists"
         return _bounded_rows(out.select("subj", "pred", "obj", "confidence"))
     finally:

@@ -623,8 +623,8 @@ def _unionfind_remap(spark, rows, id_type: T.DataType) -> DataFrame:
     """Driver-side union-find over a bounded pair list: returns the
     ``(_old, _new)`` DataFrame mapping every non-root member to its root,
     roots being the MIN id of each component — exactly the min-label CC
-    contract. Shared by ``incremental_components`` and the bounded fast
-    path of ``connected_components``."""
+    contract. The bounded fast path of ``connected_components`` (and so of
+    ``incremental_components``, which calls it)."""
     parent: dict = {}
 
     def find(x):
@@ -689,11 +689,10 @@ def connected_components(
     # limit(threshold+1).collect() + union-find replaces the whole
     # propagation loop (per-round join/aggregate/convergence-probe jobs are
     # pure fixed overhead at small pair counts — measured ~3-4s for 23k
-    # pairs at sf1.0). Same contract and scale story as
-    # incremental_components' driver_threshold: the collect is BOUNDED
-    # (threshold+1 rows), an oversized pair list falls back to the
-    # distributed loop below at the cost of that one probe action, and the
-    # result is pytest-pinned identical between the paths.
+    # pairs at sf1.0). The collect is BOUNDED (threshold+1 rows), an
+    # oversized pair list falls back to the distributed loop below at the
+    # cost of that one probe action, and the result is pytest-pinned
+    # identical between the paths.
     # One eager checkpoint of the pair list: the probe below and both sides
     # of the edge union read it, never the generator's plan again.
     pairs = pairs.select("id_a", "id_b").localCheckpoint()
@@ -957,16 +956,15 @@ def incremental_components(
     of reading + rewriting labels; nothing is ever shuffled or iterated
     at corpus size.
 
-    ``driver_threshold`` (>0 to enable): when the CONTRACTED graph holds
-    at most this many edges, compute its components with a driver-side
-    union-find instead of the iterative distributed CC — one bounded
-    ``limit(threshold+1).collect()`` replaces the CC loop's per-round
-    join/aggregate/convergence-probe jobs (~6-10 Spark jobs of pure fixed
+    ``driver_threshold`` (>0 to enable) is passed to
+    ``connected_components`` over the CONTRACTED graph: at most this many
+    contracted edges get the driver-side union-find instead of the
+    distributed loop's per-round jobs (~6-10 Spark jobs of pure fixed
     overhead for a micro-batch-sized delta). This is NOT a driver-side
     loop over corpus data: the contracted graph is ∝ |delta| + touched
-    components by construction, and a delta exceeding the threshold
-    falls back to the distributed path (same one action spent checking).
-    Result identity between the two paths is pytest-pinned."""
+    components by construction, and a larger delta falls back to the
+    distributed loop. Result identity between the two paths is
+    pytest-pinned."""
     clash = {"_n", "_s", "_old", "_new"} & set(prev_labels.columns)
     if clash:
         raise ValueError(
@@ -998,6 +996,10 @@ def incremental_components(
                           .withColumnRenamed("_s", "_sb")), "id_b")
         .select(F.col("_sa").alias("id_a"), F.col("_sb").alias("id_b"))
         .filter(F.col("id_a") != F.col("id_b"))
+        # both snodes and the components call read ce; checkpointed, its
+        # broadcast joins run once (measured 50 → 20 jobs per call on the
+        # driver path, 106 → 75 on the distributed loop)
+        .localCheckpoint()
     )
     snodes = (
         ce.select(F.col("id_a").alias(id_col))
@@ -1005,20 +1007,12 @@ def incremental_components(
         .distinct()
     )
     # remap: old super-node id → merged component label (∝ delta rows)
-    remap = None
-    if driver_threshold > 0:
-        ce_rows = ce.limit(driver_threshold + 1).collect()
-        if len(ce_rows) <= driver_threshold:
-            remap = _persist(_unionfind_remap(
-                prev_labels.sparkSession, ce_rows, ce.schema["id_a"].dataType
-            ))
-    if remap is None:
-        remap = _persist(
-            connected_components(snodes, ce, id_col=id_col, max_iter=max_iter)
-            .select(F.col(id_col).alias("_old"),
-                    F.col("component_id").alias("_new"))
-            .filter(F.col("_old") != F.col("_new"))
-        )
+    remap = _persist(
+        connected_components(snodes, ce, id_col, max_iter, driver_threshold)
+        .select(F.col(id_col).alias("_old"),
+                F.col("component_id").alias("_new"))
+        .filter(F.col("_old") != F.col("_new"))
+    )
     relabeled = prev_labels.join(
         F.broadcast(remap), prev_labels[label_col] == F.col("_old"), "left"
     ).select(

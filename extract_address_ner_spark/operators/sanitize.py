@@ -2,7 +2,7 @@
 decontamination.
 
 Both are standard stages of a large-scale LLM training-data pipeline and
-round out the documents-table operator family (textstats / dedup / export):
+round out the documents-table operator family (textstats / dedup):
 
 - :func:`pii_redact` — scrub emails, phone numbers, and IPv4 addresses from
   a text column, emitting per-type match counts and the redacted text. Pure

@@ -1,6 +1,7 @@
 """SparkSession factory tuned for the KG-construction pipeline.
 
-Scale notes (designed for 1000-executor / 100 TB, tested on local[32]):
+Scale notes (designed for 1000-executor / 100 TB; the default local master
+uses every CPU the process may run on):
 - AQE on: runtime coalescing of small shuffle partitions + skew-join
   splitting (mega-repo skew is expected per the corpus shape).
 - Arrow on: every Python-side operator is an Arrow-batched pandas UDF /
@@ -134,13 +135,25 @@ def _default_driver_mem() -> str:
     return "48g"
 
 
+def _default_master() -> str:
+    """Spark master when the caller passes none: SPARK_GRAFT_MASTER
+    verbatim, else ``local[N]`` with N from SPARK_GRAFT_CPUS, else the CPUs
+    this process may run on (what ``nproc`` prints). A fixed count larger
+    than the box runs that many tasks, and Python workers, at once."""
+    master = os.environ.get("SPARK_GRAFT_MASTER")
+    if master:
+        return master
+    cpus = os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0))
+    return f"local[{cpus}]"
+
+
 def get_spark(
     app_name: str = "kg-construct",
     master: str | None = None,
     shuffle_partitions: int | None = None,
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
-    master = master or os.environ.get("SPARK_GRAFT_MASTER") or f"local[{os.environ.get('SPARK_GRAFT_CPUS', '32')}]"
+    master = master or _default_master()
     shuffle_partitions = shuffle_partitions or int(os.environ.get("SPARK_GRAFT_SHUFFLE_PARTITIONS", "32"))
 
     # Python workers (pandas UDFs / mapInPandas) must run the SAME

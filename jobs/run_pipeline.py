@@ -39,9 +39,11 @@ snapshot-versioned edge table (partition-incremental `merge_edge_snapshot`
 bytes stats printed and the final snapshot verified equal to the batch
 edge stage.
 
-``--export-shards N`` runs the training-data EXPORT stage: the corpus as
-N deterministic hash shards (one file each, per-shard doc/BPE-token
-manifest) with a printed round-trip completeness check.
+``--incremental-dedup N`` does the same for NEAR-dup dedup-on-arrival:
+the corpus stage replayed as N drops through ``merge_dedup_labels``
+(durable band index + snapshot-versioned labels, keep-2 label retention
+and band compaction inline), with the final keeper set verified equal to
+the one-shot ``dedup_near``.
 
 ``--embed DIM,EPOCHS`` trains TransE KG embeddings on the built edge
 stage (numpy mapInPandas gradient pass, one groupBy reduce + model
@@ -60,24 +62,10 @@ contamination by the GPT-3/Pile rule), the Gopher repetition filter, and
 boilerplate-line / duplicate-window reports; the cleaned corpus lands
 under ``<warehouse>/hygiene/corpus_clean``.
 
-``--quota-sample QUOTA`` runs the deterministic SAMPLING stage: the quota
-smallest-(hash, doc_id) rows of every ``--quota-group`` (default repo —
-the synthetic corpus's mega-repo holds half the rows, so the stage
-exercises the operator's skew bound: the mega-group's window input is
-prefiltered to ~oversample·quota rows), written under
-``<warehouse>/sample/corpus_quota`` with an exactness gate (every group
-at exactly min(quota, group size) or the job fails).
-
 ``--integrity-gate`` runs the eight-invariant integrity report
 (operators/graph_query.integrity_report) over the built edge/node stages
 and fails the job with a nonzero exit on ANY violation — the publish gate
 a production KG build runs before downstream consumers see the tables.
-
-``--incremental-dedup N`` does the same for NEAR-dup dedup-on-arrival:
-the corpus stage replayed as N drops through ``merge_dedup_labels``
-(durable band index + snapshot-versioned labels, keep-2 label retention
-and band compaction inline), with the final keeper set verified equal to
-the one-shot ``dedup_near``.
 
 The job is checkpoint-resumable: completed stages (durable ``_SUCCESS``
 markers) are skipped on re-run unless ``--force`` removes them first. The
@@ -123,11 +111,6 @@ def main() -> int:
                     help="bucket count for --bucketed-edges (size so one "
                          "bucket ~ one task at the target scale)")
     ap.add_argument(
-        "--export-shards", type=int, metavar="N_SHARDS",
-        help="export the corpus stage as N deterministic hash shards "
-             "(one file per shard, per-shard doc/token manifest) under "
-             "<warehouse>/shards — the training-data export stage")
-    ap.add_argument(
         "--export-ntriples", action="store_true",
         help="additionally serialize the edge stage as W3C N-Triples "
              "text under <warehouse>/ntriples (narrow map-only plan, one "
@@ -158,17 +141,6 @@ def main() -> int:
              "duplicate-window reports; writes the cleaned corpus under "
              "<warehouse>/hygiene/corpus_clean and FAILS the job if any "
              "PII pattern survives redaction")
-    ap.add_argument(
-        "--quota-sample", type=int, metavar="QUOTA",
-        help="run the deterministic per-group sampling stage: keep the "
-             "QUOTA smallest-(hash, doc_id) rows of each --quota-group "
-             "(default repo — the synthetic corpus plants a mega-repo "
-             "holding half the rows, so this exercises the skew bound), "
-             "write the sample under <warehouse>/sample/corpus_quota, and "
-             "FAIL the job unless every group's sampled count equals "
-             "min(QUOTA, group size) exactly")
-    ap.add_argument("--quota-group", default="repo",
-                    help="group column for --quota-sample (default repo)")
     ap.add_argument(
         "--embed", metavar="DIM,EPOCHS",
         help="train TransE KG embeddings on the built edge stage (numpy "
@@ -408,22 +380,6 @@ def main() -> int:
               f"design would have written ~{n_drops}x the table)")
         if diff != 0:
             ok = False
-    if args.export_shards:
-        from extract_address_ner_spark.operators.export import export_shards
-
-        sh_dir = str(Path(args.warehouse) / "shards")
-        shutil.rmtree(sh_dir, ignore_errors=True)
-        man = export_shards(
-            out["corpus"].selectExpr("doc_id", "content AS text"),
-            sh_dir, n_shards=args.export_shards,
-        )
-        back = spark.read.parquet(sh_dir).count()
-        print(f"export_shards: {man['total_docs']} docs / "
-              f"{man['total_tokens']} bpe-tokens into {args.export_shards} "
-              f"shards, roundtrip_complete="
-              f"{'true' if back == man['total_docs'] else 'false'}")
-        if back != man["total_docs"]:
-            ok = False
     if args.export_ntriples:
         from extract_address_ner_spark.operators.rdf import (
             from_ntriples,
@@ -549,43 +505,6 @@ def main() -> int:
         for _c in (hits, red, normed):
             _c.unpersist()
         if residual != 0:
-            ok = False
-    if args.quota_sample:
-        from pyspark.sql import functions as F
-
-        from extract_address_ner_spark.operators.sampling import (
-            stratified_quota_sample,
-        )
-
-        src = out["corpus"]
-        samp = stratified_quota_sample(
-            src, args.quota_group, args.quota_sample, key_col="doc_id"
-        )
-        qs_dir = str(Path(args.warehouse) / "sample" / "corpus_quota")
-        shutil.rmtree(qs_dir, ignore_errors=True)
-        samp.write.parquet(qs_dir)
-        back = spark.read.parquet(qs_dir)
-        # exactness gate: every group sampled at exactly min(quota, |group|)
-        g = args.quota_group
-        want = src.groupBy(g).agg(
-            F.least(F.count(F.lit(1)), F.lit(args.quota_sample)).alias("_want")
-        )
-        got = back.groupBy(g).agg(F.count(F.lit(1)).alias("_got"))
-        viol = (
-            want.join(got, g, "full_outer")
-            .where(
-                F.coalesce(F.col("_want"), F.lit(-1))
-                != F.coalesce(F.col("_got"), F.lit(-2))
-            )
-            .count()
-        )
-        n_src, n_samp = src.count(), back.count()
-        n_grp = want.count()
-        print(f"quota_sample: {n_samp}/{n_src} rows kept across {n_grp} "
-              f"{g} groups (quota={args.quota_sample}); "
-              f"violations={viol} "
-              f"gate={'EXACT' if viol == 0 else 'VIOLATED'}")
-        if viol != 0:
             ok = False
     if args.integrity_gate:
         from extract_address_ner_spark.operators.graph_query import (

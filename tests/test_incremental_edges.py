@@ -51,17 +51,17 @@ def test_merge_replay_is_idempotent(spark, sf_smoke, tmp_path):
     root_a = str(tmp_path / "a")
     ES.merge_edge_snapshot(delta(0), root_a, 0)
     ES.merge_edge_snapshot(delta(1), root_a, 1)
-    final_a = _edge_rows(ES._latest_edge_snapshot(spark, root_a))
+    final_a = _edge_rows(ES.read_edge_snapshot(spark, root_a))
 
     # replay of batch 1 (same delta, same id) must reproduce v1 exactly
     ES.merge_edge_snapshot(delta(1), root_a, 1)
-    assert _edge_rows(ES._latest_edge_snapshot(spark, root_a)) == final_a
+    assert _edge_rows(ES.read_edge_snapshot(spark, root_a)) == final_a
 
     # reversed drop order converges to the same final table
     root_b = str(tmp_path / "b")
     ES.merge_edge_snapshot(delta(1), root_b, 0)
     ES.merge_edge_snapshot(delta(0), root_b, 1)
-    assert _edge_rows(ES._latest_edge_snapshot(spark, root_b)) == final_a
+    assert _edge_rows(ES.read_edge_snapshot(spark, root_b)) == final_a
 
 
 def test_snapshot_diff_reads_the_versioned_table(spark, sf_smoke, tmp_path):
@@ -80,9 +80,9 @@ def test_snapshot_diff_reads_the_versioned_table(spark, sf_smoke, tmp_path):
 
     root = str(tmp_path / "w")
     ES.merge_edge_snapshot(delta("doc_id % 3 = 0"), root, 0)
-    v0 = ES._latest_edge_snapshot(spark, root)
+    v0 = ES.read_edge_snapshot(spark, root)
     ES.merge_edge_snapshot(delta("doc_id % 3 != 0"), root, 1)
-    v1 = ES._latest_edge_snapshot(spark, root)
+    v1 = ES.read_edge_snapshot(spark, root)
 
     d = {r["pred"]: r for r in ES.snapshot_diff(v0, v1).collect()}
     full = _edge_rows(delta("true"))

@@ -71,14 +71,6 @@ def test_job_entry_incremental_dedup(tmp_path):
     assert "keeper_set_equals_one_shot=true" in stdout
 
 
-def test_job_entry_export_shards(tmp_path):
-    """Round-5: the shipped job exports the corpus as deterministic hash
-    shards with a token manifest and pins round-trip completeness."""
-    stdout = _run_job(tmp_path,
-                      ["--master", "local[2]", "--export-shards", "4"])
-    assert "roundtrip_complete=true" in stdout
-
-
 def test_job_entry_export_ntriples(tmp_path):
     """Round-5: the shipped job serializes the edge stage as W3C N-Triples
     text and pins parse-back identity against the edge table."""
@@ -178,14 +170,3 @@ def test_job_entry_hygiene(tmp_path):
     assert "hygiene: repetition_filter kept" in stdout
     assert (tmp_path / "wh" / "hygiene" / "corpus_clean").exists()
 
-
-def test_job_entry_quota_sample(tmp_path):
-    """Round 5: the shipped job runs the deterministic per-group sampling
-    stage over the skewed corpus (the synthesizer's mega-repo holds half
-    the rows) and gates on exact min(quota, |group|) membership per repo."""
-    stdout = _run_job(
-        tmp_path, ["--master", "local[2]", "--quota-sample", "7"])
-    assert "quota_sample:" in stdout
-    assert "violations=0" in stdout
-    assert "gate=EXACT" in stdout
-    assert (tmp_path / "wh" / "sample" / "corpus_quota").exists()
