@@ -1,13 +1,12 @@
-"""Driver-checkable queries for the training-data-pipeline operators:
-text analysis, dedup (exact / MinHash / LSH / Jaccard / SimHash / embedding),
-and ANN similarity search. Registered into the same registry as the KG
-pipeline queries (entry_queries.register).
+"""Driver-checkable queries for the non-KG operators: text analysis, dedup
+(exact / MinHash / LSH / Jaccard / SimHash), events, multimodal plumbing and
+training-data hygiene. Registered into the same registry as the KG pipeline
+queries (entry_queries.register).
 
-Dup-corpus derivations: ``dup_documents`` adds exact copies (doc_id % 7,
+Dup-corpus derivation: ``dup_documents`` adds exact copies (doc_id % 7,
 +200000) and near copies ('DUP ' prefix, doc_id % 5, +100000) so dedup
-operators have real work; ``dup_embeddings`` adds exact copies and
-first-component-zeroed near copies. Both derivations are expressed in each
-engine's SQL so the oracle sees the identical input.
+operators have real work. The derivation is expressed in each engine's SQL
+so the oracle sees the identical input.
 """
 
 from __future__ import annotations
@@ -23,7 +22,7 @@ from .functions.textstats import (
     with_quality_score,
     with_token_stats,
 )
-from .operators import ann, dedup
+from .operators import dedup
 from .sources.corpus import register_documents
 
 # --------------------------------------------------------------------------
@@ -46,41 +45,9 @@ def dup_documents(
     return spark.sql(DUP_DOCS_SPARK)
 
 
-DUP_EMB_SPARK = """
-SELECT vec_id, CAST(embedding AS array<double>) AS embedding FROM embeddings
-UNION ALL SELECT vec_id + 100000 AS vec_id, CAST(embedding AS array<double>) AS embedding
-  FROM embeddings WHERE vec_id % 5 = 0
-UNION ALL SELECT vec_id + 200000 AS vec_id,
-  concat(array(CAST(0 AS DOUBLE)), slice(CAST(embedding AS array<double>), 2, size(embedding) - 1)) AS embedding
-  FROM embeddings WHERE vec_id % 7 = 0
-""".strip()
-
-DUP_EMB_DUCK = """
-SELECT vec_id, CAST(embedding AS DOUBLE[]) AS embedding FROM embeddings
-UNION ALL SELECT vec_id + 100000 AS vec_id, CAST(embedding AS DOUBLE[]) AS embedding
-  FROM embeddings WHERE vec_id % 5 = 0
-UNION ALL SELECT vec_id + 200000 AS vec_id,
-  [CAST(0 AS DOUBLE)] || (CAST(embedding AS DOUBLE[]))[2:len(embedding)] AS embedding
-  FROM embeddings WHERE vec_id % 7 = 0
-""".strip()
-
-
-def dup_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _emb(spark, sf_dir).createOrReplaceTempView("embeddings")
-    return spark.sql(DUP_EMB_SPARK)
-
-
 def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     register_documents(spark, sf_dir)
     return spark.table("documents")
-
-def _emb(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Embeddings read with the scale-adaptive partition floor (the small-sf
-    parquet is one unsplittable row group — see session.scale_partitions)."""
-    from .session import scale_partitions
-
-    return scale_partitions(spark.read.parquet(f"{sf_dir}/embeddings.parquet"))
-
 
 
 # DuckDB helpers mirroring the Spark expressions
@@ -473,274 +440,6 @@ def q_simhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle reproduces the 16-bit sketch, the 4x4-bit chunk-share predicate,
     and the hamming cutoff entirely in SQL (xor + bit_count)."""
     return dedup.simhash_near_pairs(dup_documents(spark, sf_dir))
-
-
-_D_COS = (
-    "list_cosine_similarity(a.embedding, b.embedding)"
-)
-
-
-@register(
-    "dedup_embedding_pairs",
-    f"""
-WITH dup AS ({DUP_EMB_DUCK})
-SELECT a.vec_id AS id_a, b.vec_id AS id_b,
-  CAST(round({_D_COS}, 4) AS DOUBLE) AS cosine
-FROM dup a JOIN dup b ON a.vec_id < b.vec_id
-WHERE round({_D_COS}, 4) >= 0.95""",
-)
-def q_emb_dupes(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return dedup.embedding_dup_pairs(dup_embeddings(spark, sf_dir))
-
-
-# Fixed-k centroid selection (mirrors ann.seed_centroids: n_centroids
-# smallest md5-derived sampling hashes, ties by id — corpus-size-independent)
-_D_CENTS = """cents AS (
-  SELECT vec_id AS centroid_id, v AS cv FROM e
-  ORDER BY CAST(concat('0x', substr(md5('c:42:' || vec_id), 1, 15)) AS BIGINT),
-           vec_id
-  LIMIT 32)"""
-
-
-@register(
-    "dedup_embedding_pairs_ivf",
-    f"""
-WITH dup AS ({DUP_EMB_DUCK}),
-e AS (SELECT vec_id, embedding AS v FROM dup),
-{_D_CENTS},
-sc AS (SELECT e.vec_id, centroid_id,
-  CAST(round(list_cosine_similarity(cv, v), 4) AS DOUBLE) AS s
-  FROM e CROSS JOIN cents),
-assign AS (SELECT vec_id, centroid_id AS cluster_id FROM
-  (SELECT *, row_number() OVER
-     (PARTITION BY vec_id ORDER BY s DESC, centroid_id) AS r FROM sc)
-  WHERE r = 1)
-SELECT a.vec_id AS id_a, b.vec_id AS id_b,
-  CAST(round({_D_COS}, 4) AS DOUBLE) AS cosine
-FROM dup a
-JOIN assign aa ON aa.vec_id = a.vec_id
-JOIN assign ab ON ab.cluster_id = aa.cluster_id
-JOIN dup b ON b.vec_id = ab.vec_id AND a.vec_id < b.vec_id
-WHERE round({_D_COS}, 4) >= 0.95""",
-    # pytest-carried (tests/test_registry_oracles.py): dedup_near_semantic
-    # drives the SAME IVF pair generator through the keeper-collapse chain
-    # and stays driver-checked (VERDICT r04 #1)
-    driver=False,
-)
-def q_emb_dupes_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return dedup.embedding_dup_pairs_ivf(dup_embeddings(spark, sf_dir))
-
-
-@register(
-    "dedup_near_semantic",
-    f"""
-WITH RECURSIVE dup AS ({DUP_EMB_DUCK}),
-e AS (SELECT vec_id, embedding AS v FROM dup),
-{_D_CENTS},
-sc AS (SELECT e.vec_id, centroid_id,
-  CAST(round(list_cosine_similarity(cv, v), 4) AS DOUBLE) AS s
-  FROM e CROSS JOIN cents),
-assign AS (SELECT vec_id, centroid_id AS cluster_id FROM
-  (SELECT *, row_number() OVER
-     (PARTITION BY vec_id ORDER BY s DESC, centroid_id) AS r FROM sc)
-  WHERE r = 1),
-pairs AS (SELECT a.vec_id AS id_a, b.vec_id AS id_b
-  FROM dup a
-  JOIN assign aa ON aa.vec_id = a.vec_id
-  JOIN assign ab ON ab.cluster_id = aa.cluster_id
-  JOIN dup b ON b.vec_id = ab.vec_id AND a.vec_id < b.vec_id
-  WHERE round({_D_COS}, 4) >= 0.95),
-edges AS (SELECT id_a AS u, id_b AS v FROM pairs
-          UNION ALL SELECT id_b AS u, id_a AS v FROM pairs),
-reach AS (
-  SELECT vec_id AS src, vec_id AS dst FROM dup
-  UNION
-  SELECT r.src, eg.v AS dst FROM reach r JOIN edges eg ON eg.u = r.dst
-),
-comp AS (SELECT src AS vec_id, min(dst) AS component_id
-         FROM reach GROUP BY src)
-SELECT vec_id FROM comp WHERE component_id = vec_id""",
-)
-def q_dedup_near_semantic(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """SEMANTIC near-dedup end-to-end (round 4): the embedding-cosine
-    IVF-bucketed pair generator plugged into the SAME keeper-collapse
-    chain the text path uses — ``dedup_near(docs, pairs=...)`` was built
-    for exactly this substitution (components → min-id keeper semi-join,
-    keyed on vec_id). The oracle rebuilds the IVF pair graph in SQL and
-    walks it with the same recursive-CTE reachability the text components
-    oracle uses. This is the production embedding-dedup shape at 100 TB:
-    pair generation is cluster-bucketed (never all-pairs), the collapse is
-    the shared bounded-round components operator."""
-    docs = dup_embeddings(spark, sf_dir)
-    pairs = dedup.embedding_dup_pairs_ivf(docs)
-    kept = dedup.dedup_near(docs, pairs=pairs, id_col="vec_id")
-    return kept.select("vec_id")
-
-
-# --------------------------------------------------------------------------
-# ANN similarity search
-# --------------------------------------------------------------------------
-
-_D_EMB_D = "CAST(embedding AS DOUBLE[])"
-
-
-@register(
-    "ann_brute_topk",
-    f"""
-WITH e AS (SELECT vec_id, {_D_EMB_D} AS v FROM embeddings),
-q AS (SELECT vec_id AS q_id, v AS qv FROM e WHERE vec_id < 5),
-scored AS (
-  SELECT q_id, e.vec_id AS neighbor_id,
-    CAST(round(list_cosine_similarity(qv, v), 4) AS DOUBLE) AS cosine
-  FROM e CROSS JOIN q WHERE q_id != e.vec_id),
-ranked AS (SELECT *, row_number() OVER
-  (PARTITION BY q_id ORDER BY cosine DESC, neighbor_id) AS rank FROM scored)
-SELECT q_id, neighbor_id, CAST(rank AS INT) AS rank, cosine
-FROM ranked WHERE rank <= 10""",
-)
-def q_ann_brute(spark: SparkSession, sf_dir: str) -> DataFrame:
-    emb = _emb(spark, sf_dir)
-    queries = emb.filter("vec_id < 5")
-    return ann.brute_force_topk(emb, queries, k=10)
-
-
-@register(
-    "ann_lsh_topk",
-    f"""
-WITH e AS (SELECT vec_id, {_D_EMB_D} AS v FROM embeddings),
-planes AS (
-  SELECT j, list(
-    (CAST(concat('0x', substr(md5('p:42:' || j || ':' || i), 1, 15)) AS BIGINT)
-     % 1000) / 1000.0 - 0.5 ORDER BY i) AS p
-  FROM generate_series(0, 47) t(j) CROSS JOIN generate_series(0, 63) s(i)
-  GROUP BY j),
-sigs AS (
-  SELECT vec_id, CAST(j // 4 AS INT) AS tbl,
-    string_agg(CASE WHEN list_dot_product(p, v) >= 0 THEN '1' ELSE '0' END,
-               '' ORDER BY j) AS bucket
-  FROM e CROSS JOIN planes GROUP BY vec_id, j // 4),
-qs AS (SELECT vec_id AS q_id, v AS qv FROM e WHERE vec_id < 5),
-qsig AS (SELECT vec_id AS q_id, tbl, bucket FROM sigs WHERE vec_id < 5),
-cand AS (SELECT DISTINCT q.q_id, c.vec_id AS neighbor_id
-         FROM sigs c JOIN qsig q ON c.tbl = q.tbl AND c.bucket = q.bucket
-         WHERE c.vec_id != q.q_id),
-scored AS (SELECT cand.q_id, neighbor_id,
-  CAST(round(list_cosine_similarity(qv, v), 4) AS DOUBLE) AS cosine
-  FROM cand JOIN qs ON qs.q_id = cand.q_id
-  JOIN e ON e.vec_id = cand.neighbor_id),
-ranked AS (SELECT *, row_number() OVER
-  (PARTITION BY q_id ORDER BY cosine DESC, neighbor_id) AS rank FROM scored)
-SELECT q_id, neighbor_id, CAST(rank AS INT) AS rank, cosine
-FROM ranked WHERE rank <= 10""",
-)
-def q_ann_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The md5-derived hyperplanes (ann.hyperplanes_expr) exist precisely so
-    any engine reproduces the buckets: the oracle re-derives plane components,
-    sign-pattern buckets per table, the (table, bucket) candidate join, and
-    the cosine rerank entirely in DuckDB SQL."""
-    emb = _emb(spark, sf_dir)
-    queries = emb.filter("vec_id < 5")
-    return ann.lsh_bucket_topk(emb, queries, k=10, dim=64)
-
-
-# One deterministic k-means refinement round (mirrors ann.refine_centroids):
-# assign to the hash-sampled seed centroids, element-wise mean per cluster
-# rounded to 6dp (cross-engine FP stability), empty clusters drop out.
-_D_REFINE = """sc0 AS (SELECT e.vec_id, centroid_id,
-  CAST(round(list_cosine_similarity(cv, v), 4) AS DOUBLE) AS s
-  FROM e CROSS JOIN cents0),
-assign0 AS (SELECT vec_id, centroid_id AS cluster_id FROM
-  (SELECT *, row_number() OVER
-     (PARTITION BY vec_id ORDER BY s DESC, centroid_id) AS r FROM sc0)
-  WHERE r = 1),
-comp AS (SELECT a.cluster_id, generate_subscripts(e.v, 1) AS i,
-  unnest(e.v) AS val FROM e JOIN assign0 a USING (vec_id)),
-cm AS (SELECT cluster_id, i, round(avg(val), 6) AS m FROM comp GROUP BY 1, 2),
-cents AS (SELECT cluster_id AS centroid_id, list(m ORDER BY i) AS cv
-  FROM cm GROUP BY 1)"""
-
-
-@register(
-    "ann_ivf_topk",
-    f"""
-WITH e AS (SELECT vec_id, {_D_EMB_D} AS v FROM embeddings),
-{_D_CENTS.replace("cents AS", "cents0 AS", 1)},
-{_D_REFINE},
-sc AS (SELECT e.vec_id, centroid_id,
-  CAST(round(list_cosine_similarity(cv, v), 4) AS DOUBLE) AS s
-  FROM e CROSS JOIN cents),
-assign AS (SELECT vec_id, centroid_id AS cluster_id FROM
-  (SELECT *, row_number() OVER
-     (PARTITION BY vec_id ORDER BY s DESC, centroid_id) AS r FROM sc)
-  WHERE r = 1),
-q AS (SELECT vec_id AS q_id, v AS qv FROM e WHERE vec_id < 5),
-qs AS (SELECT q_id, qv, centroid_id AS cluster_id FROM
-  (SELECT q_id, qv, centroid_id, row_number() OVER (PARTITION BY q_id
-     ORDER BY CAST(round(list_cosine_similarity(cv, qv), 4) AS DOUBLE) DESC,
-              centroid_id) AS r
-   FROM q CROSS JOIN cents)
-  WHERE r <= 6),
-cand AS (SELECT q_id, qv, e.vec_id AS neighbor_id, e.v
-  FROM qs JOIN assign a ON qs.cluster_id = a.cluster_id
-  JOIN e ON e.vec_id = a.vec_id
-  WHERE e.vec_id != q_id),
-scored AS (SELECT q_id, neighbor_id,
-  CAST(round(list_cosine_similarity(qv, v), 4) AS DOUBLE) AS cosine FROM cand),
-ranked AS (SELECT *, row_number() OVER
-  (PARTITION BY q_id ORDER BY cosine DESC, neighbor_id) AS rank FROM scored)
-SELECT q_id, neighbor_id, CAST(rank AS INT) AS rank, cosine
-FROM ranked WHERE rank <= 10""",
-)
-def q_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """(refine=1, nprobe=6) is the measured knee of the recall/compute
-    sweep (tests/test_datapipeline.py::test_ivf_recall_sweep_table):
-    one k-means round lifts recall at every probe width (+0.06 at
-    nprobe=6) and nprobe=6/32 centroids is the cheapest point at or above
-    the 0.5 recall@10 floor (0.54 measured, deterministic) — probing ~19%
-    of the corpus vs an exhaustive scan."""
-    emb = _emb(spark, sf_dir)
-    queries = emb.filter("vec_id < 5")
-    return ann.ivf_topk(emb, queries, k=10, n_centroids=32, nprobe=6,
-                        refine=1)
-
-
-# pytest-carried: shares ann_ivf_topk's oracle verbatim (the index is a
-# physical layout, not a semantic change) — tests/test_registry_oracles.py
-# replays it; the driver slot goes to the streaming family (VERDICT r04 #1)
-@register("ann_ivf_indexed_topk", None, driver=False)  # oracle attached below
-def q_ann_ivf_indexed(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The MATERIALIZED-index serving path (round 4): build the
-    cluster-partitioned IVF index on disk once (``write_ivf_index``), then
-    answer the same queries from it with PARTITION-PRUNED probe scans
-    (``ivf_topk_from_index``) — only the probed cluster directories are
-    read. Same (n_centroids=32, refine=1, nprobe=6) as ``ann_ivf_topk``
-    and the SAME oracle SQL verbatim: the index is a physical layout, not
-    a semantic change, and the driver pins exactly that."""
-    import shutil
-    import tempfile
-
-    emb = _emb(spark, sf_dir)
-    queries = emb.filter("vec_id < 5")
-    work = tempfile.mkdtemp(prefix="ivf_index_")
-    try:
-        ann.write_ivf_index(emb, work, n_centroids=32, refine=1)
-        out = ann.ivf_topk_from_index(spark, work, queries, k=10, nprobe=6)
-        rows = out.collect()  # materialize before the temp index vanishes
-        return spark.createDataFrame(rows, out.schema)
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
-
-
-def _attach_shared_ivf_oracle() -> None:
-    from .entry_queries import _PYTEST_REGISTRY, _REGISTRY
-
-    _PYTEST_REGISTRY["ann_ivf_indexed_topk"] = (
-        _PYTEST_REGISTRY["ann_ivf_indexed_topk"][0],
-        _REGISTRY["ann_ivf_topk"][1],
-    )
-
-
-_attach_shared_ivf_oracle()
 
 
 # --------------------------------------------------------------------------

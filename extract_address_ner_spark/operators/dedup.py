@@ -1,6 +1,7 @@
-"""Deduplication operators for training-data pipelines.
+"""Deduplication operators: exact and near-duplicate doc collapse by word
+shingles — the near-dup problem here is set similarity, never vectors.
 
-Seven families, each usable standalone and each with a driver-checked query
+Six families, each usable standalone and each with a driver-checked query
 in entry_queries:
 
 - exact:       sha256 content hash → groupBy (one shuffle on the hash; at
@@ -20,8 +21,6 @@ in entry_queries:
                hashes.
 - SimHash:     16-bit sign-sum sketch over the same shingler and digests;
                hamming-distance pairing for near-dup.
-- embedding:   cosine near-dup over an embedding column (brute pairs at test
-               scale; the ANN module's LSH buckets are the 100 TB path).
 - components:  connected components over the near-dup pair list — cluster
                collapse / keeper selection, the stage after pair generation
                in a real dedup. Two interchangeable algorithms: min-label
@@ -484,12 +483,12 @@ def similar_docs(
     band_index: DataFrame | None = None,
 ) -> DataFrame:
     """Textual similarity SEARCH over the corpus — the serving read of the
-    MinHash-LSH machinery (the embedding family's ``ann.py`` twin for
-    text): for each query doc, the top-``k`` most-similar corpus docs as
-    ``(query_id, doc_id, jaccard, rank)``, by exact shingle-Jaccard over
-    LSH-candidate docs only. The "find documents like this one" read a
-    training-data pipeline needs next after dedup — e.g. expanding one
-    contaminated/flagged document into its whole near-dup family.
+    MinHash-LSH machinery: for each query doc, the top-``k`` most-similar
+    corpus docs as ``(query_id, doc_id, jaccard, rank)``, by exact
+    shingle-Jaccard over LSH-candidate docs only. The "find documents like
+    this one" read a training-data pipeline needs next after dedup — e.g.
+    expanding one contaminated/flagged document into its whole near-dup
+    family.
 
     Scale shape (100 TB corpus, handful-to-thousands of queries):
 
@@ -684,6 +683,19 @@ def connected_components(
     ``connected_components_star``, the large-star/small-star variant that
     converges in ~log₂(chain) rounds; near-dup graphs are usually dense
     enough (diameter 1-3) that plain propagation wins on constant factors."""
+    # One eager checkpoint of the pair list: the driver-path probe and both
+    # sides of the edge union read it, never the generator's plan again.
+    return _components(docs, pairs.select("id_a", "id_b").localCheckpoint(),
+                       id_col, max_iter, driver_threshold)
+
+
+def _components(
+    docs: DataFrame, pairs: DataFrame, id_col: str, max_iter: int,
+    driver_threshold: int,
+) -> DataFrame:
+    """The body of ``connected_components`` over a pair list that is
+    already a checkpoint of ``(id_a, id_b)``; ``incremental_components``
+    calls it directly with its checkpointed contracted edges."""
     # Bounded driver fast path (round 6, opt-in via driver_threshold > 0):
     # when the pair list holds at most driver_threshold edges, one
     # limit(threshold+1).collect() + union-find replaces the whole
@@ -693,9 +705,6 @@ def connected_components(
     # oversized pair list falls back to the distributed loop below at the
     # cost of that one probe action, and the result is pytest-pinned
     # identical between the paths.
-    # One eager checkpoint of the pair list: the probe below and both sides
-    # of the edge union read it, never the generator's plan again.
-    pairs = pairs.select("id_a", "id_b").localCheckpoint()
     if driver_threshold > 0:
         rows = pairs.limit(driver_threshold + 1).collect()
         if len(rows) <= driver_threshold:
@@ -895,24 +904,21 @@ def connected_components_star(
 
 
 def dedup_near(
-    docs: DataFrame, pairs: DataFrame | None = None,
+    docs: DataFrame,
     text_col: str = "text", id_col: str = "doc_id",
     threshold: float = 0.8, driver_threshold: int = 100_000,
 ) -> DataFrame:
     """END-TO-END near-dedup: keep exactly one representative (the min-id
     keeper) per near-duplicate component. Composes the full production
     chain — banded LSH candidates → Jaccard verification → connected
-    components → keeper semi-join — as one operator; ``pairs`` lets a
-    caller substitute any pair generator (SimHash, embedding cosine).
-    The semi-join back to the corpus is keyed on the id (broadcast-able
-    keeper side when duplicates are sparse).
+    components → keeper semi-join — as one operator. The semi-join back to
+    the corpus is keyed on the id (broadcast-able keeper side when
+    duplicates are sparse).
 
     ``driver_threshold``: bounded union-find fast path for small verified
     pair lists (see ``connected_components``); identical output, falls back
     to the distributed loop past the threshold."""
-    if pairs is None:
-        pairs = lsh_verified_pairs(docs, text_col, id_col,
-                                   threshold=threshold)
+    pairs = lsh_verified_pairs(docs, text_col, id_col, threshold=threshold)
     comp = connected_components(
         docs, pairs, id_col, driver_threshold=driver_threshold
     )
@@ -956,8 +962,8 @@ def incremental_components(
     of reading + rewriting labels; nothing is ever shuffled or iterated
     at corpus size.
 
-    ``driver_threshold`` (>0 to enable) is passed to
-    ``connected_components`` over the CONTRACTED graph: at most this many
+    ``driver_threshold`` (>0 to enable) is passed to the
+    ``connected_components`` body over the CONTRACTED graph: at most this many
     contracted edges get the driver-side union-find instead of the
     distributed loop's per-round jobs (~6-10 Spark jobs of pure fixed
     overhead for a micro-batch-sized delta). This is NOT a driver-side
@@ -1006,9 +1012,10 @@ def incremental_components(
         .union(ce.select(F.col("id_b").alias(id_col)))
         .distinct()
     )
-    # remap: old super-node id → merged component label (∝ delta rows)
+    # remap: old super-node id → merged component label (∝ delta rows);
+    # ce is already a checkpoint, so the body runs without a second one
     remap = _persist(
-        connected_components(snodes, ce, id_col, max_iter, driver_threshold)
+        _components(snodes, ce, id_col, max_iter, driver_threshold)
         .select(F.col(id_col).alias("_old"),
                 F.col("component_id").alias("_new"))
         .filter(F.col("_old") != F.col("_new"))
@@ -1236,73 +1243,4 @@ def simhash_near_pairs(
             "hamming",
         )
         .dropDuplicates(["id_a", "id_b"])
-    )
-
-
-# --------------------------------------------------------------------------
-# embedding-cosine near-dup
-# --------------------------------------------------------------------------
-
-def cosine_sim_expr(a: str, b: str) -> str:
-    """Cosine similarity of two array<float/double> columns, computed in
-    double with deterministic left-to-right summation."""
-    dot = f"aggregate(zip_with({a}, {b}, (x, y) -> CAST(x AS DOUBLE) * CAST(y AS DOUBLE)), CAST(0 AS DOUBLE), (acc, v) -> acc + v)"
-    na = f"sqrt(aggregate({a}, CAST(0 AS DOUBLE), (acc, v) -> acc + CAST(v AS DOUBLE) * CAST(v AS DOUBLE)))"
-    nb = f"sqrt(aggregate({b}, CAST(0 AS DOUBLE), (acc, v) -> acc + CAST(v AS DOUBLE) * CAST(v AS DOUBLE)))"
-    return f"({dot}) / (({na}) * ({nb}))"
-
-
-def embedding_dup_pairs(
-    emb: DataFrame, id_col: str = "vec_id", vec_col: str = "embedding",
-    threshold: float = 0.95,
-) -> DataFrame:
-    """All pairs with cosine ≥ threshold (id_a < id_b), score rounded to 4 dp.
-    Brute-force pair join — correct baseline; ``embedding_dup_pairs_ivf``
-    is the bucketed scale path."""
-    a = emb.select(F.col(id_col).alias("id_a"), F.col(vec_col).alias("_va"))
-    b = emb.select(F.col(id_col).alias("id_b"), F.col(vec_col).alias("_vb"))
-    return (
-        a.join(b, F.col("id_a") < F.col("id_b"))
-        .withColumn(
-            "cosine",
-            F.round(F.expr(cosine_sim_expr("_va", "_vb")), 4).cast("double"),
-        )
-        .filter(F.col("cosine") >= threshold)
-        .select("id_a", "id_b", "cosine")
-    )
-
-
-def embedding_dup_pairs_ivf(
-    emb: DataFrame, id_col: str = "vec_id", vec_col: str = "embedding",
-    threshold: float = 0.95, n_centroids: int = 32, seed: int = 42,
-) -> DataFrame:
-    """Bucketed embedding near-dup — the 100 TB path: vectors are assigned
-    to IVF clusters (a FIXED count of broadcast hash-sampled seed centroids
-    — bounded broadcast, O(n · n_centroids) assignment — and a map-side-
-    combinable argmax; see operators/ann.py) and the pair join is keyed on
-    cluster_id, so the comparison count is sum over clusters of |c|² instead
-    of n². Near-dups at cosine ≥ 0.95 sit closer to each other than to
-    distinct centroids, so same-cluster recall is high (measured in tests
-    against the brute path). Same scoring expression and output schema as
-    ``embedding_dup_pairs``."""
-    from .ann import ivf_assign, seed_centroids
-
-    cents = seed_centroids(emb, n_centroids, seed, id_col, vec_col)
-    assign = ivf_assign(emb, cents, id_col, vec_col)
-    clustered = emb.select(id_col, vec_col).join(assign, id_col)
-    a = clustered.select(
-        F.col(id_col).alias("id_a"), F.col(vec_col).alias("_va"), "cluster_id"
-    )
-    b = clustered.select(
-        F.col(id_col).alias("id_b"), F.col(vec_col).alias("_vb"), "cluster_id"
-    )
-    return (
-        a.join(b, "cluster_id")
-        .filter(F.col("id_a") < F.col("id_b"))
-        .withColumn(
-            "cosine",
-            F.round(F.expr(cosine_sim_expr("_va", "_vb")), 4).cast("double"),
-        )
-        .filter(F.col("cosine") >= threshold)
-        .select("id_a", "id_b", "cosine")
     )

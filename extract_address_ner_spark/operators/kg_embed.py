@@ -286,10 +286,8 @@ def predict_links(
     (subj, pred) query row, the k most TransE-plausible objects. Entity
     vectors are unit-norm (train_transe projects them), so ranking by the
     dot product target·candidate is EXACTLY the TransE L2 ranking
-    (||t−o||² = ||t||² + 1 − 2·t·o for fixed target t = e_s + r_p) — which
-    also means the at-scale path is the engine's own ANN serving (ivf_topk
-    over the entity table with t as the query vector) instead of this
-    exact exhaustive scan. ``filter_known`` (typically the edge table)
+    (||t−o||² = ||t||² + 1 − 2·t·o for fixed target t = e_s + r_p), scored
+    by an exact exhaustive scan. ``filter_known`` (typically the edge table)
     enables the standard FILTERED ranking protocol: known-true objects are
     removed from the candidate list before ranking. Deterministic ranking:
     (score 6dp desc, obj asc). Query rows whose subj or pred has NO

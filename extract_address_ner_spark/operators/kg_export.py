@@ -47,7 +47,7 @@ NEG_BUCKETS = 16
 
 def _md5_mod(expr: str, mod: int) -> str:
     """Spark-side md5→BIGINT bridge, reduced mod ``mod`` (same form the
-    dedup/split/ann operators use; DuckDB twin in entry_queries)."""
+    dedup/split operators use; DuckDB twin in entry_queries)."""
     return (
         f"CAST(conv(substr(md5({expr}), 1, 15), 16, 10) AS BIGINT) % {mod}"
     )

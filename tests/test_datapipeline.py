@@ -1,13 +1,10 @@
-"""Dedup / ANN / text-analysis operator properties."""
+"""Dedup / text-analysis operator properties."""
 
 import pytest
 from pyspark.sql import functions as F
 
-from extract_address_ner_spark.entry_queries_data import (
-    dup_documents,
-    dup_embeddings,
-)
-from extract_address_ner_spark.operators import ann, dedup
+from extract_address_ner_spark.entry_queries_data import dup_documents
+from extract_address_ner_spark.operators import dedup
 
 
 def test_exact_dedup_finds_planted_copies(spark, sf_smoke):
@@ -189,162 +186,6 @@ def test_simhash_near_pairs(spark, sf_smoke):
     assert near_found > 0.8 * 100
 
 
-def test_embedding_dupes(spark, sf_smoke):
-    df = dup_embeddings(spark, sf_smoke)
-    pairs = {(r["id_a"], r["id_b"]): r["cosine"]
-             for r in dedup.embedding_dup_pairs(df).collect()}
-    for i in range(0, 500, 5):
-        assert pairs.get((i, i + 100000)) == 1.0  # exact copy
-    # zeroed-first-component copies are mostly > 0.95
-    zeroed = sum((i, i + 200000) in pairs for i in range(0, 500, 7))
-    assert zeroed > 0.8 * 72
-
-
-def test_embedding_dedup_ivf_bucketed(spark, sf_smoke):
-    """The IVF-bucketed path must be a subset of brute force with identical
-    scores, and exact-copy pairs (identical vectors → same cluster by
-    construction) must all survive."""
-    from extract_address_ner_spark.entry_queries_data import dup_embeddings
-
-    emb = dup_embeddings(spark, sf_smoke)
-    brute = {(r["id_a"], r["id_b"]): r["cosine"]
-             for r in dedup.embedding_dup_pairs(emb).collect()}
-    ivf = {(r["id_a"], r["id_b"]): r["cosine"]
-           for r in dedup.embedding_dup_pairs_ivf(emb).collect()}
-    assert set(ivf) <= set(brute)
-    assert all(brute[p] == c for p, c in ivf.items())
-    exact_pairs = {(i, i + 100000) for i in range(0, 500, 5)}
-    found_exact = exact_pairs & set(brute)
-    assert found_exact <= set(ivf)  # identical vectors can't split clusters
-    recall = len(ivf) / len(brute)
-    assert recall > 0.6  # near-dups mostly co-cluster
-
-
-def test_ann_lsh_recall(spark, sf_smoke):
-    emb = spark.read.parquet(f"{sf_smoke}/embeddings.parquet")
-    queries = emb.filter("vec_id < 20")
-    brute = {(r["q_id"], r["neighbor_id"])
-             for r in ann.brute_force_topk(emb, queries, k=10).collect()}
-    lsh = {(r["q_id"], r["neighbor_id"])
-           for r in ann.lsh_bucket_topk(emb, queries, k=10, dim=64).collect()}
-    # multi-table LSH (4 planes × 12 tables): measured recall ≈ 0.79 here
-    recall = len(brute & lsh) / len(brute)
-    assert recall > 0.5
-    lsh2 = {(r["q_id"], r["neighbor_id"])
-            for r in ann.lsh_bucket_topk(emb, queries, k=10, dim=64).collect()}
-    assert lsh == lsh2
-
-
-def test_ann_ivf_mechanism_and_recall(spark, sf_smoke):
-    emb = spark.read.parquet(f"{sf_smoke}/embeddings.parquet")
-    queries = emb.filter("vec_id < 20")
-    # mechanism: every vector lands in exactly one cluster, clusters are
-    # actual centroid ids
-    cents = ann.seed_centroids(emb, n_centroids=32)
-    assign = ann.ivf_assign(emb, cents)
-    n = emb.count()
-    assert assign.count() == n
-    assert assign.select("vec_id").distinct().count() == n
-    cent_ids = {r["centroid_id"] for r in cents.collect()}
-    assert {r["cluster_id"] for r in assign.collect()} <= cent_ids
-    # recall vs brute force: IVF neighbors must be exactly the brute-force
-    # ranking restricted to probed clusters (correct-by-construction check),
-    # and absolute recall is reported by the nprobe/n_clusters ratio
-    ivf = {(r["q_id"], r["neighbor_id"])
-           for r in ann.ivf_topk(emb, queries, k=10, n_centroids=32,
-                                 nprobe=3).collect()}
-    brute = {(r["q_id"], r["neighbor_id"])
-             for r in ann.brute_force_topk(emb, queries, k=10).collect()}
-    recall = len(brute & ivf) / len(brute)
-    # synthetic embeddings are near-uniform (no cluster structure), so the
-    # floor is ~nprobe/n_centroids; measured recall sits well above it
-    assert recall >= 0.2
-    # determinism
-    ivf2 = {(r["q_id"], r["neighbor_id"])
-            for r in ann.ivf_topk(emb, queries, k=10, n_centroids=32,
-                                  nprobe=3).collect()}
-    assert ivf == ivf2
-    # probing ALL clusters must reproduce brute force exactly
-    full = {(r["q_id"], r["neighbor_id"])
-            for r in ann.ivf_topk(emb, queries, k=10, n_centroids=32,
-                                  nprobe=len(cent_ids)).collect()}
-    assert full == brute
-
-
-def test_ivf_kmeans_refinement_improves_recall(spark, sf_correct):
-    """Round-3 (VERDICT r02 #4): one deterministic Lloyd refinement round on
-    the hash-sampled seed centroids must not hurt — and at the driver's
-    sf0.01 measurably helps — recall@10 vs brute force at fixed
-    (n_centroids, nprobe). Measured here: seed 0.32, refine=1 0.38."""
-    emb = spark.read.parquet(f"{sf_correct}/embeddings.parquet")
-    queries = emb.filter("vec_id < 5")
-    brute = {(r["q_id"], r["neighbor_id"])
-             for r in ann.brute_force_topk(emb, queries, k=10).collect()}
-
-    def recall(refine):
-        ivf = {(r["q_id"], r["neighbor_id"])
-               for r in ann.ivf_topk(emb, queries, k=10, n_centroids=32,
-                                     nprobe=3, refine=refine).collect()}
-        return len(brute & ivf) / len(brute)
-
-    r0, r1 = recall(0), recall(1)
-    assert r1 >= r0  # refinement never hurts on this corpus
-    assert r1 >= 0.3  # driver-query shape (refine=1) bound; measured 0.38
-    # refined centroids are deterministic: same result on a re-run
-    cents = ann.refine_centroids(
-        emb, ann.seed_centroids(emb, n_centroids=32), rounds=1)
-    a = {(r["centroid_id"], tuple(r["_ctv"])) for r in cents.collect()}
-    cents2 = ann.refine_centroids(
-        emb, ann.seed_centroids(emb, n_centroids=32), rounds=1)
-    b = {(r["centroid_id"], tuple(r["_ctv"])) for r in cents2.collect()}
-    assert a == b
-
-
-def test_ivf_centroid_count_is_fixed_not_corpus_proportional(spark, sf_smoke):
-    """The 100 TB invariant: centroid count == min(n_centroids, n) — a
-    parameter, independent of corpus size (round-1 regression: id % stride
-    sampling grew the broadcast linearly with n)."""
-    import pytest
-
-    emb = spark.read.parquet(f"{sf_smoke}/embeddings.parquet").select(
-        "vec_id", "embedding")
-    small = emb.limit(100)
-    doubled = emb.union(
-        emb.selectExpr("vec_id + 1000000 AS vec_id", "embedding"))
-    for corpus, n in ((small, 100), (emb, 500), (doubled, 1000)):
-        assert ann.seed_centroids(corpus, n_centroids=32).count() == 32, n
-    # k > n degrades to n centroids, never errors or returns empty
-    assert ann.seed_centroids(emb.limit(5), n_centroids=32).count() == 5
-    # empty corpus → empty centroids → empty (not crashed) topk
-    empty = emb.filter("vec_id < 0")
-    assert ann.seed_centroids(empty, n_centroids=32).count() == 0
-    assert ann.ivf_topk(empty, empty, k=5).count() == 0
-    with pytest.raises(ValueError):
-        ann.seed_centroids(emb, n_centroids=0)
-    # selection is a hash SAMPLE: doubling the corpus keeps the broadcast
-    # bounded but may rotate members in; same corpus → same centroids
-    c1 = sorted(r["centroid_id"]
-                for r in ann.seed_centroids(emb, n_centroids=32).collect())
-    c2 = sorted(r["centroid_id"]
-                for r in ann.seed_centroids(emb, n_centroids=32).collect())
-    assert c1 == c2
-
-
-def test_brute_topk_properties(spark, sf_smoke):
-    emb = spark.read.parquet(f"{sf_smoke}/embeddings.parquet")
-    queries = emb.filter("vec_id < 3")
-    rows = ann.brute_force_topk(emb, queries, k=10).collect()
-    by_q = {}
-    for r in rows:
-        by_q.setdefault(r["q_id"], []).append(r)
-    for q, rs in by_q.items():
-        rs.sort(key=lambda r: r["rank"])
-        assert [r["rank"] for r in rs] == list(range(1, 11))
-        cosines = [r["cosine"] for r in rs]
-        assert cosines == sorted(cosines, reverse=True)
-        assert all(r["neighbor_id"] != q for r in rs)
-
-
 def test_connected_components_semantics(spark):
     """Min-label propagation: singletons self-label; chains/triangles
     collapse to the min id; convergence beats max_iter on small diameters."""
@@ -510,7 +351,7 @@ def test_dedup_near_keeps_one_per_component(spark, sf_smoke):
     pairs = dedup.lsh_verified_pairs(docs)
     comp = {r["doc_id"]: r["component_id"]
             for r in dedup.connected_components(docs, pairs).collect()}
-    kept = {r["doc_id"] for r in dedup.dedup_near(docs, pairs).collect()}
+    kept = {r["doc_id"] for r in dedup.dedup_near(docs).collect()}
     expected = {d for d, c in comp.items() if d == c}
     assert kept == expected
     assert len(kept) < docs.count()  # planted dups really collapsed
@@ -582,12 +423,14 @@ def test_incremental_components_matches_full_recompute(spark):
                                   for k in want if got.get(k) != want[k]})
 
 
-def test_incremental_components_driver_path_equivalence(spark):
+def test_incremental_components_driver_path_equivalence(spark, jobs_run_by):
     """Round-5: the bounded driver-side union-find fast path
     (driver_threshold) must return EXACTLY the distributed result — on a
     delta that merges two components, adds a new cluster, and makes a new
     node a component minimum — and a delta LARGER than the threshold must
-    fall back to the distributed path (threshold=1 here), identically."""
+    fall back to the distributed path (threshold=1 here), identically.
+    The contracted edge list is checkpointed once, so the driver path's
+    call runs 7 eager jobs."""
     labels = spark.createDataFrame(
         [("b", "b"), ("c", "b"), ("f", "f"), ("g", "f"), ("z", "z")],
         "doc_id string, component_id string")
@@ -599,11 +442,13 @@ def test_incremental_components_driver_path_equivalence(spark):
         "id_a string, id_b string")
     want = None
     for thr in (0, 1, 10_000):
-        got = sorted(map(tuple, dedup.incremental_components(
-            labels, delta, driver_threshold=thr).collect()))
+        merged, n_jobs = jobs_run_by(lambda: dedup.incremental_components(
+            labels, delta, driver_threshold=thr))
+        got = sorted(map(tuple, merged.collect()))
         if want is None:
             want = got
         assert got == want, thr
+    assert n_jobs == 7  # the driver path (thr=10_000)
     assert dict(want) == {"a": "a", "b": "a", "c": "a", "f": "a", "g": "a",
                           "p": "p", "q": "p", "z": "z", "z2": "z"}
 
@@ -711,36 +556,6 @@ def test_star_components_agree_with_propagation(spark, sf_smoke):
     assert prop == star
 
 
-def test_ivf_recall_sweep_table(spark, sf_correct):
-    """Round-4 (VERDICT r03 #6): the recall/compute sweep behind the driver
-    query's (refine=1, nprobe=6) choice, recorded as a table, plus the
-    raised floor — recall@10 ≥ 0.5 at the driver's exact sf0.01 config
-    (everything is deterministic, so the bound cannot flake). Measured:
-    refine=0: 0.32/0.48/0.60 at nprobe=3/6/8; refine=1: 0.38/0.54/0.60 —
-    probe width is the main axis, one k-means round adds ~+0.06 at fixed
-    width, and (1, 6) is the cheapest config at or above 0.5 (~19% of the
-    corpus probed)."""
-    emb = spark.read.parquet(f"{sf_correct}/embeddings.parquet")
-    queries = emb.filter("vec_id < 5")
-    brute = {(r["q_id"], r["neighbor_id"])
-             for r in ann.brute_force_topk(emb, queries, k=10).collect()}
-
-    rec = {}
-    for refine in (0, 1):
-        for nprobe in (3, 6, 8):
-            ivf = {(r["q_id"], r["neighbor_id"])
-                   for r in ann.ivf_topk(emb, queries, k=10, n_centroids=32,
-                                         nprobe=nprobe,
-                                         refine=refine).collect()}
-            rec[(refine, nprobe)] = len(brute & ivf) / len(brute)
-    print("IVF recall@10 sweep (refine, nprobe):", rec)
-    # the driver config clears the raised floor
-    assert rec[(1, 6)] >= 0.5, rec
-    # refinement helps at the knee; probe width is monotone around it
-    assert rec[(1, 6)] >= rec[(0, 6)], rec
-    assert rec[(1, 3)] <= rec[(1, 6)] <= rec[(1, 8)], rec
-
-
 def test_lsh_bucket_cap_recall_floor(spark, sf_correct):
     """Round-4 (VERDICT r03 #7): the cost knob must have a MEASURED recall
     cost, separated into its two components. (1) The CAP's own cost —
@@ -768,109 +583,6 @@ def test_lsh_bucket_cap_recall_floor(spark, sf_correct):
         assert cap_recall >= 0.99, (cap, cap_recall)
         # and vs exact Jaccard the capped set is no worse than LSH itself
         assert len(got & exact) / len(exact) >= 0.98, cap
-
-
-def test_ivf_materialized_index_matches_in_session(spark, sf_correct, tmp_path):
-    """Round-4: the on-disk cluster-partitioned IVF index must be a purely
-    PHYSICAL change — serving from it returns exactly the in-session
-    ivf_topk result at the same (n_centroids, refine, nprobe), and a
-    rebuilt index serves identically (deterministic build)."""
-    emb = spark.read.parquet(f"{sf_correct}/embeddings.parquet")
-    queries = emb.filter("vec_id < 5")
-    in_session = sorted(
-        map(tuple, ann.ivf_topk(emb, queries, k=10, n_centroids=32,
-                                nprobe=6, refine=1).collect()))
-    idx = str(tmp_path / "ivf1")
-    ann.write_ivf_index(emb, idx, n_centroids=32, refine=1)
-    served = sorted(
-        map(tuple, ann.ivf_topk_from_index(spark, idx, queries, k=10,
-                                           nprobe=6).collect()))
-    assert served == in_session
-    idx2 = str(tmp_path / "ivf2")
-    ann.write_ivf_index(emb, idx2, n_centroids=32, refine=1)
-    served2 = sorted(
-        map(tuple, ann.ivf_topk_from_index(spark, idx2, queries, k=10,
-                                           nprobe=6).collect()))
-    assert served2 == served
-
-
-def test_ivf_index_append_equals_rebuild(spark, sf_correct, tmp_path):
-    """Round-5 incremental index maintenance (VERDICT r04 #6): building an
-    index on corpus A then APPENDING corpus B must serve exactly the same
-    results as a full rebuild over A∪B against the SAME centroids (the
-    centroid set is immutable across appends by design — drift is a
-    rebuild decision, documented in append_to_ivf_index)."""
-    emb = spark.read.parquet(f"{sf_correct}/embeddings.parquet")
-    part_a = emb.filter("vec_id % 3 != 0")
-    part_b = emb.filter("vec_id % 3 = 0")
-    queries = emb.filter("vec_id < 5")
-
-    idx = str(tmp_path / "ivf_inc")
-    ann.write_ivf_index(part_a, idx, n_centroids=32, refine=1)
-    ann.append_to_ivf_index(spark, idx, part_b)
-    appended = sorted(
-        map(tuple, ann.ivf_topk_from_index(spark, idx, queries, k=10,
-                                           nprobe=6).collect()))
-
-    idx_full = str(tmp_path / "ivf_full")
-    ann.write_ivf_index(
-        emb, idx_full, centroids=ann.read_ivf_centroids(spark, idx))
-    rebuilt = sorted(
-        map(tuple, ann.ivf_topk_from_index(spark, idx_full, queries, k=10,
-                                           nprobe=6).collect()))
-    assert appended == rebuilt
-
-
-def test_ivf_index_append_compaction_bounds_files(spark, sf_correct, tmp_path):
-    """Appends accumulate one file per touched cluster; past the file-count
-    cap a cluster directory is compacted (atomic swap) — results unchanged,
-    per-cluster file count back to 1."""
-    import glob
-
-    emb = spark.read.parquet(f"{sf_correct}/embeddings.parquet")
-    queries = emb.filter("vec_id < 5")
-    idx = str(tmp_path / "ivf_c")
-    ann.write_ivf_index(emb.filter("vec_id % 7 = 6"), idx, n_centroids=32,
-                        refine=1)
-    compacted = []
-    for m in range(6):
-        compacted += ann.append_to_ivf_index(
-            spark, idx, emb.filter(f"vec_id % 7 = {m}"), compact_files_cap=4)
-    assert compacted, "six appends into 32 clusters must trip a cap of 4"
-    # invariant after any append: no cluster directory exceeds the cap
-    for cdir in glob.glob(f"{idx}/vectors/cluster_id=*"):
-        files = glob.glob(f"{cdir}/*.parquet")
-        assert 1 <= len(files) <= 4, (cdir, files)
-    served = sorted(
-        map(tuple, ann.ivf_topk_from_index(spark, idx, queries, k=10,
-                                           nprobe=6).collect()))
-    idx_full = str(tmp_path / "ivf_cf")
-    ann.write_ivf_index(emb, idx_full,
-                        centroids=ann.read_ivf_centroids(spark, idx))
-    rebuilt = sorted(
-        map(tuple, ann.ivf_topk_from_index(spark, idx_full, queries, k=10,
-                                           nprobe=6).collect()))
-    assert served == rebuilt
-
-
-def test_dedup_near_semantic_collapses_planted_embedding_dups(spark, sf_smoke):
-    """Round-4 semantic dedup end-to-end: exact embedding copies (i,
-    i+100000 for i % 5 == 0) must collapse to the min-id keeper when the
-    IVF-bucketed cosine pairs feed dedup_near; copies land in the SAME IVF
-    cluster by construction (identical vectors assign identically), so
-    bucketing can never separate an exact-dup pair."""
-    from extract_address_ner_spark.entry_queries_data import dup_embeddings
-
-    docs = dup_embeddings(spark, sf_smoke)
-    pairs = dedup.embedding_dup_pairs_ivf(docs)
-    kept = {r["vec_id"]
-            for r in dedup.dedup_near(docs, pairs=pairs,
-                                      id_col="vec_id").collect()}
-    planted = [r["vec_id"] for r in docs.filter(
-        "vec_id % 5 = 0 AND vec_id < 100000").collect()]
-    assert planted, "fixture lost its planted dups"
-    for i in planted:
-        assert i in kept and (i + 100000) not in kept, i
 
 
 def test_connected_components_string_ids(spark):
@@ -920,32 +632,6 @@ def test_incremental_cap_recall_sandwich(spark, sf_smoke):
     assert incremental(None) == uncapped
 
 
-def test_ivf_displaced_cluster_recovery(spark, sf_correct, tmp_path):
-    """Round-5 code review: the per-cluster compaction swap's crash window
-    (original displaced to .old, compacted dir not yet renamed in) must
-    self-heal on the next read or append — without recovery the cluster's
-    vectors silently vanish from every probe AND the .old dir breaks
-    partition discovery."""
-    import glob
-    import os
-
-    emb = spark.read.parquet(f"{sf_correct}/embeddings.parquet")
-    queries = emb.filter("vec_id < 5")
-    idx = str(tmp_path / "ivf_r")
-    ann.write_ivf_index(emb, idx, n_centroids=32, refine=1)
-    want = sorted(
-        map(tuple, ann.ivf_topk_from_index(spark, idx, queries, k=10,
-                                           nprobe=6).collect()))
-
-    victim = sorted(glob.glob(f"{idx}/vectors/cluster_id=*"))[0]
-    os.rename(victim, victim + ".old")  # simulated mid-swap crash
-    got = sorted(
-        map(tuple, ann.ivf_topk_from_index(spark, idx, queries, k=10,
-                                           nprobe=6).collect()))
-    assert got == want
-    assert os.path.isdir(victim) and not os.path.isdir(victim + ".old")
-
-
 def test_similar_docs_serving(spark, sf_smoke):
     """Textual similarity search (dedup.similar_docs): for a query doc with
     a planted exact copy (doc_id % 7 = 0 → +200000), the copy must be rank
@@ -983,9 +669,9 @@ def test_similar_docs_plan_broadcasts_query_side(spark, sf_smoke):
 
 
 def test_similar_docs_serves_from_durable_band_index(spark, sf_smoke, tmp_path):
-    """Index-serving twin (the ann.ivf_topk_from_index shape for text):
-    similar_docs(band_index=...) probing a parquet-backed band table —
-    written in the incremental path's bands/v* convention — must return
+    """Index serving: similar_docs(band_index=...) probing a parquet-backed
+    band table — written in the incremental path's bands/v* convention —
+    must return
     exactly the from-scratch result, with the corpus never re-banded."""
     docs = dup_documents(spark, sf_smoke)
     qs = docs.filter(F.col("doc_id") % 101 == 7)

@@ -149,49 +149,6 @@ def test_filtered_evaluation_metrics(trained):
     assert abs(m["hits_3"] - row["hits_3"] * 6 / 8) < 0.01
 
 
-def test_ann_serving_composition_matches_exhaustive(trained):
-    """The documented at-scale serving path, demonstrated: feed the TransE
-    target vectors t = e_s + r_p as ANN queries over the entity-embedding
-    table (operators/ann.brute_force_topk — cosine over unit-norm
-    candidates ranks identically to the dot product / L2) and the
-    exhaustive predict_links top-1 must appear in the ANN top-3 for every
-    query (top-3 absorbs the two paths' different rounding/tie-break
-    conventions: 4dp cosine + id vs 6dp dot + obj)."""
-    from extract_address_ner_spark.operators.ann import brute_force_topk
-    from extract_address_ner_spark.operators.kg_embed import predict_links
-
-    edges, emb, _ = trained
-    q = edges.filter(F.col("pred") == "located_in").select("subj", "pred")
-    exhaustive = {
-        (r["subj"], r["pred"]): r["obj"]
-        for r in predict_links(emb, q, k=1).collect()
-    }
-    es = emb.filter(F.col("kind") == "e").select(
-        F.col("name").alias("subj"), F.col("vec").alias("_ev")
-    )
-    rs = emb.filter(F.col("kind") == "r").select(
-        F.col("name").alias("pred"), F.col("vec").alias("_rv")
-    )
-    targets = (
-        q.distinct()
-        .join(es, "subj")
-        .join(rs, "pred")
-        .select(
-            F.concat_ws("|", "subj", "pred").alias("vec_id"),
-            F.zip_with("_ev", "_rv", lambda a, b: a + b).alias("embedding"),
-        )
-    )
-    entities = emb.filter(F.col("kind") == "e").select(
-        F.col("name").alias("vec_id"), F.col("vec").alias("embedding")
-    )
-    ann_top = {}
-    for r in brute_force_topk(entities, targets, k=3).collect():
-        ann_top.setdefault(r["q_id"], []).append(r["neighbor_id"])
-    assert len(ann_top) == len(exhaustive) == 6
-    for (subj, pred), top1 in exhaustive.items():
-        assert top1 in ann_top[f"{subj}|{pred}"], (subj, pred)
-
-
 def test_degenerate_graph_fails_loudly(spark):
     """A complete digraph (with self-loops) filters EVERY corruption as a
     true triple — training on zero pairs must raise, not emit garbage."""

@@ -10,7 +10,6 @@ does.
 
 from pyspark.sql import functions as F
 
-from extract_address_ner_spark.operators import ann
 from extract_address_ner_spark.operators.canonicalize import canonicalize_mentions
 from extract_address_ner_spark.operators.link import build_edges
 from extract_address_ner_spark.operators.tagger import extract_mentions
@@ -46,23 +45,6 @@ def test_events_latest_n_is_take_ordered(spark, sf_smoke):
     assert "Sort " not in plan  # no global sort operator
 
 
-def test_seed_centroids_is_take_ordered(spark, sf_smoke):
-    emb = spark.read.parquet(f"{sf_smoke}/embeddings.parquet")
-    plan = _plan(ann.seed_centroids(emb, n_centroids=32))
-    assert "TakeOrderedAndProject" in plan
-
-
-def test_ivf_assign_argmax_is_partially_aggregated(spark, sf_smoke):
-    """The nearest-centroid argmax must be max(struct(...)) with a map-side
-    partial (one combined row per vector crosses the shuffle), NOT a
-    row_number window (which would shuffle-and-sort every scored row)."""
-    emb = spark.read.parquet(f"{sf_smoke}/embeddings.parquet")
-    cents = ann.seed_centroids(emb, n_centroids=32)
-    plan = _plan(ann.ivf_assign(emb, cents))
-    assert "partial_max" in plan
-    assert "Window" not in plan
-
-
 def test_corpus_scan_is_pruned_to_needed_columns(spark, sf_smoke):
     """documents has (doc_id, text, lang, ...); the mention pipeline must
     read exactly the columns the derivation uses — at 100 TB a scan that
@@ -75,13 +57,6 @@ def test_corpus_scan_is_pruned_to_needed_columns(spark, sf_smoke):
     assert schemas, plan
     cols = {c.split(":")[0] for s in schemas for c in s.split(",") if c}
     assert cols == {"doc_id", "text", "lang"}
-
-
-def test_ann_query_filter_pushed_to_scan(spark, sf_smoke):
-    emb = spark.read.parquet(f"{sf_smoke}/embeddings.parquet")
-    queries = emb.filter("vec_id < 5")
-    plan = _plan(ann.brute_force_topk(emb, queries, k=10))
-    assert "LessThan(vec_id,5)" in plan  # PushedFilters reaches parquet
 
 
 def _shuffle_records_written(spark, fn) -> int:
@@ -185,17 +160,6 @@ def test_graph_queries_no_sort_merge_join(spark, sf_smoke, tmp_path):
         assert "ReusedExchange" in _plan(df), read.__name__
 
 
-def test_refine_centroids_mean_is_partially_aggregated(spark, sf_smoke):
-    """The element-wise centroid mean must show partial_avg BEFORE its
-    exchange — the posexplode is pipelined into a map-side combine, so the
-    shuffle carries at most n_centroids x dim partial rows per partition,
-    never n x dim exploded rows."""
-    emb = spark.read.parquet(f"{sf_smoke}/embeddings.parquet")
-    plan = _plan(ann.refine_centroids(emb, ann.seed_centroids(emb, 32), 1))
-    assert "partial_avg" in plan
-    assert "SortMergeJoin" not in plan
-
-
 def test_bucketed_edges_aggregate_is_shuffle_free(spark, sf_smoke, tmp_path):
     """Round-3 storage-layer co-location: subj-keyed aggregation over the
     bucketed edge table must plan with ZERO Exchange (bucket files ARE the
@@ -214,48 +178,6 @@ def test_bucketed_edges_aggregate_is_shuffle_free(spark, sf_smoke, tmp_path):
     assert sorted(map(tuple, agg.collect())) == sorted(
         map(tuple, direct.collect()))
     spark.sql("DROP TABLE kg_edges_bucketed_test")
-
-
-def test_ivf_index_probe_scan_is_partition_pruned(spark, sf_smoke, tmp_path):
-    """Round-4 serving shape: a probe against the materialized IVF index
-    must push the probed-cluster predicate into the scan's
-    PartitionFilters (static literal IN-list → pruning at planning time),
-    and the pruned scan must touch only the probed cluster directories —
-    nprobe of n_centroids — never the full index."""
-    from pyspark.sql import functions as F
-
-    emb = spark.read.parquet(f"{sf_smoke}/embeddings.parquet")
-    idx = str(tmp_path / "ivf")
-    ann.write_ivf_index(emb, idx, n_centroids=16)
-    served = ann.ivf_topk_from_index(spark, idx, emb.filter("vec_id < 3"),
-                                     k=5, nprobe=2)
-    plan = _plan(served)
-    # the IN-list lands in PartitionFilters with the attribute id baked in
-    # (e.g. "PartitionFilters: [cluster_id#71 IN (9,14)") — match the
-    # pruning site, not a bare substring the #id would break
-    import re
-    assert re.search(r"PartitionFilters: \[cluster_id#\d+ IN \(", plan), plan
-    # ground truth on the filesystem: exactly one parquet dir per cluster
-    # (small-files discipline), and a probed read lists only probed dirs
-    import os
-    dirs = [d for d in os.listdir(f"{idx}/vectors")
-            if d.startswith("cluster_id=")]
-    assert len(dirs) == 16
-    one = int(dirs[0].split("=")[1])
-    pruned = spark.read.parquet(f"{idx}/vectors").filter(
-        F.col("cluster_id") == one)
-    assert pruned.collect()  # execute THIS df so its scan metrics populate
-    # ground truth from the executed scan node itself: 1 of 16 cluster
-    # directories actually read. (inputFiles() is no evidence — it lists
-    # the whole relation, ignoring partition pruning.)
-    leaves = pruned._jdf.queryExecution().executedPlan().collectLeaves()
-    nums = {}
-    for i in range(leaves.size()):
-        it = leaves.apply(i).metrics().iterator()
-        while it.hasNext():
-            kv = it.next()
-            nums[kv._1()] = kv._2().value()
-    assert nums.get("numFiles") == 1 and nums.get("numPartitions") == 1, nums
 
 
 def test_asof_join_is_single_shuffle_no_join(spark, sf_smoke):

@@ -1,12 +1,11 @@
 """Oracle replay for the pytest-carried registry entries (VERDICT r04 #1).
 
-The round driver executes at most 50 registry entries; four equivalence-pinned
-variants were folded out of the driver-facing registry to make room for the
-streaming/incremental family. This test replays each demoted entry against
-its DuckDB oracle EXACTLY the way the driver does (column-name-sorted,
-stringified, order-insensitive row compare), so demotion loses zero oracle
-coverage — plus a contract test that the driver-facing registry stays at the
-cap with the least-proven family first.
+The round driver executes at most 50 registry entries; the entries past
+that cap are registered with ``driver=False``. This test replays each of
+them against its DuckDB oracle EXACTLY the way the driver does
+(column-name-sorted, stringified, order-insensitive row compare), so
+demotion loses zero oracle coverage — plus a contract test that the
+driver-facing registry stays at the cap with the least-proven family first.
 """
 
 from pathlib import Path
