@@ -757,14 +757,12 @@ SELECT deg.node,
 FROM deg LEFT JOIN tc ON tc.node = deg.node"""
 
 
-@register("graph_triangles", gold_triangles_sql(), driver=False)
+@register("graph_triangles", gold_triangles_sql())
 def q_graph_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-node triangle counts + local clustering coefficient over the
     co-mention projection of the built KG — the community-density read
     (operators/graph_query.triangle_stats, degree-oriented wedge
-    enumeration). Pytest-carried (driver registry is at its 50-entry cap;
-    tests/test_registry_oracles.py replays this against the three-way
-    self-join oracle exactly the way the driver would)."""
+    enumeration), checked against a three-way self-join oracle."""
     from .operators.graph_query import comention_pairs, triangle_stats
 
     pairs = comention_pairs(_built_edges(spark, sf_dir)).select(
@@ -796,14 +794,12 @@ FROM sh JOIN sz sa ON sa.repo = sh.repo_a
         JOIN sz sb ON sb.repo = sh.repo_b"""
 
 
-@register("graph_repo_similarity", gold_repo_similarity_sql(), driver=False)
+@register("graph_repo_similarity", gold_repo_similarity_sql())
 def q_graph_repo_similarity(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Repo–repo Jaccard similarity over capped, df-filtered address
     vocabularies (related-repositories read;
-    operators/graph_query.repo_similarity). Pytest-carried (driver
-    registry is at its 50-entry cap; tests/test_registry_oracles.py
-    replays this against the inverted-index oracle exactly the way the
-    driver would)."""
+    operators/graph_query.repo_similarity), checked against an
+    inverted-index oracle."""
     from .operators.graph_query import repo_similarity
 
     return repo_similarity(_built_edges(spark, sf_dir))
@@ -898,17 +894,13 @@ l0 AS (SELECT DISTINCT addr AS node, addr AS lbl FROM m),{",".join(rounds)}
 SELECT node, lbl AS community_id FROM l{iterations}"""
 
 
-@register("graph_label_communities", gold_label_communities_sql(),
-          driver=False)
+@register("graph_label_communities", gold_label_communities_sql())
 def q_graph_label_communities(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Community detection by synchronous label propagation over the
     co-mention projection (operators/graph_query.label_propagation) —
     finer than the component-based `graph_communities`: bridged cliques
     stay separate communities. Deterministic (count-desc, label-asc
-    tie-break), fixed 3 rounds, oracle = the unrolled-CTE twin.
-    Pytest-carried (driver registry is at its 50-entry cap;
-    tests/test_registry_oracles.py replays this the way the driver
-    would)."""
+    tie-break), fixed 3 rounds, oracle = the unrolled-CTE twin."""
     from .operators.graph_query import comention_pairs, label_propagation
 
     edges = _built_edges(spark, sf_dir)
@@ -1193,14 +1185,12 @@ SELECT pred, CAST(count(*) AS BIGINT) AS n_triples,
 FROM _edges GROUP BY pred"""
 
 
-@register("graph_pred_stats", gold_pred_stats_sql(), driver=False)
+@register("graph_pred_stats", gold_pred_stats_sql())
 def q_graph_pred_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """VoID-style per-predicate statistics (triples, distinct subjects,
     distinct objects) — with `graph_char_sets` the planner-statistics pair
     an RDF store keeps for cardinality estimation. One pred-keyed shuffle,
-    map-side combinable; output is O(#predicates). Pytest-carried (driver
-    registry is at its 50-entry cap; tests/test_registry_oracles.py replays
-    this against the oracle exactly the way the driver would)."""
+    map-side combinable; output is O(#predicates)."""
     from .operators.kg_export import predicate_stats
 
     return predicate_stats(_built_edges(spark, sf_dir))

@@ -1,7 +1,7 @@
-"""Driver-checkable queries for the non-KG operators: text analysis, dedup
-(exact / MinHash / LSH / Jaccard / SimHash), events, multimodal plumbing and
-training-data hygiene. Registered into the same registry as the KG pipeline
-queries (entry_queries.register).
+"""Driver-checkable queries for the non-KG operators: dedup (exact / MinHash /
+LSH / Jaccard / SimHash), events, multimodal plumbing and training-data
+hygiene. Registered into the same registry as the KG pipeline queries
+(entry_queries.register).
 
 Dup-corpus derivation: ``dup_documents`` adds exact copies (doc_id % 7,
 +200000) and near copies ('DUP ' prefix, doc_id % 5, +100000) so dedup
@@ -15,13 +15,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .entry_queries import register
-from .functions.textstats import (
-    STOPWORDS,
-    with_fingerprints,
-    with_lang_id,
-    with_quality_score,
-    with_token_stats,
-)
 from .operators import dedup
 from .sources.corpus import register_documents
 
@@ -51,16 +44,7 @@ def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # DuckDB helpers mirroring the Spark expressions
-_D_WORDS = "regexp_extract_all(text, '[A-Za-z]+')"
 _D_H64 = "CAST(concat('0x', substr(md5({}), 1, 15)) AS BIGINT)"
-
-
-def _d_stop_hits(words: list[str]) -> str:
-    arr = "[" + ", ".join(f"'{w}'" for w in words) + "]"
-    return (
-        f"len(list_filter(string_split(lower(text), ' '), t -> list_contains({arr}, t)))"
-    )
-
 
 _D_SHINGLES = """
 CASE WHEN len(ws) < 3 THEN [array_to_string(ws, ' ')]
@@ -68,77 +52,6 @@ ELSE list_transform(generate_series(1, len(ws) - 2), i -> ws[i] || ' ' || ws[i+1
 END"""
 
 _D_WS = "list_filter(string_split(text, ' '), t -> len(t) > 0)"
-
-
-# --------------------------------------------------------------------------
-# text analysis
-# --------------------------------------------------------------------------
-
-# BPE_RE with the leading apostrophe doubled for a SQL string literal
-_D_BPE = r"'''(?:s|t|re|ve|m|ll|d)| ?\p{L}+| ?\p{N}+| ?[^\s\p{L}\p{N}]+|\s+'"
-
-@register(
-    "text_token_stats",
-    f"""
-SELECT doc_id,
-  CAST(length(text) AS INT) AS n_chars_calc,
-  CAST(len({_D_WS}) AS INT) AS n_tokens_ws,
-  CAST(len({_D_WORDS}) AS INT) AS n_words,
-  CAST(len(regexp_extract_all(text, {_D_BPE})) AS INT) AS n_tokens_bpe,
-  CAST(round(coalesce(list_sum(list_transform({_D_WORDS}, w -> len(w))), 0)
-       / greatest(len({_D_WORDS}), 1), 4) AS DOUBLE) AS avg_word_len
-FROM documents""",
-)
-def q_token_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return with_token_stats(_docs(spark, sf_dir)).select(
-        "doc_id", "n_chars_calc", "n_tokens_ws", "n_words", "n_tokens_bpe",
-        "avg_word_len"
-    )
-
-
-@register(
-    "text_quality_score",
-    f"""
-SELECT doc_id,
-  CAST(round({_d_stop_hits(STOPWORDS['en'])} / greatest(len({_D_WORDS}), 1), 4) AS DOUBLE) AS stop_ratio,
-  CAST(round(len(regexp_extract_all(text, '[^A-Za-z0-9 ]')) / greatest(length(text), 1), 4) AS DOUBLE) AS punct_ratio,
-  CAST(round(0.5 * least(1.0, len({_D_WORDS}) / 100.0)
-       + 0.25 * ({_d_stop_hits(STOPWORDS['en'])} / greatest(len({_D_WORDS}), 1))
-       + 0.25 * (1 - len(regexp_extract_all(text, '[^A-Za-z0-9 ]')) / greatest(length(text), 1)), 4) AS DOUBLE) AS quality
-FROM documents""",
-)
-def q_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return with_quality_score(_docs(spark, sf_dir)).select(
-        "doc_id", "stop_ratio", "punct_ratio", "quality"
-    )
-
-
-@register(
-    "text_lang_id",
-    f"""
-SELECT doc_id,
-  CASE WHEN regexp_matches(text, '[가-힣]') THEN 'ko'
-       WHEN {_d_stop_hits(STOPWORDS['en'])} >= {_d_stop_hits(STOPWORDS['fr'])}
-        AND {_d_stop_hits(STOPWORDS['en'])} >= {_d_stop_hits(STOPWORDS['de'])} THEN 'en'
-       WHEN {_d_stop_hits(STOPWORDS['fr'])} >= {_d_stop_hits(STOPWORDS['de'])} THEN 'fr'
-       ELSE 'de' END AS pred_lang
-FROM documents""",
-)
-def q_lang_id(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return with_lang_id(_docs(spark, sf_dir)).select("doc_id", "pred_lang")
-
-
-@register(
-    "text_fingerprints",
-    f"""
-SELECT doc_id, sha256(text) AS fp_sha256,
-  {_D_H64.format('text')} AS fp64
-FROM documents""",
-)
-def q_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return with_fingerprints(_docs(spark, sf_dir)).select(
-        "doc_id", "fp_sha256", "fp64"
-    )
 
 
 # --------------------------------------------------------------------------
@@ -745,7 +658,7 @@ def q_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --------------------------------------------------------------------------
-# repetition quality stats + cross-document line dedup
+# cross-document line dedup
 # --------------------------------------------------------------------------
 
 # Deterministic line-structure injection (the raw corpus is single-line):
@@ -764,94 +677,9 @@ SELECT doc_id,
 FROM documents
 """.strip()
 
-# DuckDB list-HOF mirrors of the Spark expressions in with_repetition_stats
+# DuckDB list-HOF mirror of sanitize.boilerplate_lines' line split
 _D_LINES = ("list_filter(list_transform(string_split(text, chr(10)), "
             "l -> trim(l)), l -> l != '')")
-_D_WS2 = "list_filter(string_split(lower(text), ' '), t -> t != '')"
-_D_BG = ("CASE WHEN len(ws) >= 2 THEN list_transform("
-         "generate_series(1, len(ws) - 1), "
-         "i -> array_to_string(list_slice(ws, i, i + 1), ' ')) "
-         "ELSE [] END")
-
-
-# Shared CTE chain ending in a `stats` relation (doc_id, text, five stat
-# columns) — the stats query SELECTs the signals from it; the filter query
-# applies the Gopher thresholds to the SAME rounded values the Spark side
-# filters on.
-_REP_STATS_CTE = f"""
-WITH p AS ({LINE_DOCS}),
-base AS (SELECT doc_id, text, {_D_LINES} AS ls, {_D_WS2} AS ws FROM p),
-b2 AS (SELECT doc_id, text, ls, {_D_BG} AS bg FROM base),
-b3 AS (SELECT doc_id, text, ls, bg,
-  CASE WHEN len(bg) > 0 THEN list_max(list_transform(list_distinct(bg),
-    b -> len(list_filter(bg, x -> x = b)))) END AS maxc FROM b2),
-b4 AS (SELECT doc_id, text, ls, bg, maxc,
-  CASE WHEN len(bg) > 0 THEN list_min(list_filter(list_distinct(bg),
-    b -> len(list_filter(bg, x -> x = b)) = maxc)) END AS top FROM b3),
-stats AS (SELECT doc_id, text,
-  CAST(len(ls) AS INT) AS n_lines,
-  CAST(round(CASE WHEN len(ls) > 0
-    THEN 1 - CAST(len(list_distinct(ls)) AS DOUBLE) / len(ls)
-    ELSE 0 END, 4) AS DOUBLE) AS dup_line_frac,
-  CAST(round(CASE WHEN coalesce(list_sum(list_transform(ls,
-      l -> length(l))), 0) > 0
-    THEN CAST(coalesce(list_sum(list_transform(list_distinct(ls),
-      l -> (len(list_filter(ls, x -> x = l)) - 1) * length(l))), 0)
-      AS DOUBLE) / list_sum(list_transform(ls, l -> length(l)))
-    ELSE 0 END, 4) AS DOUBLE) AS dup_line_char_frac,
-  top AS top_bigram,
-  CAST(round(CASE WHEN len(bg) > 0
-    THEN CAST(maxc * length(top) AS DOUBLE) / greatest(length(text), 1)
-    ELSE 0 END, 4) AS DOUBLE) AS top2gram_char_frac
-FROM b4)""".strip()
-
-
-@register(
-    "docs_repetition_stats",
-    f"""
-{_REP_STATS_CTE}
-SELECT doc_id, n_lines, dup_line_frac, dup_line_char_frac, top_bigram,
-  top2gram_char_frac
-FROM stats""",
-    # pytest-carried (tests/test_registry_oracles.py): driver registry is at
-    # its 50-entry cap.
-    driver=False,
-)
-def q_repetition_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Gopher-style repetition signals over the line-injected corpus; full
-    value compare including the tie-broken top bigram. Narrow zero-Exchange
-    plan (pinned in tests/test_repetition.py)."""
-    from .functions.textstats import with_repetition_stats
-
-    register_documents(spark, sf_dir)
-    return with_repetition_stats(spark.sql(LINE_DOCS)).select(
-        "doc_id", "n_lines", "dup_line_frac", "dup_line_char_frac",
-        "top_bigram", "top2gram_char_frac",
-    )
-
-
-@register(
-    "docs_gopher_filter",
-    f"""
-{_REP_STATS_CTE}
-SELECT doc_id, text
-FROM stats
-WHERE dup_line_frac <= 0.30 AND dup_line_char_frac <= 0.20
-  AND top2gram_char_frac <= 0.20""",
-    # pytest-carried (tests/test_registry_oracles.py): driver registry is at
-    # its 50-entry cap.
-    driver=False,
-)
-def q_gopher_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The Gopher repetition FILTER end-to-end over the line-injected corpus
-    (kept docs compared bit-for-bit): pins that the threshold rule and the
-    pushdown fence are value-neutral — the fence exists purely to stop
-    predicate pushdown from re-inlining the stat trees (PLANS.md
-    optimizer-traps; plan pinned in tests/test_repetition.py)."""
-    from .functions.textstats import gopher_repetition_filter
-
-    register_documents(spark, sf_dir)
-    return gopher_repetition_filter(spark.sql(LINE_DOCS))
 
 
 @register(

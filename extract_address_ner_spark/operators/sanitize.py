@@ -2,7 +2,7 @@
 decontamination.
 
 Both are standard stages of a large-scale LLM training-data pipeline and
-round out the documents-table operator family (textstats / dedup):
+sit beside the dedup operators on the documents table:
 
 - :func:`pii_redact` — scrub emails, phone numbers, and IPv4 addresses from
   a text column, emitting per-type match counts and the redacted text. Pure
@@ -38,7 +38,7 @@ round out the documents-table operator family (textstats / dedup):
 No reference citation: the reference (a Korean-address NER service) has no
 data-hygiene surface; these operators are new scope per the round
 instructions ("operations a large-scale training-data pipeline would
-need"), sharing the documents-table conventions of functions/textstats.py.
+need"), taking a (doc_id, text) documents table like operators/dedup.py.
 """
 
 from __future__ import annotations
@@ -89,8 +89,8 @@ def _exploded_ngrams(
 ) -> DataFrame:
     """``extra_cols`` + one exploded ``_ng`` n-gram column. Lowercased
     whitespace-token n-grams; fewer than ``n`` tokens → no rows for the doc.
-    Tokenization (split on ' ', drop empties, lower) matches
-    functions/textstats.py's whitespace tokenizer and the DuckDB oracle.
+    Tokenization (split on ' ', drop empties, lower) matches the DuckDB
+    oracle.
 
     The token array is projected as a COLUMN ATTRIBUTE (``_toks``) before
     the n-gram transform: splicing the tokenization subtree into the lambda

@@ -52,16 +52,6 @@ broadcast per epoch), writes (kind, name, vec) under
 trained positive-vs-corrupted-negative mean-distance separation, and
 fails the job if the hinge loss did not decrease.
 
-``--hygiene`` runs the training-data HYGIENE stage over the corpus:
-Unicode NFC canonicalization first (content-keyed stages hash bytes), PII
-redaction with a zero-residual gate (the job fails if any pattern still
-matches the redacted text), eval-set 5-gram decontamination against the
-held-out ``doc_id % 17 = 5`` split (on a templated code corpus this
-honestly drops a large fraction — shared boilerplate n-grams ARE
-contamination by the GPT-3/Pile rule), the Gopher repetition filter, and
-boilerplate-line / duplicate-window reports; the cleaned corpus lands
-under ``<warehouse>/hygiene/corpus_clean``.
-
 ``--integrity-gate`` runs the eight-invariant integrity report
 (operators/graph_query.integrity_report) over the built edge/node stages
 and fails the job with a nonzero exit on ANY violation — the publish gate
@@ -132,15 +122,6 @@ def main() -> int:
              "keep-2 retention), print per-merge touched-bucket / bytes "
              "stats, and verify the final snapshot equals the batch edge "
              "stage exactly")
-    ap.add_argument(
-        "--hygiene", action="store_true",
-        help="run the training-data hygiene stage over the corpus: PII "
-             "redaction (emails/IPs/phones), eval-set 5-gram "
-             "decontamination (held-out split doc_id %% 17 = 5), Gopher "
-             "repetition filter, cross-document boilerplate-line and "
-             "duplicate-window reports; writes the cleaned corpus under "
-             "<warehouse>/hygiene/corpus_clean and FAILS the job if any "
-             "PII pattern survives redaction")
     ap.add_argument(
         "--embed", metavar="DIM,EPOCHS",
         help="train TransE KG embeddings on the built edge stage (numpy "
@@ -429,82 +410,6 @@ def main() -> int:
               f"keeper_set_equals_one_shot="
               f"{'true' if ddiff == 0 else 'false'}")
         if ddiff != 0:
-            ok = False
-    if args.hygiene:
-        from pyspark.sql import functions as F
-
-        from extract_address_ner_spark.functions.textstats import (
-            gopher_repetition_filter,
-        )
-        from extract_address_ner_spark.operators.sanitize import (
-            PII_STEPS,
-            boilerplate_lines,
-            decontaminate,
-            duplicate_window_stats,
-            normalize_text,
-            pii_redact,
-        )
-
-        raw = out["corpus"].selectExpr("doc_id", "content AS text")
-        # step 0: Unicode NFC canonicalization — everything downstream
-        # (sha256 gates, dedup keys, n-gram values) hashes BYTES.
-        # The stage fans out into ~8 actions (counts, gates, reports, the
-        # parquet write); without persists each one re-runs the Arrow NFC
-        # UDF + the PII regex chain from the scan — ~8× the stage's cost.
-        # Persist the two expensive frontiers (post-NFC, post-redact) and
-        # the contamination hits; everything downstream is column pruning.
-        normed = normalize_text(raw).persist()
-        nrow = normed.agg(
-            F.sum(F.col("changed").cast("long")).alias("_chg"),
-            F.count(F.lit(1)).alias("_n"),
-        ).collect()[0]
-        n_norm_changed, n_docs = int(nrow["_chg"] or 0), nrow["_n"]
-        docs = normed.select("doc_id", F.col("text_norm").alias("text"))
-        red = pii_redact(docs).persist()
-        # one pass for the per-type counts AND the redaction gate (re-scan
-        # the REDACTED text with every pattern — zero residuals or fail)
-        prow = red.agg(
-            *[F.sum(c).alias(c) for c, _p, _t in PII_STEPS],
-            F.sum(sum(
-                F.size(F.regexp_extract_all("redacted", F.lit(p), F.lit(0)))
-                for _c, p, _t in PII_STEPS
-            )).alias("_residual"),
-        ).collect()[0]
-        pii, residual = prow, prow["_residual"]
-        cleaned = red.select("doc_id", F.col("redacted").alias("text"))
-        # eval-set decontamination: the held-out split is doc_id % 17 = 5
-        # (the registry's eval-split convention); any training doc sharing
-        # a 5-gram with it is dropped before the repetition filter
-        ev = cleaned.filter(F.col("doc_id") % 17 == 5)
-        train = cleaned.filter(F.col("doc_id") % 17 != 5)
-        hits = decontaminate(train, ev).persist()
-        n_contam = hits.count()
-        decon = train.join(hits.select("doc_id"), "doc_id", "left_anti")
-        kept = gopher_repetition_filter(decon)
-        hy_dir = str(Path(args.warehouse) / "hygiene" / "corpus_clean")
-        shutil.rmtree(hy_dir, ignore_errors=True)
-        kept.write.parquet(hy_dir)
-        n_kept = spark.read.parquet(hy_dir).count()
-        n_train = train.count()
-        n_boiler = boilerplate_lines(cleaned, min_docs=2).count()
-        wstats = duplicate_window_stats(cleaned, w=15).agg(
-            F.sum("n_windows").alias("nw"), F.sum("n_dup_windows").alias("nd")
-        ).collect()[0]
-        dup_frac = (wstats["nd"] / wstats["nw"]) if wstats["nw"] else 0.0
-        print(f"hygiene: nfc_normalized changed={n_norm_changed}/{n_docs}")
-        print(f"hygiene: pii_redacted emails={pii['n_emails']} "
-              f"ips={pii['n_ips']} phones={pii['n_phones']} "
-              f"residual_matches={residual}")
-        print(f"hygiene: decontaminate eval_docs={n_docs - n_train} "
-              f"train_docs={n_train} contaminated={n_contam}")
-        print(f"hygiene: repetition_filter kept {n_kept}/{n_train} "
-              f"train docs; boilerplate_lines={n_boiler}; "
-              f"dup_window_frac={dup_frac:.4f} (w=15)")
-        print(f"hygiene: clean corpus at {hy_dir} "
-              f"pii_gate={'CLEAN' if residual == 0 else 'VIOLATED'}")
-        for _c in (hits, red, normed):
-            _c.unpersist()
-        if residual != 0:
             ok = False
     if args.integrity_gate:
         from extract_address_ner_spark.operators.graph_query import (

@@ -153,20 +153,3 @@ def test_job_entry_embed(tmp_path):
     assert "embed: dim=8 epochs=6" in stdout
     assert "LEARNED" in stdout and "NOT-LEARNING" not in stdout
     assert (tmp_path / "wh" / "kg_embeddings").exists()
-
-
-def test_job_entry_hygiene(tmp_path):
-    """Late round-5: the shipped job runs the training-data hygiene stage —
-    PII redaction with a zero-residual gate, eval-set 5-gram
-    decontamination of the held-out doc_id % 17 = 5 split, the Gopher
-    repetition filter, boilerplate-line and duplicate-window reports — and
-    writes the cleaned corpus under the warehouse."""
-    stdout = _run_job(tmp_path, ["--master", "local[2]", "--hygiene"])
-    assert "hygiene: nfc_normalized changed=" in stdout
-    assert "hygiene: pii_redacted" in stdout
-    assert "residual_matches=0" in stdout
-    assert "pii_gate=CLEAN" in stdout
-    assert "hygiene: decontaminate eval_docs=" in stdout
-    assert "hygiene: repetition_filter kept" in stdout
-    assert (tmp_path / "wh" / "hygiene" / "corpus_clean").exists()
-

@@ -132,27 +132,6 @@ def test_dedup_near_fastpath_matches_distributed(spark, docs):
     assert 2 in ids and 8 not in ids
 
 
-def test_punct_translate_equals_regex_count(spark):
-    """with_quality_score's punct count moved from the [^A-Za-z0-9 ] regex
-    to a translate char map (round 6, ~5x) — pin the equivalence on
-    punctuation, Hangul, astral (surrogate-pair) and empty inputs."""
-    from extract_address_ner_spark.functions.textstats import (
-        _CLEAN_CHARS,
-        PUNCT_RE,
-    )
-
-    fix = spark.createDataFrame(
-        [("a,b.c!",), ("한글 텍스트?",), ("",), ("eé🙂x 9",),
-         ("ONLY clean Text 123 ",), ("\t\n",)],
-        "text string",
-    )
-    bad = fix.selectExpr(
-        f"length(translate(text, '{_CLEAN_CHARS}', '')) AS a",
-        f"size(regexp_extract_all(text, '{PUNCT_RE}', 0)) AS b",
-    ).filter("a != b").count()
-    assert bad == 0
-
-
 def test_scale_partitions_floors_and_noops(spark):
     low = spark.createDataFrame([(i,) for i in range(100)], "x int") \
         .coalesce(1)

@@ -1,17 +1,13 @@
-"""Gopher-style repetition stats (functions/textstats.py) and C4-style
-cross-document line dedup (operators/sanitize.py).
+"""C4-style cross-document line dedup and exact duplicate-window detection
+and removal (operators/sanitize.py).
 
 Fixtures are hand-computable; plan pins enforce the scale shapes —
-repetition stats must stay a narrow zero-Exchange projection, and
-dedup_lines must anti-join the corpus against a BROADCAST boilerplate set.
+dedup_lines must anti-join the corpus against a BROADCAST boilerplate set,
+and the duplicate-window count must partial-aggregate map-side.
 """
 
 import pytest
 
-from extract_address_ner_spark.functions.textstats import (
-    gopher_repetition_filter,
-    with_repetition_stats,
-)
 from extract_address_ner_spark.operators.sanitize import (
     boilerplate_lines,
     dedup_lines,
@@ -20,98 +16,6 @@ from extract_address_ner_spark.operators.sanitize import (
 
 def _plan(df) -> str:
     return df._jdf.queryExecution().executedPlan().toString()
-
-
-@pytest.fixture(scope="module")
-def rep_df(spark):
-    rows = [
-        # 4 lines, 3 distinct ("spam spam" repeats) → dup_line_frac 0.25;
-        # line chars: spam(4)+spam spam(9)+spam spam(9)+unique here(11) = 33,
-        # dup chars = (2-1)*9 = 9 → 0.2727
-        (0, "spam\nspam spam\nspam spam\nunique here"),
-        (1, "all lines differ\ncompletely\nhere"),
-        (2, "no newline single line"),
-        (3, ""),
-        # bigram torture: "go go go go" → bigrams [go go]*3, top covers
-        # 3*5=15 chars of 11 → capped? no cap: 15/11 = 1.3636 (>1 is fine:
-        # occurrences overlap; Gopher compares against a threshold)
-        (4, "go go go go"),
-        # tie between "a b" and "b a" (2 each) → lexicographically smaller
-        # "a b" wins
-        (5, "a b a b a"),
-    ]
-    return spark.createDataFrame(rows, "doc_id long, text string")
-
-
-def test_repetition_stats_lines(spark, rep_df):
-    out = {r["doc_id"]: r for r in with_repetition_stats(rep_df).collect()}
-    assert out[0]["n_lines"] == 4
-    assert out[0]["dup_line_frac"] == 0.25
-    assert out[0]["dup_line_char_frac"] == round(9 / 33, 4)
-    assert out[1]["n_lines"] == 3
-    assert out[1]["dup_line_frac"] == 0.0
-    assert out[1]["dup_line_char_frac"] == 0.0
-    assert out[2]["n_lines"] == 1
-    assert (out[3]["n_lines"], out[3]["dup_line_frac"]) == (0, 0.0)
-
-
-def test_repetition_stats_bigrams(spark, rep_df):
-    out = {r["doc_id"]: r for r in with_repetition_stats(rep_df).collect()}
-    assert out[4]["top_bigram"] == "go go"
-    assert out[4]["top2gram_char_frac"] == round(3 * 5 / 11, 4)
-    assert out[5]["top_bigram"] == "a b"
-    assert out[5]["top2gram_char_frac"] == round(2 * 3 / 9, 4)
-    # single-word / empty docs: NULL bigram, 0.0 fraction
-    assert out[3]["top_bigram"] is None
-    assert out[3]["top2gram_char_frac"] == 0.0
-
-
-def test_repetition_filter_drops_spammy(spark, rep_df):
-    kept = sorted(
-        r["doc_id"]
-        for r in gopher_repetition_filter(
-            rep_df, max_dup_line_frac=0.3,
-            max_dup_line_char_frac=0.2, max_top2gram_char_frac=0.5,
-        ).collect()
-    )
-    # 0 fails dup_line_char_frac (0.2727 > 0.2); 4 and 5 fail the top-2gram
-    # bound (1.3636 / 0.6667 > 0.5); 2 fails it too — a short all-distinct
-    # doc's single most-common bigram still covers 14/22 chars (0.6364),
-    # exactly why Gopher pairs this rule with a minimum-length filter
-    assert kept == [1, 3]
-    # output schema is the input schema (stats are internal to the filter)
-    assert gopher_repetition_filter(rep_df).columns == rep_df.columns
-
-
-def test_repetition_stats_plan_is_narrow(spark, rep_df):
-    plan = _plan(with_repetition_stats(rep_df))
-    assert "Exchange" not in plan, plan
-
-
-def test_repetition_filter_reads_attributes_not_inlined_trees(spark, rep_df):
-    """The pushdown fence must keep the Filter reading the three stat
-    columns as ATTRIBUTES. Without it (non-deterministic fence column
-    UNREFERENCED by the condition → deleted by ColumnPruning →
-    PushPredicateThroughNonJoin re-inlines the stat alias trees into the
-    condition, where nested lambda references re-evaluate tokenization per
-    array element) a 2000×46-token corpus never finished (>100 s, killed;
-    8.8 s fenced). The executed Filter condition must contain NO split(
-    call — tokenization belongs to the stats Project below it."""
-    kept = gopher_repetition_filter(rep_df)
-    plan = _plan(kept)
-    filter_lines = [ln for ln in plan.splitlines() if "Filter " in ln]
-    assert filter_lines, plan
-    for ln in filter_lines:
-        assert "split(" not in ln, ln
-        assert "dup_line_frac" in ln, ln
-    # and the fence itself never leaks into the output schema
-    assert "_pushdown_fence" not in kept.columns
-
-
-def test_repetition_stats_rejects_helper_collision(spark, rep_df):
-    with pytest.raises(ValueError, match="_lines"):
-        with_repetition_stats(rep_df.withColumnRenamed("text", "_lines"),
-                              text_col="_lines")
 
 
 @pytest.fixture(scope="module")
@@ -331,83 +235,3 @@ def test_remove_duplicate_windows_long_doc_fold_is_linear(spark):
         assert out[d]["n_tokens_removed"] == 8000   # fully removed
         assert out[d]["text_deduped"] == ""
     assert wall < 90, f"fold took {wall:.1f}s — quadratic regression?"
-
-
-def test_repetition_stats_long_doc_top_bigram_single_pass(spark):
-    """The top-bigram pass must stay O(d·m) per document: maxc/top are
-    materialized column attributes (_maxc/_top), not textual subtrees
-    spliced into the distinct-bigram filter lambda. The spliced form
-    re-evaluated the O(d·m) maxc scan PER distinct bigram — O(d²·m): a
-    single 1000-token mostly-distinct doc took 73 s and 2000 tokens never
-    finished. 3000 tokens with ~2950 distinct bigrams must finish in
-    seconds."""
-    import time
-
-    from pyspark.sql import functions as F
-
-    # tokens t0..t2999 with a planted repeat so the top bigram is unique:
-    # "r r" appears 3 times at the front, every other bigram once.
-    df = spark.range(2).select(
-        F.col("id").alias("doc_id"),
-        F.expr("concat('r r r r ', concat_ws(' ', transform("
-               "sequence(1, 3000), i -> concat('t', CAST(i AS STRING)))))"
-               ).alias("text"),
-    )
-    t0 = time.monotonic()
-    out = {r["doc_id"]: r for r in with_repetition_stats(df).collect()}
-    wall = time.monotonic() - t0
-    assert out[0]["top_bigram"] == "r r"
-    assert wall < 60, f"top-bigram took {wall:.1f}s — O(d²·m) regression?"
-
-
-def test_repetition_stats_nonascii_oracle_agreement(spark):
-    """dup_line_char_frac / top2gram_char_frac are CHARACTER fractions on
-    both engines. The DuckDB oracle must use length() (chars), not strlen()
-    (bytes): on multi-byte text — this repo's whole domain is Korean
-    addresses — strlen('서울') = 6 vs length('서울') = 2 and the engines
-    diverge. The sf fixtures are pure ASCII, so this planted-Hangul compare
-    is the only thing standing between that bug and the driver."""
-    import duckdb
-
-    from extract_address_ner_spark.entry_queries_data import (
-        LINE_DOCS,
-        _REP_STATS_CTE,
-    )
-
-    rows = [
-        (0, "서울특별시 강남구\n서울특별시 강남구\nrue du café"),
-        (1, "대구 수성구 대구 수성구 대구 수성구"),
-        (2, "plain ascii line\nplain ascii line"),
-    ]
-    sdf = spark.createDataFrame(rows, "doc_id long, text string")
-    sdf.createOrReplaceTempView("documents")
-    try:
-        spark_rows = {
-            r["doc_id"]: r
-            for r in with_repetition_stats(spark.sql(LINE_DOCS))
-            .select("doc_id", "n_lines", "dup_line_frac",
-                    "dup_line_char_frac", "top_bigram",
-                    "top2gram_char_frac")
-            .collect()
-        }
-    finally:
-        spark.catalog.dropTempView("documents")
-
-    con = duckdb.connect()
-    con.execute(
-        "CREATE TABLE documents(doc_id BIGINT, text VARCHAR)")
-    con.executemany("INSERT INTO documents VALUES (?, ?)", rows)
-    duck_rows = {
-        r[0]: r
-        for r in con.execute(
-            f"{_REP_STATS_CTE}\n"
-            "SELECT doc_id, n_lines, dup_line_frac, dup_line_char_frac, "
-            "top_bigram, top2gram_char_frac FROM stats"
-        ).fetchall()
-    }
-    assert set(spark_rows) == set(duck_rows)
-    for d, s in spark_rows.items():
-        k = duck_rows[d]
-        assert (s["n_lines"], s["dup_line_frac"], s["dup_line_char_frac"],
-                s["top_bigram"], s["top2gram_char_frac"]) == (
-            k[1], k[2], k[3], k[4], k[5]), f"doc {d}: {s} vs {k}"
