@@ -1035,14 +1035,12 @@ JOIN _edges l ON l.pred = 'located_in' AND l.subj = m.obj
 WHERE m.pred = 'mentions_address'"""
 
 
-@register("graph_bgp_match", gold_bgp_match_sql(), driver=False)
+@register("graph_bgp_match", gold_bgp_match_sql())
 def q_graph_bgp_match(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SPARQL-style triple-pattern query over the KG, compiled to DataFrame
     joins (operators/bgp.bgp_query): which file mentions which address in
     which region — a two-pattern chain whose shared variable becomes the
-    equi-join key Catalyst/AQE is free to broadcast. Pytest-carried (driver
-    registry is at its 50-entry cap; tests/test_registry_oracles.py replays
-    this against the oracle exactly the way the driver would)."""
+    equi-join key Catalyst/AQE is free to broadcast."""
     from .operators.bgp import bgp_query
 
     return bgp_query(
@@ -1215,15 +1213,12 @@ SELECT src_type, pred, dst_type,
 FROM typed GROUP BY 1, 2, 3"""
 
 
-@register("graph_schema_summary", gold_schema_graph_sql(), driver=False)
+@register("graph_schema_summary", gold_schema_graph_sql())
 def q_graph_schema_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The quotient (schema) graph: edges lifted to endpoint types and
     collapsed into typed super-edges with edge/endpoint counts — the
     third planner-statistics leg beside `graph_char_sets` and
-    `graph_pred_stats` (operators/kg_export.schema_graph). Pytest-carried
-    (driver registry is at its 50-entry cap;
-    tests/test_registry_oracles.py replays this against the oracle
-    exactly the way the driver would)."""
+    `graph_pred_stats` (operators/kg_export.schema_graph)."""
     from .operators.dedup import _persist
     from .operators.kg_export import schema_graph
 

@@ -1,7 +1,6 @@
 """Driver-checkable queries for the non-KG operators: dedup (exact / MinHash /
-LSH / Jaccard / SimHash), events, multimodal plumbing and training-data
-hygiene. Registered into the same registry as the KG pipeline queries
-(entry_queries.register).
+LSH / Jaccard / SimHash), events and multimodal plumbing. Registered into the
+same registry as the KG pipeline queries (entry_queries.register).
 
 Dup-corpus derivation: ``dup_documents`` adds exact copies (doc_id % 7,
 +200000) and near copies ('DUP ' prefix, doc_id % 5, +100000) so dedup
@@ -516,8 +515,7 @@ SELECT doc_id, n_frames,
 FROM m WHERE media_type = 'video'""",
     # pytest-carried (tests/test_registry_oracles.py): derived from the SAME
     # synth_media metadata that media_metadata (driver-checked) pins; the
-    # sampling arithmetic itself is oracle-replayed under pytest. Demoted to
-    # free a driver slot for the data-hygiene family (docs_pii_redact).
+    # sampling arithmetic itself is oracle-replayed under pytest.
     driver=False,
 )
 def q_frame_sampling(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -553,8 +551,7 @@ FROM totals t CROSS JOIN generate_series(0, 15) g(bin_idx)
 LEFT JOIN counts ON counts.doc_id = t.doc_id AND counts.bin_idx = g.bin_idx""",
     # pytest-carried (tests/test_registry_oracles.py): exercises the same
     # binary→Arrow→mapInPandas decode path as media_metadata/frame-sampling;
-    # full value compare still runs under pytest. Demoted to free a driver
-    # slot for the data-hygiene family (docs_decontaminate).
+    # full value compare still runs under pytest.
     driver=False,
 )
 def q_media_features(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -573,301 +570,4 @@ def q_media_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).select(
         "doc_id", "media_type", "bin_idx",
         F.round(F.col("_v"), 6).alias("bin_value"),
-    )
-
-
-# --------------------------------------------------------------------------
-# training-data hygiene: PII redaction + eval-set decontamination
-# --------------------------------------------------------------------------
-
-# Deterministic PII injection (the raw documents corpus has no PII): one
-# email / phone / IPv4 per doc_id % 4 class, the fourth class left clean.
-# Identical dialect subset in both engines, so the oracle sees the exact
-# same input text.
-PII_DOCS = """
-SELECT doc_id,
-  CASE CAST(doc_id % 4 AS INT)
-    WHEN 0 THEN text || ' contact user' || doc_id || '@example.com now'
-    WHEN 1 THEN text || ' call +1 (555) 010-' || (1000 + doc_id % 9000) || ' today'
-    WHEN 2 THEN text || ' host 10.0.' || (doc_id % 256) || '.' || (doc_id % 100) || ' up'
-    ELSE text END AS text
-FROM documents
-""".strip()
-
-# DuckDB replay of sanitize.PII_STEPS: each count taken on the text as
-# redacted by the PREVIOUS steps (same sequential semantics as pii_redact);
-# DuckDB regexp_replace needs the explicit 'g' flag Spark applies always.
-from .operators.sanitize import EMAIL_RE, IPV4_RE, PHONE_RE  # noqa: E402
-
-
-@register(
-    "docs_pii_redact",
-    f"""
-WITH p AS ({PII_DOCS}),
-r1 AS (SELECT doc_id,
-  CAST(len(regexp_extract_all(text, '{EMAIL_RE}')) AS INT) AS n_emails,
-  regexp_replace(text, '{EMAIL_RE}', '<EMAIL>', 'g') AS t1 FROM p),
-r2 AS (SELECT doc_id, n_emails,
-  CAST(len(regexp_extract_all(t1, '{IPV4_RE}')) AS INT) AS n_ips,
-  regexp_replace(t1, '{IPV4_RE}', '<IP>', 'g') AS t2 FROM r1)
-SELECT doc_id, n_emails, n_ips,
-  CAST(len(regexp_extract_all(t2, '{PHONE_RE}')) AS INT) AS n_phones,
-  regexp_replace(t2, '{PHONE_RE}', '<PHONE>', 'g') AS redacted
-FROM r2""",
-)
-def q_pii_redact(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Full-value check of the redaction chain: per-type counts AND the
-    redacted text itself compared bit-for-bit against the DuckDB replay.
-    Narrow zero-Exchange plan (pinned in tests/test_plans.py)."""
-    from .operators.sanitize import pii_redact
-
-    register_documents(spark, sf_dir)
-    return pii_redact(spark.sql(PII_DOCS)).select(
-        "doc_id", "n_emails", "n_ips", "n_phones", "redacted"
-    )
-
-
-# DuckDB mirror of sanitize._ngrams (lowercased whitespace 5-grams); rows
-# with < n tokens contribute nothing on either engine.
-_D_LWS = "list_filter(string_split(lower(text), ' '), t -> len(t) > 0)"
-_D_NG5 = ("list_transform(generate_series(1, len(ws) - 4), "
-          "i -> array_to_string(list_slice(ws, i, i + 4), ' '))")
-
-
-@register(
-    "docs_decontaminate",
-    f"""
-WITH evt AS (SELECT {_D_LWS} AS ws FROM documents WHERE doc_id % 17 = 5),
-ev AS (SELECT DISTINCT unnest({_D_NG5}) AS ng FROM evt WHERE len(ws) >= 5),
-trt AS (SELECT doc_id, {_D_LWS} AS ws FROM documents),
-tr AS (SELECT doc_id, unnest({_D_NG5}) AS ng FROM trt WHERE len(ws) >= 5)
-SELECT tr.doc_id AS doc_id, count(DISTINCT tr.ng) AS n_eval_ngrams
-FROM tr JOIN ev USING (ng) GROUP BY tr.doc_id""",
-)
-def q_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Eval split := documents with doc_id % 17 = 5 (verbatim members of the
-    training corpus, so contamination exists by construction — each eval doc
-    must at minimum flag itself). Broadcast eval n-gram set; the training
-    side is never shuffled (plan pinned in tests/test_plans.py)."""
-    from .operators.sanitize import decontaminate
-
-    register_documents(spark, sf_dir)
-    ev = spark.sql("SELECT doc_id, text FROM documents WHERE doc_id % 17 = 5")
-    tr = spark.sql("SELECT doc_id, text FROM documents")
-    return decontaminate(tr, ev, n=5)
-
-
-# --------------------------------------------------------------------------
-# cross-document line dedup
-# --------------------------------------------------------------------------
-
-# Deterministic line-structure injection (the raw corpus is single-line):
-# class 0 gets a shared header AND footer (cross-doc boilerplate), class 1 a
-# shared footer plus its own 20-char prefix TWICE (in-doc duplicate lines
-# that are NOT cross-doc boilerplate), class 2 stays single-line. Shared
-# dialect subset (chr/substr/||/CASE) so both engines see identical text.
-LINE_DOCS = """
-SELECT doc_id,
-  CASE CAST(doc_id % 3 AS INT)
-    WHEN 0 THEN 'SUBSCRIBE NOW' || chr(10) || text || chr(10)
-                || 'copyright 2026 example corp'
-    WHEN 1 THEN text || chr(10) || 'copyright 2026 example corp' || chr(10)
-                || substr(text, 1, 20) || chr(10) || substr(text, 1, 20)
-    ELSE text END AS text
-FROM documents
-""".strip()
-
-# DuckDB list-HOF mirror of sanitize.boilerplate_lines' line split
-_D_LINES = ("list_filter(list_transform(string_split(text, chr(10)), "
-            "l -> trim(l)), l -> l != '')")
-
-
-@register(
-    "docs_line_dedup",
-    f"""
-WITH p AS ({LINE_DOCS}),
-l0 AS (SELECT doc_id, {_D_LINES} AS ls FROM p),
-lines AS (SELECT doc_id, unnest(generate_series(1, len(ls))) AS pos,
-  unnest(ls) AS line FROM l0),
-boiler AS (SELECT line FROM (
-    SELECT line, count(DISTINCT doc_id) AS n FROM lines GROUP BY line)
-  WHERE n >= 2),
-flagged AS (SELECT doc_id, pos, line,
-  line IN (SELECT line FROM boiler) AS b FROM lines)
-SELECT doc_id,
-  coalesce(string_agg(CASE WHEN NOT b THEN line END, chr(10) ORDER BY pos),
-           '') AS redacted,
-  CAST(count(*) FILTER (WHERE NOT b) AS INT) AS n_lines_kept,
-  CAST(count(*) FILTER (WHERE b) AS INT) AS n_lines_dropped
-FROM flagged GROUP BY doc_id""",
-    # pytest-carried (tests/test_registry_oracles.py): driver registry is at
-    # its 50-entry cap.
-    driver=False,
-)
-def q_line_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """C4-style cross-document boilerplate-line removal over the
-    line-injected corpus: the shared header/footer lines (planted in >100
-    docs each) disappear from every document, in-doc-only duplicates stay.
-    Full value compare of the reassembled text plus kept/dropped counts."""
-    from .operators.sanitize import dedup_lines
-
-    register_documents(spark, sf_dir)
-    return dedup_lines(spark.sql(LINE_DOCS)).select(
-        "doc_id", "redacted", "n_lines_kept", "n_lines_dropped"
-    )
-
-
-# Deterministic duplicate-window injection: every 7th doc gets the same
-# 9-word tail, so those docs share exact 6-token windows; everything else
-# is flagged only if the raw corpus happens to repeat a window (identical
-# arithmetic in both engines either way).
-WINDOW_DOCS = """
-SELECT doc_id,
-  CASE WHEN doc_id % 7 = 0
-    THEN text || ' the quick brown fox jumps over the lazy dog'
-    ELSE text END AS text
-FROM documents
-""".strip()
-
-_D_WWS = "list_filter(string_split(lower(text), ' '), t -> t != '')"
-_D_WINS = ("CASE WHEN len(ws) >= 6 THEN list_transform("
-           "generate_series(1, len(ws) - 5), "
-           "i -> array_to_string(list_slice(ws, i, i + 5), ' ')) "
-           "ELSE [] END")
-
-
-@register(
-    "docs_dup_window_stats",
-    f"""
-WITH p AS ({WINDOW_DOCS}),
-t AS (SELECT doc_id, {_D_WWS} AS ws FROM p),
-wn AS (SELECT doc_id, len(ws) AS n_tok, {_D_WINS} AS wins FROM t),
-ex AS (SELECT doc_id, n_tok, unnest(generate_series(1, len(wins))) AS pos,
-       unnest(wins) AS win FROM wn),
-dv AS (SELECT win FROM (SELECT win, count(*) AS c FROM ex GROUP BY win)
-       WHERE c >= 2),
-fl AS (SELECT doc_id, n_tok, pos,
-       win IN (SELECT win FROM dv) AS dup FROM ex),
-agg AS (SELECT doc_id, n_tok,
-  CAST(count(*) AS INT) AS n_windows,
-  CAST(count(*) FILTER (WHERE dup) AS INT) AS n_dup_windows,
-  len(list_distinct(flatten(coalesce(
-    list(generate_series(pos, pos + 5)) FILTER (WHERE dup), [])))) AS cov
-  FROM fl GROUP BY doc_id, n_tok)
-SELECT doc_id, n_windows, n_dup_windows,
-  CAST(round(CAST(cov AS DOUBLE) / greatest(n_tok, 1), 4) AS DOUBLE)
-    AS dup_token_frac
-FROM agg
-UNION ALL
-SELECT doc_id, 0 AS n_windows, 0 AS n_dup_windows,
-  CAST(0.0 AS DOUBLE) AS dup_token_frac
-FROM wn WHERE len(wins) = 0""",
-    # pytest-carried (tests/test_registry_oracles.py): driver registry is at
-    # its 50-entry cap.
-    driver=False,
-)
-def q_dup_window_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact duplicate-window (Lee-et-al-style substring dedup) stats at
-    w=6 over the tail-injected corpus: every 7th document shares a planted
-    9-word tail, so its windows duplicate cross-document; per-doc coverage
-    fractions are value-compared against the DuckDB replay."""
-    from .operators.sanitize import duplicate_window_stats
-
-    register_documents(spark, sf_dir)
-    return duplicate_window_stats(spark.sql(WINDOW_DOCS), w=6).select(
-        "doc_id", "n_windows", "n_dup_windows", "dup_token_frac"
-    )
-
-
-@register(
-    "docs_dup_window_removal",
-    f"""
-WITH p AS ({WINDOW_DOCS}),
-t AS (SELECT doc_id,
-  list_filter(string_split(text, ' '), x -> x != '') AS toks FROM p),
-t2 AS (SELECT doc_id, toks,
-  list_transform(toks, x -> lower(x)) AS lw FROM t),
-wn AS (SELECT doc_id, toks,
-  CASE WHEN len(lw) >= 6 THEN list_transform(
-    generate_series(1, len(lw) - 5),
-    i -> array_to_string(list_slice(lw, i, i + 5), ' '))
-  ELSE [] END AS wins FROM t2),
-ex AS (SELECT doc_id, unnest(generate_series(1, len(wins))) AS st,
-       unnest(wins) AS win FROM wn),
-rk AS (SELECT doc_id, st, win,
-       row_number() OVER (PARTITION BY win ORDER BY doc_id, st) AS rn,
-       count(*) OVER (PARTITION BY win) AS c FROM ex),
-rmv AS (SELECT doc_id, st FROM rk WHERE c >= 2 AND rn > 1),
-cov AS (SELECT doc_id,
-  list_distinct(flatten(list(generate_series(st, st + 5)))) AS cv
-  FROM rmv GROUP BY doc_id)
-SELECT w.doc_id,
-  coalesce(array_to_string(list_filter(w.toks,
-    (x, i) -> NOT list_contains(coalesce(c.cv, []), i)), ' '), '')
-    AS text_deduped,
-  CAST(len(w.toks) AS INT) AS n_tokens,
-  CAST(len(coalesce(c.cv, [])) AS INT) AS n_tokens_removed
-FROM wn w LEFT JOIN cov c USING (doc_id)""",
-    # pytest-carried (tests/test_registry_oracles.py): driver registry is at
-    # its 50-entry cap.
-    driver=False,
-)
-def q_dup_window_removal(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact duplicate-window REMOVAL at w=6 over the tail-injected corpus:
-    the canonical (globally first) occurrence of each duplicated window
-    survives, every other occurrence's token range is cut, and the rebuilt
-    original-case text is value-compared bit-for-bit against the DuckDB
-    replay (which uses the naive covered-position-set rebuild — pinning the
-    O(m) single-pass fold's equivalence to the spec)."""
-    from .operators.sanitize import remove_duplicate_windows
-
-    register_documents(spark, sf_dir)
-    return remove_duplicate_windows(spark.sql(WINDOW_DOCS), w=6)
-
-
-# Deterministic NFC fixture: every 5th doc gets a suffix in DECOMPOSED form
-# (Hangul conjoining jamo U+1100 U+1161 + combining acute U+0301) — raw
-# bytes differ from the NFC forms (U+AC00, U+00E9) but render identically.
-# The literal is embedded as real UTF-8 in the shared SQL so both engines
-# parse identical bytes.
-_DECOMP_SUFFIX = "\u1100\u1161 cafe\u0301"  # NFC: U+AC00 / caf+U+00E9
-NORM_DOCS = f"""
-SELECT doc_id,
-  CASE WHEN doc_id % 5 = 0 THEN text || ' {_DECOMP_SUFFIX}'
-       ELSE text END AS text
-FROM documents
-""".strip()
-
-
-def _norm_docs_oracle() -> str:
-    from .operators.sanitize import CONTROL_RE
-
-    norm = f"nfc_normalize(regexp_replace(text, '{CONTROL_RE}', '', 'g'))"
-    return f"""
-WITH p AS ({NORM_DOCS})
-SELECT doc_id, {norm} AS text_norm, ({norm} != text) AS changed
-FROM p"""
-
-
-@register(
-    "docs_text_normalize",
-    _norm_docs_oracle(),
-    # pytest-carried (tests/test_registry_oracles.py): driver registry is at
-    # its 50-entry cap.
-    driver=False,
-)
-def q_text_normalize(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Unicode NFC canonicalization (control-strip + compose) over the
-    decomposed-suffix corpus, value-compared bit-for-bit against DuckDB's
-    utf8proc `nfc_normalize` — two independent NFC implementations
-    (Python unicodedata / utf8proc) agreeing on the planted Hangul-jamo and
-    combining-accent forms. The operator exists because every content-keyed
-    stage (sha256 invariant, exact dedup, MinHash shingles, window values)
-    hashes BYTES: visually identical spellings must be byte-identical
-    first."""
-    from .operators.sanitize import normalize_text
-
-    register_documents(spark, sf_dir)
-    return normalize_text(spark.sql(NORM_DOCS)).select(
-        "doc_id", "text_norm", "changed"
     )
