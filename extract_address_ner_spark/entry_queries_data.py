@@ -1,6 +1,7 @@
 """Driver-checkable queries for the non-KG operators: dedup (exact / MinHash /
-LSH / Jaccard / SimHash), events and multimodal plumbing. Registered into the
-same registry as the KG pipeline queries (entry_queries.register).
+LSH / Jaccard / SimHash), events, multimodal plumbing and repetition hygiene
+(cross-document line and duplicate-window dedup). Registered into the same
+registry as the KG pipeline queries (entry_queries.register).
 
 Dup-corpus derivation: ``dup_documents`` adds exact copies (doc_id % 7,
 +200000) and near copies ('DUP ' prefix, doc_id % 5, +100000) so dedup
@@ -571,3 +572,171 @@ def q_media_features(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id", "media_type", "bin_idx",
         F.round(F.col("_v"), 6).alias("bin_value"),
     )
+
+
+# --------------------------------------------------------------------------
+# cross-document line dedup
+# --------------------------------------------------------------------------
+
+# Deterministic line-structure injection (the raw corpus is single-line):
+# class 0 gets a shared header AND footer (cross-doc boilerplate), class 1 a
+# shared footer plus its own 20-char prefix TWICE (in-doc duplicate lines
+# that are NOT cross-doc boilerplate), class 2 stays single-line. Shared
+# dialect subset (chr/substr/||/CASE) so both engines see identical text.
+LINE_DOCS = """
+SELECT doc_id,
+  CASE CAST(doc_id % 3 AS INT)
+    WHEN 0 THEN 'SUBSCRIBE NOW' || chr(10) || text || chr(10)
+                || 'copyright 2026 example corp'
+    WHEN 1 THEN text || chr(10) || 'copyright 2026 example corp' || chr(10)
+                || substr(text, 1, 20) || chr(10) || substr(text, 1, 20)
+    ELSE text END AS text
+FROM documents
+""".strip()
+
+# DuckDB list-HOF mirror of sanitize.boilerplate_lines' line split
+_D_LINES = ("list_filter(list_transform(string_split(text, chr(10)), "
+            "l -> trim(l)), l -> l != '')")
+
+
+@register(
+    "docs_line_dedup",
+    f"""
+WITH p AS ({LINE_DOCS}),
+l0 AS (SELECT doc_id, {_D_LINES} AS ls FROM p),
+lines AS (SELECT doc_id, unnest(generate_series(1, len(ls))) AS pos,
+  unnest(ls) AS line FROM l0),
+boiler AS (SELECT line FROM (
+    SELECT line, count(DISTINCT doc_id) AS n FROM lines GROUP BY line)
+  WHERE n >= 2),
+flagged AS (SELECT doc_id, pos, line,
+  line IN (SELECT line FROM boiler) AS b FROM lines)
+SELECT doc_id,
+  coalesce(string_agg(CASE WHEN NOT b THEN line END, chr(10) ORDER BY pos),
+           '') AS redacted,
+  CAST(count(*) FILTER (WHERE NOT b) AS INT) AS n_lines_kept,
+  CAST(count(*) FILTER (WHERE b) AS INT) AS n_lines_dropped
+FROM flagged GROUP BY doc_id""",
+    # pytest-carried (tests/test_registry_oracles.py): driver registry is at
+    # its 50-entry cap.
+    driver=False,
+)
+def q_line_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """C4-style cross-document boilerplate-line removal over the
+    line-injected corpus: the shared header/footer lines (planted in >100
+    docs each) disappear from every document, in-doc-only duplicates stay.
+    Full value compare of the reassembled text plus kept/dropped counts."""
+    from .operators.sanitize import dedup_lines
+
+    register_documents(spark, sf_dir)
+    return dedup_lines(spark.sql(LINE_DOCS)).select(
+        "doc_id", "redacted", "n_lines_kept", "n_lines_dropped"
+    )
+
+
+# Deterministic duplicate-window injection: every 7th doc gets the same
+# 9-word tail, so those docs share exact 6-token windows; everything else
+# is flagged only if the raw corpus happens to repeat a window (identical
+# arithmetic in both engines either way).
+WINDOW_DOCS = """
+SELECT doc_id,
+  CASE WHEN doc_id % 7 = 0
+    THEN text || ' the quick brown fox jumps over the lazy dog'
+    ELSE text END AS text
+FROM documents
+""".strip()
+
+_D_WWS = "list_filter(string_split(lower(text), ' '), t -> t != '')"
+_D_WINS = ("CASE WHEN len(ws) >= 6 THEN list_transform("
+           "generate_series(1, len(ws) - 5), "
+           "i -> array_to_string(list_slice(ws, i, i + 5), ' ')) "
+           "ELSE [] END")
+
+
+@register(
+    "docs_dup_window_stats",
+    f"""
+WITH p AS ({WINDOW_DOCS}),
+t AS (SELECT doc_id, {_D_WWS} AS ws FROM p),
+wn AS (SELECT doc_id, len(ws) AS n_tok, {_D_WINS} AS wins FROM t),
+ex AS (SELECT doc_id, n_tok, unnest(generate_series(1, len(wins))) AS pos,
+       unnest(wins) AS win FROM wn),
+dv AS (SELECT win FROM (SELECT win, count(*) AS c FROM ex GROUP BY win)
+       WHERE c >= 2),
+fl AS (SELECT doc_id, n_tok, pos,
+       win IN (SELECT win FROM dv) AS dup FROM ex),
+agg AS (SELECT doc_id, n_tok,
+  CAST(count(*) AS INT) AS n_windows,
+  CAST(count(*) FILTER (WHERE dup) AS INT) AS n_dup_windows,
+  len(list_distinct(flatten(coalesce(
+    list(generate_series(pos, pos + 5)) FILTER (WHERE dup), [])))) AS cov
+  FROM fl GROUP BY doc_id, n_tok)
+SELECT doc_id, n_windows, n_dup_windows,
+  CAST(round(CAST(cov AS DOUBLE) / greatest(n_tok, 1), 4) AS DOUBLE)
+    AS dup_token_frac
+FROM agg
+UNION ALL
+SELECT doc_id, 0 AS n_windows, 0 AS n_dup_windows,
+  CAST(0.0 AS DOUBLE) AS dup_token_frac
+FROM wn WHERE len(wins) = 0""",
+    # pytest-carried (tests/test_registry_oracles.py): driver registry is at
+    # its 50-entry cap.
+    driver=False,
+)
+def q_dup_window_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Exact duplicate-window (Lee-et-al-style substring dedup) stats at
+    w=6 over the tail-injected corpus: every 7th document shares a planted
+    9-word tail, so its windows duplicate cross-document; per-doc coverage
+    fractions are value-compared against the DuckDB replay."""
+    from .operators.sanitize import duplicate_window_stats
+
+    register_documents(spark, sf_dir)
+    return duplicate_window_stats(spark.sql(WINDOW_DOCS), w=6).select(
+        "doc_id", "n_windows", "n_dup_windows", "dup_token_frac"
+    )
+
+
+@register(
+    "docs_dup_window_removal",
+    f"""
+WITH p AS ({WINDOW_DOCS}),
+t AS (SELECT doc_id,
+  list_filter(string_split(text, ' '), x -> x != '') AS toks FROM p),
+t2 AS (SELECT doc_id, toks,
+  list_transform(toks, x -> lower(x)) AS lw FROM t),
+wn AS (SELECT doc_id, toks,
+  CASE WHEN len(lw) >= 6 THEN list_transform(
+    generate_series(1, len(lw) - 5),
+    i -> array_to_string(list_slice(lw, i, i + 5), ' '))
+  ELSE [] END AS wins FROM t2),
+ex AS (SELECT doc_id, unnest(generate_series(1, len(wins))) AS st,
+       unnest(wins) AS win FROM wn),
+rk AS (SELECT doc_id, st, win,
+       row_number() OVER (PARTITION BY win ORDER BY doc_id, st) AS rn,
+       count(*) OVER (PARTITION BY win) AS c FROM ex),
+rmv AS (SELECT doc_id, st FROM rk WHERE c >= 2 AND rn > 1),
+cov AS (SELECT doc_id,
+  list_distinct(flatten(list(generate_series(st, st + 5)))) AS cv
+  FROM rmv GROUP BY doc_id)
+SELECT w.doc_id,
+  coalesce(array_to_string(list_filter(w.toks,
+    (x, i) -> NOT list_contains(coalesce(c.cv, []), i)), ' '), '')
+    AS text_deduped,
+  CAST(len(w.toks) AS INT) AS n_tokens,
+  CAST(len(coalesce(c.cv, [])) AS INT) AS n_tokens_removed
+FROM wn w LEFT JOIN cov c USING (doc_id)""",
+    # pytest-carried (tests/test_registry_oracles.py): driver registry is at
+    # its 50-entry cap.
+    driver=False,
+)
+def q_dup_window_removal(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Exact duplicate-window REMOVAL at w=6 over the tail-injected corpus:
+    the canonical (globally first) occurrence of each duplicated window
+    survives, every other occurrence's token range is cut, and the rebuilt
+    original-case text is value-compared bit-for-bit against the DuckDB
+    replay (which uses the naive covered-position-set rebuild — pinning the
+    O(m) single-pass fold's equivalence to the spec)."""
+    from .operators.sanitize import remove_duplicate_windows
+
+    register_documents(spark, sf_dir)
+    return remove_duplicate_windows(spark.sql(WINDOW_DOCS), w=6)

@@ -1,32 +1,5 @@
-"""Training-data hygiene operators: PII redaction and eval-set n-gram
-decontamination.
-
-Both are standard stages of a large-scale LLM training-data pipeline and
-sit beside the dedup operators on the documents table:
-
-- :func:`pii_redact` — scrub emails, phone numbers, and IPv4 addresses from
-  a text column, emitting per-type match counts and the redacted text. Pure
-  built-in ``regexp_*`` expressions: JVM-side, codegen-friendly, a NARROW
-  plan with zero Exchange at any corpus size (plan-pinned,
-  tests/test_plans.py). Patterns are restricted to the Java-regex ∩ RE2
-  common subset (character classes only — no ``\\d``/``\\b``, no lookaround)
-  so the DuckDB oracle replays them verbatim and matches bit-for-bit.
-
-- :func:`decontaminate` — mark training documents that share any n-token
-  n-gram with an evaluation corpus: the canonical benchmark-decontamination
-  shape (GPT-3 appendix C / the Pile: 13-gram overlap against test sets).
-  The EVAL side — small by construction: benchmarks are thousands of
-  documents, not billions — is distinct'd and broadcast; the TRAINING side
-  streams through tokenize → n-gram → explode → broadcast-hash semi-join
-  with NO shuffle of the big side; only the (rare) matching rows reach the
-  per-document count aggregation. At 100 TB the training corpus is never
-  shuffled and the only state per executor is the broadcast eval n-gram
-  set; if the eval set ever outgrows broadcast range, swap the broadcast
-  hint for a shuffle join on the n-gram — the operator body is unchanged.
-  For memory-tight deployments the joined column can be a 64-bit hash of
-  the n-gram instead of the string (same plan shape); the string form is
-  kept here because the driver oracle compares exact values and a hash
-  collision, however unlikely, must not be able to flip a verdict.
+"""Repetition-hygiene operators on a (doc_id, text) documents table:
+cross-document line dedup and exact duplicate-window detection and removal.
 
 - :func:`boilerplate_lines` / :func:`dedup_lines` — C4-style CROSS-document
   line-level deduplication: line values shared by ``min_docs``+ distinct
@@ -35,107 +8,20 @@ sit beside the dedup operators on the documents table:
   anti-join, preserving the order of surviving lines. Documents with no
   non-blank lines at all contribute no output row (nothing to clean).
 
+- :func:`duplicate_window_stats` / :func:`remove_duplicate_windows` — exact
+  duplicate ``w``-token windows (Lee et al. 2022-style substring dedup):
+  per-document coverage statistics, and the text rewrite that keeps only
+  each duplicated window's canonical occurrence.
+
 No reference citation: the reference (a Korean-address NER service) has no
-data-hygiene surface; these operators are new scope per the round
-instructions ("operations a large-scale training-data pipeline would
-need"), taking a (doc_id, text) documents table like operators/dedup.py.
+data-hygiene surface. No KG stage, job option or benchmark workload calls
+these operators; only their registry entries and tests reach them.
 """
 
 from __future__ import annotations
 
-import pandas as pd
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-# Java-regex ∩ RE2 common subset (character classes only). Order of
-# application is email → IPv4 → phone: the phone class has no '.', so it can
-# never span an IPv4 octet boundary, but scrubbing emails first keeps digit
-# runs inside a local-part (user123@…) out of the phone scan entirely.
-EMAIL_RE = "[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+[.][A-Za-z]{2,}"
-IPV4_RE = "[0-9]{1,3}[.][0-9]{1,3}[.][0-9]{1,3}[.][0-9]{1,3}"
-PHONE_RE = "[+]?[0-9][0-9() -]{6,}[0-9]"
-
-#: (output-count column, pattern, replacement token), applied in order —
-#: each count is taken on the text as redacted by the PREVIOUS steps, so the
-#: triple (counts, redacted) is well-defined and engine-independent.
-PII_STEPS: tuple[tuple[str, str, str], ...] = (
-    ("n_emails", EMAIL_RE, "<EMAIL>"),
-    ("n_ips", IPV4_RE, "<IP>"),
-    ("n_phones", PHONE_RE, "<PHONE>"),
-)
-
-
-def _count_matches(col: Column, pattern: str) -> Column:
-    return F.size(F.regexp_extract_all(col, F.lit(pattern), F.lit(0))).cast("int")
-
-
-def pii_redact(df: DataFrame, text_col: str = "text") -> DataFrame:
-    """Append ``n_emails``/``n_ips``/``n_phones`` counts and a ``redacted``
-    text column. Narrow (zero-Exchange) whole-stage-codegen plan."""
-    cur: Column = F.col(text_col)
-    for count_col, pattern, token in PII_STEPS:
-        df = df.withColumn(count_col, _count_matches(cur, pattern))
-        cur = F.regexp_replace(cur, F.lit(pattern), F.lit(token))
-    return df.withColumn("redacted", cur)
-
-
-# --------------------------------------------------------------------------
-# decontamination
-# --------------------------------------------------------------------------
-
-
-def _exploded_ngrams(
-    df: DataFrame, text_col: str, n: int, *extra_cols: str
-) -> DataFrame:
-    """``extra_cols`` + one exploded ``_ng`` n-gram column. Lowercased
-    whitespace-token n-grams; fewer than ``n`` tokens → no rows for the doc.
-    Tokenization (split on ' ', drop empties, lower) matches the DuckDB
-    oracle.
-
-    The token array is projected as a COLUMN ATTRIBUTE (``_toks``) before
-    the n-gram transform: splicing the tokenization subtree into the lambda
-    body would re-evaluate split+filter per n-gram — O(tokens²) per doc.
-    """
-    if "_toks" in df.columns:
-        raise ValueError("decontaminate: input already has a '_toks' column")
-    ws = f"filter(split(lower({text_col}), ' '), t -> t != '')"
-    ngrams = F.expr(
-        f"CASE WHEN size(_toks) >= {n} THEN "
-        f"transform(sequence(1, size(_toks) - {n} + 1), "
-        f"i -> concat_ws(' ', slice(_toks, i, {n}))) "
-        f"ELSE CAST(array() AS array<string>) END"
-    )
-    toks = df.select(*extra_cols, F.expr(ws).alias("_toks"))
-    return toks.select(*extra_cols, F.explode(ngrams).alias("_ng"))
-
-
-def eval_ngram_set(eval_df: DataFrame, n: int = 5, text_col: str = "text") -> DataFrame:
-    """Distinct n-grams of the evaluation corpus — the (small) broadcast side."""
-    return _exploded_ngrams(eval_df, text_col, n).distinct()
-
-
-def decontaminate(
-    train_df: DataFrame,
-    eval_df: DataFrame,
-    n: int = 5,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
-    """Per-training-document count of DISTINCT eval n-grams it contains;
-    documents with zero hits are absent from the result. Plan shape:
-    train-side explode → BroadcastHashJoin (semi-ish inner on the distinct
-    eval set) → partial+final count-distinct keyed by ``id_col``; the only
-    shuffled rows are actual contamination hits."""
-    if "_ng" in train_df.columns or "_ng" in eval_df.columns:
-        raise ValueError("decontaminate: input already has a '_ng' column")
-    ev = eval_ngram_set(eval_df, n=n, text_col=text_col)
-    hits = (
-        _exploded_ngrams(train_df, text_col, n, id_col)
-        .join(F.broadcast(ev), "_ng")
-        .groupBy(id_col)
-        .agg(F.countDistinct("_ng").alias("n_eval_ngrams"))
-    )
-    return hits
 
 
 def boilerplate_lines(
@@ -431,68 +317,4 @@ def remove_duplicate_windows(
         "n_tokens",
         (F.col("n_tokens") - F.expr("size(_acc)")).cast("int")
         .alias("n_tokens_removed"),
-    )
-
-
-def keep_clean(
-    train_df: DataFrame,
-    eval_df: DataFrame,
-    n: int = 5,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
-    """Drop contaminated documents: left-anti join of the training corpus
-    against the contamination hits — the production decontamination sink."""
-    hits = decontaminate(train_df, eval_df, n=n, text_col=text_col, id_col=id_col)
-    return train_df.join(hits.select(id_col), id_col, "left_anti")
-
-
-# --------------------------------------------------------------------------
-# Unicode normalization (NFC) — text canonicalization before hashing/dedup
-# --------------------------------------------------------------------------
-
-#: C0 control characters except TAB (\\x09) and LF (\\x0A), plus DEL.
-#: Class-only pattern (Java ∩ RE2 subset) so the DuckDB oracle replays it
-#: verbatim. CR is stripped too: downstream operators treat \\n as the only
-#: line separator.
-CONTROL_RE = "[\\x00-\\x08\\x0B-\\x1F\\x7F]"
-
-
-def normalize_text(df: DataFrame, text_col: str = "text") -> DataFrame:
-    """Canonicalize a text column: strip C0 control characters (keeping tab
-    and newline), then Unicode-normalize to NFC. Adds ``text_norm`` and a
-    ``changed`` flag.
-
-    WHY this must run before anything content-keyed: the pipeline's sha256
-    invariant, exact dedup (sha256 groupBy), MinHash shingles, and the
-    duplicate-window value key all operate on BYTES — decomposed Hangul
-    (U+1100 U+1161) and precomposed (U+AC00) render identically but hash
-    differently, silently splitting duplicate groups and breaking
-    cross-system content equality. NFC is the W3C/WHATWG canonical form.
-
-    Implementation note (the ONE deliberate Python hop in the hygiene
-    family): Spark SQL has no Unicode-normalization function, so NFC runs
-    as an Arrow-batched pandas UDF over ``unicodedata.normalize`` — the
-    documented legitimate use of the slow path (built-ins first; this
-    semantic simply does not exist JVM-side). The control-strip stays a
-    JVM ``regexp_replace``. The UDF is a narrow per-row map: zero shuffle,
-    scan-bound at 100 TB, and the plan stays one stage.
-    """
-    if "text_norm" in df.columns or "changed" in df.columns:
-        raise ValueError(
-            "normalize_text: input already has a text_norm/changed column"
-        )
-
-    @F.pandas_udf("string")
-    def _nfc(s: pd.Series) -> pd.Series:
-        import unicodedata
-
-        return s.map(
-            lambda x: unicodedata.normalize("NFC", x) if x is not None else None
-        )
-
-    stripped = F.regexp_replace(F.col(text_col), CONTROL_RE, "")
-    out = df.withColumn("text_norm", _nfc(stripped))
-    return out.withColumn(
-        "changed", F.col("text_norm") != F.col(text_col)
     )
