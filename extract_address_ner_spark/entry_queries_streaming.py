@@ -505,206 +505,6 @@ def snapshot_diff(old: DataFrame, new: DataFrame) -> DataFrame:
     )
 
 
-def merge_dedup_labels(
-    new_docs: DataFrame,
-    root: str,
-    batch_id: int,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    threshold: float = 0.8,
-) -> None:
-    """foreachBatch body for NEAR-dup dedup-on-arrival: maintain the near-
-    duplicate component labeling of an append-only corpus across micro-
-    batches, per-batch cost ∝ the batch (``incremental_dedup_batch``:
-    band the batch → probe the durable band index → verify delta
-    candidates → merge into the labeling). The streaming sibling of
-    ``merge_edge_snapshot`` — same durable layout discipline under
-    ``root``:
-
-    - ``corpus/v<batch>/``, ``bands/v<batch>/``: per-batch appends (docs
-      and their ``lsh_band_table`` rows). A replayed batch OVERWRITES its
-      own directory — idempotent, and the batch is re-read from its own
-      durable parquet before processing, which both survives source
-      replays and cuts the streaming-source lineage (the operator's
-      localCheckpoint rationale).
-    - ``labels/v<batch>/``: snapshot-versioned label table; the previous
-      state is the latest version STRICTLY BELOW ``batch_id`` (a replay
-      never reads the version it rewrites), staged to ``.tmp`` and
-      atomically renamed. Label versions are SELF-CONTAINED (the table is
-      O(corpus ids), not O(corpus text)) so retention needs no manifest
-      liveness — ``expire_label_snapshots(root, keep>=2)`` simply keeps
-      the newest K (keep ≥ 2 is the replay floor: a replayed last batch
-      reads the version before it). Band/corpus drops are never expired —
-      the probe index needs full history.
-
-    Replay safety end-to-end: a crash between the corpus/bands overwrite
-    and the labels rename leaves the prior label chain intact; the replay
-    recomputes from strictly-prior state plus its own re-written batch
-    (pytest corrupts and replays the last batch; labels byte-equal)."""
-    import os
-    import shutil
-
-    spark = new_docs.sparkSession
-    own_corpus = f"{root}/corpus/v{batch_id}"
-    # stage-and-rename, not overwrite-in-place: a REPLAY's input may be
-    # derived from this very directory (recovery tooling re-feeding the
-    # durable drop), and overwriting a path mid-read is the read-while-
-    # overwrite hazard (ADVICE r04). The staged write reads the input
-    # while the old copy is still intact, then swaps.
-    staged_c = f"{own_corpus}.tmp"
-    shutil.rmtree(staged_c, ignore_errors=True)
-    new_docs.select(id_col, text_col).write.mode("overwrite").parquet(
-        staged_c
-    )
-    shutil.rmtree(own_corpus, ignore_errors=True)
-    os.rename(staged_c, own_corpus)
-    batch = spark.read.parquet(own_corpus)
-
-    _restore_displaced_bands(root)  # heal a crashed compaction first
-    prior_band_vs = [v for v in _version_dirs(f"{root}/bands")
-                     if v < batch_id]
-    band_index = (
-        spark.read.parquet(
-            *[f"{root}/bands/v{v}" for v in prior_band_vs]
-        )
-        if prior_band_vs else None
-    )
-    prior_label_vs = [v for v in _version_dirs(f"{root}/labels")
-                      if v < batch_id]
-    labels = (
-        spark.read.parquet(f"{root}/labels/v{prior_label_vs[-1]}")
-        if prior_label_vs else None
-    )
-    corpus_vs = [v for v in _version_dirs(f"{root}/corpus")
-                 if v <= batch_id]
-    corpus = spark.read.parquet(
-        *[f"{root}/corpus/v{v}" for v in corpus_vs]
-    )
-
-    from .operators.dedup import dedup_cache_scope, incremental_dedup_batch
-
-    # scope the operator-held persists to THIS batch: a long-running
-    # streaming query runs thousands of micro-batches, and without the
-    # scope each batch would leak ~5 cached subplans into the CacheManager
-    # forever (the dedup module's own cache-contract — dedup.py:89)
-    with dedup_cache_scope():
-        new_labels, nb = incremental_dedup_batch(
-            labels, band_index, batch, corpus,
-            text_col=text_col, id_col=id_col, threshold=threshold,
-        )
-        nb.write.mode("overwrite").parquet(f"{root}/bands/v{batch_id}")
-        staged = f"{root}/labels/v{batch_id}.tmp"
-        final = f"{root}/labels/v{batch_id}"
-        shutil.rmtree(staged, ignore_errors=True)
-        new_labels.write.mode("overwrite").parquet(staged)
-    shutil.rmtree(final, ignore_errors=True)
-    os.rename(staged, final)
-
-
-def _restore_displaced_bands(root: str) -> None:
-    """Crash recovery for ``compact_band_index``'s publish window: a
-    compaction displaces the original ``v<N>`` to ``v<N>.old`` before
-    renaming the combined dir into place. If it died between those two
-    renames, the index would silently lose v<N>'s rows (``.old`` isn't a
-    listed version) — so restore any displaced original whose base dir is
-    missing, drop ``.old`` leftovers whose base exists (the combined dir
-    already holds their rows), and clear stray ``.tmp`` stages. Called
-    before every compaction AND every probe-index read; single-writer
-    maintenance assumed, like the rest of the chain."""
-    import os
-    import shutil
-
-    bands = f"{root}/bands"
-    if not os.path.isdir(bands):
-        return
-    for d in os.listdir(bands):
-        path = f"{bands}/{d}"
-        if d.endswith(".old"):
-            base = path[:-4]
-            if os.path.isdir(base):
-                shutil.rmtree(path, ignore_errors=True)
-            else:
-                os.rename(path, base)
-        elif d.endswith(".tmp"):
-            shutil.rmtree(path, ignore_errors=True)
-
-
-def compact_band_index(spark: SparkSession, root: str,
-                       keep: int = 2) -> list[int]:
-    """Compact the ``merge_dedup_labels`` band index: every batch appends
-    a ``bands/v<batch>`` directory, so the per-batch probe's multi-path
-    read lists O(batches) directories forever. Compaction merges all band
-    drops EXCEPT the newest ``keep`` into the highest merged version's
-    directory (one combined parquet dir), deleting the originals — reads
-    of "versions strictly below N" see exactly the same rows, and replay
-    only ever re-feeds the LAST batch, which stays uncompacted
-    (``keep >= 2`` enforced, the same replay floor as
-    ``expire_label_snapshots``).
-
-    Crash safety by atomic renames + recovery + idempotence: the combined
-    dir is staged, the original ``v<high>`` is DISPLACED to ``v<high>.old``
-    (atomic rename, rows never deleted before the replacement is live),
-    the staged dir is renamed into place (atomic), and only then are the
-    ``.old`` copy and the older originals removed. The one dangerous
-    window — died between the two renames, leaving no listed ``v<high>``
-    — is healed by ``_restore_displaced_bands`` (run before every
-    compaction and every probe read); every other crash point leaves at
-    worst duplicate band rows, which the probe's canonical
-    ``dropDuplicates`` tolerates and a re-run removes, so compacting a
-    half-compacted chain converges. Returns the removed version ids."""
-    import os
-    import shutil
-
-    if keep < 2:
-        raise ValueError(
-            "keep must be >= 2 — the last batch must stay replayable"
-        )
-    _restore_displaced_bands(root)
-    versions = _version_dirs(f"{root}/bands")
-    to_merge = versions[:-keep] if len(versions) > keep else []
-    if len(to_merge) < 2:
-        return []
-    high = to_merge[-1]
-    combined = spark.read.parquet(
-        *[f"{root}/bands/v{v}" for v in to_merge]
-    ).dropDuplicates()
-    staged = f"{root}/bands/v{high}.tmp"
-    shutil.rmtree(staged, ignore_errors=True)
-    combined.write.mode("overwrite").parquet(staged)
-    final = f"{root}/bands/v{high}"
-    displaced = f"{final}.old"
-    shutil.rmtree(displaced, ignore_errors=True)
-    os.rename(final, displaced)
-    os.rename(staged, final)
-    shutil.rmtree(displaced, ignore_errors=True)
-    removed = [v for v in to_merge if v != high]
-    for v in removed:
-        shutil.rmtree(f"{root}/bands/v{v}", ignore_errors=True)
-    return removed
-
-
-def expire_label_snapshots(root: str, keep: int) -> list[int]:
-    """Retention for the ``merge_dedup_labels`` label chain: keep the
-    newest ``keep`` versions, delete the rest (label versions are
-    self-contained — no manifest-liveness rule needed, unlike
-    ``expire_snapshots``). ``keep >= 2`` is enforced: a replayed batch N
-    reads the latest version strictly below N, so the version before the
-    newest must survive until the newest can no longer be replayed.
-    Returns the deleted version ids."""
-    import shutil
-
-    if keep < 2:
-        raise ValueError(
-            "keep must be >= 2 — a replayed last batch reads the version "
-            "before it"
-        )
-    versions = _version_dirs(f"{root}/labels")
-    deleted = versions[:-keep] if len(versions) > keep else []
-    for v in deleted:
-        shutil.rmtree(f"{root}/labels/v{v}", ignore_errors=True)
-    return deleted
-
-
 def read_edge_snapshot(
     spark: SparkSession, edges_root: str, version: int | None = None
 ):

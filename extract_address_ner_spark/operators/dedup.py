@@ -310,10 +310,8 @@ def lsh_band_table(
     n_hashes: int = N_HASHES, band_size: int = BAND_SIZE,
 ) -> DataFrame:
     """(id, band_idx, band_sig): each doc's banded MinHash signature, one
-    row per band — the LSH bucket membership table. Shared by the one-shot
-    self-join (``lsh_candidate_pairs``) and the incremental probe
-    (``incremental_lsh_pairs``, which accumulates this table as the
-    durable band INDEX across batches)."""
+    row per band — the LSH bucket membership table that
+    ``lsh_candidate_pairs`` self-joins."""
     return _bands(_sig_frame(df, text_col, id_col, n_hashes), id_col,
                   n_hashes, band_size)
 
@@ -480,7 +478,6 @@ def similar_docs(
     text_col: str = "text", id_col: str = "doc_id",
     n_hashes: int = N_HASHES, band_size: int = BAND_SIZE,
     max_bucket_size: int | None = None,
-    band_index: DataFrame | None = None,
 ) -> DataFrame:
     """Textual similarity SEARCH over the corpus — the serving read of the
     MinHash-LSH machinery: for each query doc, the top-``k`` most-similar
@@ -506,26 +503,13 @@ def similar_docs(
     Ranking is deterministic cross-engine: jaccard is 4-dp-rounded FIRST
     (integer-count ratios — both engines compute the identical double) and
     ties break on ascending doc id. Queries drawn from the corpus never
-    match themselves (``doc_id != query_id``).
-
-    ``band_index``: a pre-materialized corpus band table — e.g. the
-    durable ``bands/v*`` parquet index the incremental dedup path
-    accumulates (entry_queries_streaming.merge_dedup_labels /
-    compact_band_index) — so serving skips re-banding the corpus
-    entirely: the probe reads the index, and the only corpus work left is
-    shingling the candidate docs (the corpus is semi-joined to candidate
-    ids first). Must have been built with the same (n_hashes, band_size)
-    and id/text columns; results are identical to the from-scratch path
-    (pytest-pinned)."""
+    match themselves (``doc_id != query_id``)."""
     from ..session import ensure_optimizer_confs
 
     ensure_optimizer_confs(df.sparkSession)
-    if band_index is None:
-        frame = _persist(_sig_frame(df, text_col, id_col, n_hashes))
-        bands = _bands(frame, id_col, n_hashes, band_size)
-    else:
-        bands = band_index
-    bands = _cap_buckets(bands, max_bucket_size)
+    frame = _persist(_sig_frame(df, text_col, id_col, n_hashes))
+    bands = _cap_buckets(_bands(frame, id_col, n_hashes, band_size),
+                         max_bucket_size)
     q = _persist(_sig_frame(queries, text_col, id_col, n_hashes)
                  ).withColumnRenamed(id_col, "query_id")
     q_bands = _bands(q, "query_id", n_hashes, band_size)
@@ -535,12 +519,6 @@ def similar_docs(
         .select("query_id", id_col)
         .distinct()
     )
-    if band_index is not None:
-        cand = _persist(cand)  # feeds the semi-join AND the verify join
-        frame = _sig_frame(
-            df.join(cand.select(id_col).distinct(), id_col, "left_semi"),
-            text_col, id_col, n_hashes,
-        )
     corpus_sh = frame.select(id_col, F.col("_sh").alias("_sb"))
     q_sh = q.select("query_id", F.col("_sh").alias("_sa"))
     w = Window.partitionBy("query_id").orderBy(
@@ -587,29 +565,13 @@ def _verified(
 def jaccard_verify(
     df: DataFrame, cand: DataFrame, text_col: str = "text",
     id_col: str = "doc_id", threshold: float = 0.8,
-    prefilter_candidates: bool = False,
 ) -> DataFrame:
-    """Exact shingle-Jaccard verification of a candidate pair list
-    (id_a, id_b) against the corpus — the back half of the incremental
-    probe path (``incremental_dedup_batch``). It computes its own
-    signature frame; ``lsh_verified_pairs`` shares one frame between its
-    band table and verification instead.
-
-    ``prefilter_candidates``: semi-join the corpus to candidate-pair ids
-    before shingling. Turn ON when candidates are a small fraction of the
-    corpus (a micro-batch's delta against the whole corpus; ~1% near-dup
-    rate → ~100x less shingling); at dup-dense scale, where candidates
-    cover most docs, the extra distinct + semi-join exchanges cost more
-    than the shingling they avoid. The result is identical either way
-    (equality-tested)."""
+    """Exact shingle-Jaccard verification of a given candidate pair list
+    (id_a, id_b) against the corpus — the back half of
+    ``lsh_verified_pairs`` on its own. It computes its own signature
+    frame; ``lsh_verified_pairs`` shares one frame between its band table
+    and verification instead."""
     cand = _persist(cand.select("id_a", "id_b"))  # both gathers + pair join
-    if prefilter_candidates:
-        cand_ids = (
-            cand.select(F.col("id_a").alias(id_col))
-            .union(cand.select(F.col("id_b").alias(id_col)))
-            .distinct()
-        )
-        df = df.join(cand_ids, id_col, "left_semi")
     frame = _persist(_sig_frame(df, text_col, id_col).select(id_col, "_sh"))
     return _verified(frame, cand, id_col, threshold)
 
@@ -622,8 +584,7 @@ def _unionfind_remap(spark, rows, id_type: T.DataType) -> DataFrame:
     """Driver-side union-find over a bounded pair list: returns the
     ``(_old, _new)`` DataFrame mapping every non-root member to its root,
     roots being the MIN id of each component — exactly the min-label CC
-    contract. The bounded fast path of ``connected_components`` (and so of
-    ``incremental_components``, which calls it)."""
+    contract. The bounded fast path of ``connected_components``."""
     parent: dict = {}
 
     def find(x):
@@ -685,17 +646,7 @@ def connected_components(
     enough (diameter 1-3) that plain propagation wins on constant factors."""
     # One eager checkpoint of the pair list: the driver-path probe and both
     # sides of the edge union read it, never the generator's plan again.
-    return _components(docs, pairs.select("id_a", "id_b").localCheckpoint(),
-                       id_col, max_iter, driver_threshold)
-
-
-def _components(
-    docs: DataFrame, pairs: DataFrame, id_col: str, max_iter: int,
-    driver_threshold: int,
-) -> DataFrame:
-    """The body of ``connected_components`` over a pair list that is
-    already a checkpoint of ``(id_a, id_b)``; ``incremental_components``
-    calls it directly with its checkpointed contracted edges."""
+    pairs = pairs.select("id_a", "id_b").localCheckpoint()
     # Bounded driver fast path (round 6, opt-in via driver_threshold > 0):
     # when the pair list holds at most driver_threshold edges, one
     # limit(threshold+1).collect() + union-find replaces the whole
@@ -924,249 +875,6 @@ def dedup_near(
     )
     keepers = comp.filter(F.col(id_col) == F.col("component_id")).select(id_col)
     return docs.join(keepers, id_col, "left_semi")
-
-
-def incremental_components(
-    prev_labels: DataFrame,
-    new_pairs: DataFrame,
-    id_col: str = "doc_id",
-    label_col: str = "component_id",
-    max_iter: int = 25,
-    driver_threshold: int = 0,
-) -> DataFrame:
-    """Merge a DELTA batch of near-dup pairs into an existing component
-    labeling without recomputing components over the whole corpus — the
-    missing piece of the incremental-KG story: ``merge_edge_snapshot``
-    keeps the edge table fresh per micro-batch, and this keeps the dedup
-    clusters fresh at a per-batch cost ∝ |delta|, never ∝ |corpus|.
-
-    Contract matches ``connected_components``: labels are the MIN doc id
-    in each component (any orderable id type), singletons label
-    themselves, and the result is pytest-pinned IDENTICAL to a full
-    recompute over (old edges ∪ delta edges) — the contraction argument:
-    an existing label IS the min of its old component, so running CC over
-    the delta edges with each endpoint contracted to its super-node (its
-    prior label, or itself if new) yields per-super-node minima that equal
-    the merged components' global minima.
-
-    Scale shape (the reason this exists):
-    - the delta's endpoints are resolved against the label table with the
-      SMALL side broadcast (one map-side pass over prev_labels, no
-      shuffle of it);
-    - CC runs on the CONTRACTED graph only — O(|delta| + touched
-      components) nodes;
-    - the relabel is one broadcast join of the remap table (∝ delta)
-      against prev_labels — a second map-side pass, again no shuffle of
-      the big table.
-    Two full scans of the label table per batch is the irreducible cost
-    of reading + rewriting labels; nothing is ever shuffled or iterated
-    at corpus size.
-
-    ``driver_threshold`` (>0 to enable) is passed to the
-    ``connected_components`` body over the CONTRACTED graph: at most this many
-    contracted edges get the driver-side union-find instead of the
-    distributed loop's per-round jobs (~6-10 Spark jobs of pure fixed
-    overhead for a micro-batch-sized delta). This is NOT a driver-side
-    loop over corpus data: the contracted graph is ∝ |delta| + touched
-    components by construction, and a larger delta falls back to the
-    distributed loop. Result identity between the two paths is
-    pytest-pinned."""
-    clash = {"_n", "_s", "_old", "_new"} & set(prev_labels.columns)
-    if clash:
-        raise ValueError(
-            f"incremental_components reserves internal column names "
-            f"{sorted(clash)} — rename the input column(s)"
-        )
-    ends = _persist(
-        new_pairs.select(F.col("id_a").alias("_n"))
-        .union(new_pairs.select(F.col("id_b").alias("_n")))
-        .distinct()
-    )
-    # endpoint → super-node (= prior label, or itself when unseen). The
-    # inner join builds the broadcast from ends (small); the anti-join's
-    # broadcast side is `known`, which is ⊆ ends.
-    known = _persist(
-        prev_labels.join(F.broadcast(ends),
-                         prev_labels[id_col] == F.col("_n"))
-        .select(F.col("_n"), F.col(label_col).alias("_s"))
-    )
-    unseen = ends.join(F.broadcast(known.select("_n")), "_n", "left_anti")
-    mapped = known.unionByName(
-        unseen.select("_n", F.col("_n").alias("_s"))
-    )
-    ce = (
-        new_pairs
-        .join(F.broadcast(mapped.withColumnRenamed("_n", "id_a")
-                          .withColumnRenamed("_s", "_sa")), "id_a")
-        .join(F.broadcast(mapped.withColumnRenamed("_n", "id_b")
-                          .withColumnRenamed("_s", "_sb")), "id_b")
-        .select(F.col("_sa").alias("id_a"), F.col("_sb").alias("id_b"))
-        .filter(F.col("id_a") != F.col("id_b"))
-        # both snodes and the components call read ce; checkpointed, its
-        # broadcast joins run once (measured 50 → 20 jobs per call on the
-        # driver path, 106 → 75 on the distributed loop)
-        .localCheckpoint()
-    )
-    snodes = (
-        ce.select(F.col("id_a").alias(id_col))
-        .union(ce.select(F.col("id_b").alias(id_col)))
-        .distinct()
-    )
-    # remap: old super-node id → merged component label (∝ delta rows);
-    # ce is already a checkpoint, so the body runs without a second one
-    remap = _persist(
-        _components(snodes, ce, id_col, max_iter, driver_threshold)
-        .select(F.col(id_col).alias("_old"),
-                F.col("component_id").alias("_new"))
-        .filter(F.col("_old") != F.col("_new"))
-    )
-    relabeled = prev_labels.join(
-        F.broadcast(remap), prev_labels[label_col] == F.col("_old"), "left"
-    ).select(
-        prev_labels[id_col].alias(id_col),
-        F.coalesce(F.col("_new"), prev_labels[label_col]).alias(label_col),
-    )
-    added = unseen.join(
-        F.broadcast(remap), unseen["_n"] == F.col("_old"), "left"
-    ).select(
-        F.col("_n").alias(id_col),
-        F.coalesce(F.col("_new"), F.col("_n")).alias(label_col),
-    )
-    return relabeled.unionByName(added)
-
-
-def incremental_lsh_pairs(
-    new_docs: DataFrame,
-    band_index: DataFrame | None,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    n_hashes: int = N_HASHES,
-    band_size: int = BAND_SIZE,
-    max_bucket_size: int | None = None,
-) -> tuple[DataFrame, DataFrame]:
-    """Near-dup candidate pairs for a DELTA batch of docs against a durable
-    band INDEX (the accumulated ``lsh_band_table`` of every prior batch).
-    Returns ``(pairs, new_bands)`` — the caller appends ``new_bands`` to
-    the index. Pair-set completeness across batches: a pair {x, y} with
-    x arriving no later than y shares some band bucket iff full-corpus LSH
-    buckets them, and x's bands are in the index when y arrives — so the
-    union of per-batch pair sets EQUALS the one-shot
-    ``lsh_candidate_pairs`` set (pytest-pinned batch-by-batch).
-
-    Scale shape: banding touches ONLY the new docs (∝ batch); the probe is
-    one equi-join on (band_idx, band_sig) with the new side small — at
-    cluster scale store the index PARTITIONED by a band-key hash so the
-    probe co-locates and prunes, and broadcast the new side when the batch
-    is small. Nothing rescans or re-hashes the existing corpus.
-
-    ``max_bucket_size`` caps buckets by their size in (index ∪ new) AT
-    PROBE TIME — equal to the one-shot cap only once all batches have
-    arrived; mid-stream a bucket may emit pairs before it grows past the
-    cap, so incremental-capped recall is ≥ one-shot-capped recall (and ≤
-    uncapped). Pass None (default) for exact one-shot equivalence."""
-    from ..session import ensure_optimizer_confs
-
-    ensure_optimizer_confs(new_docs.sparkSession)
-    nb = _persist(
-        lsh_band_table(new_docs, text_col, id_col, n_hashes, band_size)
-    )
-    all_b = _cap_buckets(
-        nb if band_index is None else band_index.unionByName(nb),
-        max_bucket_size,
-    )
-    a = nb.alias("a")
-    b = all_b.alias("b")
-    pairs = (
-        a.join(
-            b,
-            (F.col("a.band_idx") == F.col("b.band_idx"))
-            & (F.col("a.band_sig") == F.col("b.band_sig"))
-            & (F.col(f"a.{id_col}") != F.col(f"b.{id_col}")),
-        )
-        .select(
-            F.least(F.col(f"a.{id_col}"), F.col(f"b.{id_col}")).alias("id_a"),
-            F.greatest(F.col(f"a.{id_col}"), F.col(f"b.{id_col}")).alias("id_b"),
-        )
-        .dropDuplicates(["id_a", "id_b"])
-    )
-    return pairs, nb
-
-
-def incremental_dedup_batch(
-    labels: DataFrame | None,
-    band_index: DataFrame | None,
-    new_docs: DataFrame,
-    corpus: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    threshold: float = 0.8,
-    n_hashes: int = N_HASHES,
-    band_size: int = BAND_SIZE,
-    max_bucket_size: int | None = None,
-    driver_threshold: int = 100_000,
-) -> tuple[DataFrame, DataFrame]:
-    """One micro-batch of NEAR-dup dedup-on-arrival — the full incremental
-    chain: band the new docs and probe the durable band index
-    (``incremental_lsh_pairs``), Jaccard-verify only the delta candidates
-    (``jaccard_verify`` with the prefilter semi-join — candidates are
-    sparse relative to the corpus by construction), and merge the verified
-    delta pairs into the component labeling (``incremental_components``).
-    Returns ``(labels', new_bands)``; the caller durably appends
-    ``new_bands`` to the index, persists ``labels'``, and appends
-    ``new_docs`` to ``corpus`` — exactly the foreachBatch shape
-    ``merge_edge_snapshot`` uses for the edge table.
-
-    ``corpus`` must already INCLUDE this batch (verification reads both
-    sides' text), and doc ids must be unique across batches (append-only
-    corpus — exact re-arrivals belong to the EXACT dedup-on-arrival stage
-    upstream). New docs with no verified pair enter ``labels'`` as
-    singletons, so keeper selection (label == id) works mid-stream.
-
-    End-to-end equivalence with the one-shot ``dedup_near`` keeper set is
-    pytest-pinned batch-by-batch at ``max_bucket_size=None`` (see the
-    probe-time cap note on ``incremental_lsh_pairs``).
-
-    ``driver_threshold`` defaults ON here (100k contracted edges ≈ a few
-    MB driver-side): a micro-batch's verified-dup delta is small by
-    construction, and the union-find fast path removes the CC loop's
-    fixed per-round job overhead from every batch (see
-    ``incremental_components``; oversized deltas fall back)."""
-    cand, nb = incremental_lsh_pairs(
-        new_docs, band_index, text_col, id_col, n_hashes, band_size,
-        max_bucket_size,
-    )
-    verified = jaccard_verify(
-        corpus, cand, text_col, id_col, threshold, prefilter_candidates=True
-    )
-    if labels is None:
-        labels = (
-            new_docs.select(F.col(id_col), F.col(id_col).alias("component_id"))
-            .limit(0)
-        )
-    # EAGER lineage truncation, not just persist: the verified delta feeds
-    # incremental_components through several broadcast builds and the CC
-    # convergence loop's per-round actions — with a lazy cache each of
-    # those replans the full band→probe→verify DAG and the batch costs
-    # ~12x more wall (measured 109s → 9s at smoke scale). The delta is
-    # tiny (∝ batch dup volume), so checkpointing it is cheap; same
-    # plan-truncation rationale (incl. the reliable-storage caveat on real
-    # clusters) as connected_components_star's per-round edge sets.
-    verified = verified.select("id_a", "id_b").localCheckpoint()
-    merged = incremental_components(
-        labels, verified, id_col=id_col, driver_threshold=driver_threshold
-    )
-    # singleton arrivals: new docs untouched by any verified pair still get
-    # a self-label row. The anti-join's right side is the DELTA pairs'
-    # endpoint set (small, broadcast) — never the corpus-sized label table.
-    ends = (
-        verified.select(F.col("id_a").alias(id_col))
-        .union(verified.select(F.col("id_b").alias(id_col)))
-        .distinct()
-    )
-    singles = new_docs.select(id_col).join(
-        F.broadcast(ends), id_col, "left_anti"
-    ).select(F.col(id_col), F.col(id_col).alias("component_id"))
-    return merged.unionByName(singles), nb
 
 
 # --------------------------------------------------------------------------

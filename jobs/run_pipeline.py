@@ -39,12 +39,6 @@ snapshot-versioned edge table (partition-incremental `merge_edge_snapshot`
 bytes stats printed and the final snapshot verified equal to the batch
 edge stage.
 
-``--incremental-dedup N`` does the same for NEAR-dup dedup-on-arrival:
-the corpus stage replayed as N drops through ``merge_dedup_labels``
-(durable band index + snapshot-versioned labels, keep-2 label retention
-and band compaction inline), with the final keeper set verified equal to
-the one-shot ``dedup_near``.
-
 ``--embed DIM,EPOCHS`` trains TransE KG embeddings on the built edge
 stage (numpy mapInPandas gradient pass, one groupBy reduce + model
 broadcast per epoch), writes (kind, name, vec) under
@@ -106,13 +100,6 @@ def main() -> int:
              "text under <warehouse>/ntriples (narrow map-only plan, one "
              "part-file per partition) and verify the parse-back equals "
              "the edge table exactly — the KG interchange export stage")
-    ap.add_argument(
-        "--incremental-dedup", type=int, metavar="N_DROPS",
-        help="demonstrate NEAR-dup dedup-on-arrival: replay the corpus "
-             "stage as N_DROPS deltas through merge_dedup_labels "
-             "(durable band index + snapshot-versioned labels, retention "
-             "+ band compaction inline), then verify the final keeper set "
-             "equals the one-shot dedup_near exactly")
     ap.add_argument(
         "--incremental-edges", type=int, metavar="N_DROPS",
         help="additionally demonstrate the INCREMENTAL edge-table shape: "
@@ -380,36 +367,6 @@ def main() -> int:
         print(f"export_ntriples: {n_lines} lines under {nt_dir}, "
               f"roundtrip_exact={'true' if nt_diff == 0 else 'false'}")
         if nt_diff != 0:
-            ok = False
-    if args.incremental_dedup:
-        from pyspark.sql import functions as F
-
-        from extract_address_ner_spark.entry_queries_streaming import (
-            compact_band_index,
-            expire_label_snapshots,
-            merge_dedup_labels,
-        )
-        from extract_address_ner_spark.operators.dedup import dedup_near
-
-        droot = str(Path(args.warehouse) / "dedup_labels")
-        shutil.rmtree(droot, ignore_errors=True)
-        docs = out["corpus"].selectExpr("doc_id", "content AS text")
-        n_drops = args.incremental_dedup
-        for drop in range(n_drops):
-            merge_dedup_labels(
-                docs.filter(F.col("doc_id") % n_drops == drop), droot, drop)
-            expire_label_snapshots(droot, keep=2)
-            compact_band_index(spark, droot, keep=2)
-        labels = spark.read.parquet(f"{droot}/labels/v{n_drops - 1}")
-        inc_keep = labels.filter("doc_id = component_id").select("doc_id")
-        one_keep = dedup_near(docs).select("doc_id")
-        ddiff = (inc_keep.exceptAll(one_keep).count()
-                 + one_keep.exceptAll(inc_keep).count())
-        print(f"incremental_dedup: keepers={inc_keep.count()}/"
-              f"{labels.count()} docs over {n_drops} drops, "
-              f"keeper_set_equals_one_shot="
-              f"{'true' if ddiff == 0 else 'false'}")
-        if ddiff != 0:
             ok = False
     if args.integrity_gate:
         from extract_address_ner_spark.operators.graph_query import (

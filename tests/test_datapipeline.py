@@ -153,12 +153,11 @@ def test_lsh_verified_pairs_composition(spark, sf_smoke):
     exact_pairs = {(i, i + 200000) for i in range(0, 500, 7)}
     assert exact_pairs <= set(verified)
     assert all(verified[p] == 1.0 for p in exact_pairs)
-    # the cluster-scale candidate prefilter changes the plan, not the result
-    prefiltered = {(r["id_a"], r["id_b"]): r["jaccard"]
-                   for r in dedup.jaccard_verify(
-                       df, dedup.lsh_candidate_pairs(df),
-                       prefilter_candidates=True).collect()}
-    assert prefiltered == verified
+    # jaccard_verify over the same candidates gives the same scores
+    split = {(r["id_a"], r["id_b"]): r["jaccard"]
+             for r in dedup.jaccard_verify(
+                 df, dedup.lsh_candidate_pairs(df)).collect()}
+    assert split == verified
 
 
 def test_jaccard_on_planted_pairs(spark, sf_smoke):
@@ -322,8 +321,7 @@ def test_dedup_cache_scope_releases_blocks(spark, sf_smoke):
             assert dedup.jaccard_pairs(docs).count() >= 0
             assert dedup.simhash_near_pairs(docs).count() >= 0
             assert dedup.jaccard_verify(
-                docs, dedup.lsh_candidate_pairs(docs),
-                prefilter_candidates=True).count() >= 0
+                docs, dedup.lsh_candidate_pairs(docs)).count() >= 0
     # no NEW persisted RDDs with live blocks remain
     assert _no_new_residual(sc, baseline) == set()
     # the full dedup_near chain inside a scope leaves nothing cached:
@@ -375,131 +373,6 @@ def test_connected_components_on_planted_dups(spark, sf_smoke):
     for d, c in comp.items():
         if d not in linked:
             assert c == d  # singleton labels itself
-
-
-def test_incremental_components_matches_full_recompute(spark):
-    """Round-5: merging delta pair batches into an existing labeling must
-    equal a FULL recompute over all pairs seen so far — across batches
-    that (a) extend existing components, (b) MERGE two existing
-    components through a single delta edge, (c) introduce brand-new
-    clusters, (d) add edges internal to one component (contracted
-    self-loops), and (e) make a NEW node the component minimum (the
-    relabel must flow old → new id). String ids, so the orderable-label
-    contract is covered too."""
-    import random
-
-    rng = random.Random(41)
-    node_ids = [f"d{i:03d}" for i in range(120)]
-    batches = []
-    # seeded structure hitting the named cases, then random fill
-    batches.append([("d010", "d011"), ("d011", "d012"), ("d050", "d051")])
-    batches.append([("d012", "d050"),            # merge two components
-                    ("d010", "d012"),            # internal edge (self-loop)
-                    ("d090", "d091")])           # new cluster
-    batches.append([("d005", "d010"),            # new node IS the new min
-                    ("d000", "d091")])           # new min via merge
-    batches.append([
-        (rng.choice(node_ids), rng.choice(node_ids)) for _ in range(25)
-    ])
-    labels = spark.createDataFrame([], "doc_id string, component_id string")
-    seen: list = []
-    for bi, batch in enumerate(batches):
-        batch = [(a, b) for a, b in batch if a != b]
-        seen += batch
-        delta = spark.createDataFrame(batch, "id_a string, id_b string")
-        labels = dedup.incremental_components(labels, delta)
-        # cut lineage so the loop doesn't compound plans across batches —
-        # exactly what a foreachBatch caller does via the durable table
-        labels = spark.createDataFrame(
-            labels.collect(), "doc_id string, component_id string")
-        all_nodes = sorted({x for p in seen for x in p})
-        full = dedup.connected_components(
-            spark.createDataFrame([(n,) for n in all_nodes], "doc_id string"),
-            spark.createDataFrame(seen, "id_a string, id_b string"),
-        )
-        got = {r["doc_id"]: r["component_id"] for r in labels.collect()}
-        want = {r["doc_id"]: r["component_id"] for r in full.collect()}
-        assert got == want, (bi, {k: (got.get(k), want[k])
-                                  for k in want if got.get(k) != want[k]})
-
-
-def test_incremental_components_driver_path_equivalence(spark, jobs_run_by):
-    """Round-5: the bounded driver-side union-find fast path
-    (driver_threshold) must return EXACTLY the distributed result — on a
-    delta that merges two components, adds a new cluster, and makes a new
-    node a component minimum — and a delta LARGER than the threshold must
-    fall back to the distributed path (threshold=1 here), identically.
-    The contracted edge list is checkpointed once, so the driver path's
-    call runs 7 eager jobs."""
-    labels = spark.createDataFrame(
-        [("b", "b"), ("c", "b"), ("f", "f"), ("g", "f"), ("z", "z")],
-        "doc_id string, component_id string")
-    delta = spark.createDataFrame(
-        [("c", "g"),          # merge components b and f
-         ("p", "q"),          # brand-new cluster
-         ("a", "b"),          # new node 'a' becomes the min of b∪f∪{a}
-         ("z", "z2")],        # extend a singleton
-        "id_a string, id_b string")
-    want = None
-    for thr in (0, 1, 10_000):
-        merged, n_jobs = jobs_run_by(lambda: dedup.incremental_components(
-            labels, delta, driver_threshold=thr))
-        got = sorted(map(tuple, merged.collect()))
-        if want is None:
-            want = got
-        assert got == want, thr
-    assert n_jobs == 7  # the driver path (thr=10_000)
-    assert dict(want) == {"a": "a", "b": "a", "c": "a", "f": "a", "g": "a",
-                          "p": "p", "q": "p", "z": "z", "z2": "z"}
-
-
-def test_incremental_near_dedup_matches_one_shot(spark, sf_smoke):
-    """Round-5 end-to-end: near-dup dedup-on-arrival (band the batch →
-    probe the durable band index → verify delta candidates → merge into
-    the labeling) must equal the one-shot path batch-by-batch — after
-    every batch, labels == connected_components over lsh_verified_pairs of
-    the corpus-so-far, and the final keeper set == ``dedup_near``. Batches
-    split doc_id % 3, which strews each planted dup cluster (i, i+100000,
-    i+200000) ACROSS batches — pairs must form against index entries from
-    earlier batches, not just within a batch."""
-    docs = dup_documents(spark, sf_smoke)
-    labels, index, corpus = None, None, None
-    for k in range(3):
-        batch = docs.filter(F.col("doc_id") % 3 == k)
-        corpus = batch if corpus is None else corpus.unionByName(batch)
-        labels, nb = dedup.incremental_dedup_batch(
-            labels, index, batch, corpus)
-        index = nb if index is None else index.unionByName(nb)
-        # durable-table lineage cut, as a foreachBatch caller would have
-        labels = spark.createDataFrame(labels.collect(), labels.schema)
-        index = spark.createDataFrame(index.collect(), index.schema)
-        got = {r["doc_id"]: r["component_id"] for r in labels.collect()}
-        full = dedup.connected_components(
-            corpus, dedup.lsh_verified_pairs(corpus))
-        want = {r["doc_id"]: r["component_id"] for r in full.collect()}
-        assert got == want, (k, {d: (got.get(d), want[d])
-                                 for d in want if got.get(d) != want[d]})
-    keepers = {d for d, c in got.items() if d == c}
-    want_keepers = {r["doc_id"] for r in dedup.dedup_near(docs).collect()}
-    assert keepers == want_keepers
-
-
-def test_incremental_components_relabel_is_broadcast(spark):
-    """The scale claim, plan-pinned: the corpus-sized label table is
-    RELABELED via a broadcast join of the delta-sized remap table — the
-    plan's join on `_old` must be a BroadcastHashJoin, never a sort-merge
-    that would shuffle the full label table per micro-batch."""
-    labels = spark.createDataFrame(
-        [(f"d{i}", f"d{i}") for i in range(200)],
-        "doc_id string, component_id string")
-    delta = spark.createDataFrame(
-        [("d1", "d2"), ("d3", "d199")], "id_a string, id_b string")
-    out = dedup.incremental_components(labels, delta)
-    plan = out._jdf.queryExecution().executedPlan().toString()
-    joins_on_old = [seg for seg in plan.splitlines()
-                    if "Join" in seg and "_old" in seg]
-    assert joins_on_old, plan
-    assert all("BroadcastHashJoin" in seg for seg in joins_on_old), plan
 
 
 def test_star_components_semantics(spark):
@@ -598,40 +471,6 @@ def test_connected_components_string_ids(spark):
                    ("d", "d"), ("e", "d")]
 
 
-def test_incremental_cap_recall_sandwich(spark, sf_smoke):
-    """The probe-time bucket-cap claim on incremental_lsh_pairs, measured:
-    with a cap small enough to actually drop buckets, the union of
-    per-batch incremental pair sets is SANDWICHED — a superset of the
-    one-shot capped pairs (a bucket can emit before it outgrows the cap
-    mid-stream) and a subset of the uncapped pairs — and with cap=None it
-    EQUALS the one-shot set exactly."""
-    docs = dup_documents(spark, sf_smoke).select("doc_id", "text")
-    cap = 2
-
-    def pair_set(df):
-        return {(r["id_a"], r["id_b"]) for r in df.collect()}
-
-    def incremental(max_bucket_size):
-        pairs, index = set(), None
-        for k in range(3):
-            batch = docs.filter(F.col("doc_id") % 3 == k)
-            cand, nb = dedup.incremental_lsh_pairs(
-                batch, index, max_bucket_size=max_bucket_size)
-            pairs |= pair_set(cand)
-            nb = spark.createDataFrame(nb.collect(), nb.schema)
-            index = nb if index is None else index.unionByName(nb)
-        return pairs
-
-    oneshot_capped = pair_set(dedup.lsh_candidate_pairs(
-        docs, max_bucket_size=cap))
-    uncapped = pair_set(dedup.lsh_candidate_pairs(docs))
-    assert oneshot_capped < uncapped  # the cap must actually bite here
-
-    inc_capped = incremental(cap)
-    assert oneshot_capped <= inc_capped <= uncapped
-    assert incremental(None) == uncapped
-
-
 def test_similar_docs_serving(spark, sf_smoke):
     """Textual similarity search (dedup.similar_docs): for a query doc with
     a planted exact copy (doc_id % 7 = 0 → +200000), the copy must be rank
@@ -666,19 +505,3 @@ def test_similar_docs_plan_broadcasts_query_side(spark, sf_smoke):
     )
     assert plan.count("BroadcastHashJoin") >= 2, plan
     assert "CartesianProduct" not in plan
-
-
-def test_similar_docs_serves_from_durable_band_index(spark, sf_smoke, tmp_path):
-    """Index serving: similar_docs(band_index=...) probing a parquet-backed
-    band table — written in the incremental path's bands/v* convention —
-    must return
-    exactly the from-scratch result, with the corpus never re-banded."""
-    docs = dup_documents(spark, sf_smoke)
-    qs = docs.filter(F.col("doc_id") % 101 == 7)
-    root = str(tmp_path / "bands" / "v0")
-    dedup.lsh_band_table(docs).write.parquet(root)
-    idx = spark.read.parquet(str(tmp_path / "bands" / "v*"))
-    fresh = sorted(map(tuple, dedup.similar_docs(docs, qs, k=5).collect()))
-    served = sorted(map(tuple, dedup.similar_docs(
-        docs, qs, k=5, band_index=idx).collect()))
-    assert served == fresh and fresh

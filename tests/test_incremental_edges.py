@@ -251,212 +251,3 @@ def test_replay_never_reads_its_own_version(spark, sf_smoke, tmp_path):
         json.dump({"batch_id": 1, "n_buckets": 16, "buckets": {}}, f)
     ES.merge_edge_snapshot(half, root, 1)
     assert _edge_rows(ES.read_edge_snapshot(spark, root)) == want
-
-
-def test_streaming_near_dedup_labels(spark, sf_smoke, tmp_path):
-    """Round-5: NEAR-dup dedup-on-arrival end-to-end through a REAL
-    availableNow stream (maxFilesPerTrigger=1 over three drops) — the
-    foreachBatch body (``merge_dedup_labels``) maintains a snapshot-
-    versioned label table via the durable band index; after the drain the
-    latest labels equal the one-shot components over the FULL corpus and
-    the keeper set equals ``dedup_near``. Then the foreachBatch failure
-    mode: the last batch's label version is destroyed and the batch
-    replayed with the same id — the replay regenerates it from the
-    strictly-prior chain plus its own re-written corpus drop, identically."""
-    import shutil
-
-    from extract_address_ner_spark.entry_queries_data import dup_documents
-    from extract_address_ner_spark.operators import dedup
-    from extract_address_ner_spark.streaming.stream import (
-        ensure_streaming_confs,
-    )
-
-    docs = dup_documents(spark, sf_smoke).select("doc_id", "text")
-    in_dir = str(tmp_path / "in")
-    for part in range(3):
-        docs.filter(F.col("doc_id") % 3 == part).coalesce(1) \
-            .write.mode("append").parquet(in_dir)
-    root = str(tmp_path / "dedup")
-    ensure_streaming_confs(spark)
-    stream = (
-        spark.readStream.schema(docs.schema)
-        .option("maxFilesPerTrigger", 1).parquet(in_dir)
-    )
-    q = (
-        stream.writeStream
-        .foreachBatch(lambda df, bid: ES.merge_dedup_labels(df, root, bid))
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-
-    versions = ES._version_dirs(f"{root}/labels")
-    assert versions == [0, 1, 2], versions
-    got = {r["doc_id"]: r["component_id"]
-           for r in spark.read.parquet(f"{root}/labels/v2").collect()}
-    want = {r["doc_id"]: r["component_id"]
-            for r in dedup.connected_components(
-                docs, dedup.lsh_verified_pairs(docs)).collect()}
-    assert got == want
-    keepers = {d for d, c in got.items() if d == c}
-    assert keepers == {r["doc_id"] for r in dedup.dedup_near(docs).collect()}
-
-    shutil.rmtree(f"{root}/labels/v2")
-    ES.merge_dedup_labels(spark.read.parquet(f"{root}/corpus/v2"), root, 2)
-    got2 = {r["doc_id"]: r["component_id"]
-            for r in spark.read.parquet(f"{root}/labels/v2").collect()}
-    assert got2 == got
-
-
-def test_expire_label_snapshots_keeps_replay_floor(spark, sf_smoke, tmp_path):
-    """Label-chain retention: newest K survive, older versions go, keep<2
-    is refused (a replayed last batch reads the version before it), and
-    band/corpus drops are untouched — after expiry a last-batch replay
-    still regenerates identical labels from the retained chain."""
-    import os
-    import shutil
-
-    import pytest
-
-    from extract_address_ner_spark.entry_queries_data import dup_documents
-
-    docs = dup_documents(spark, sf_smoke).select("doc_id", "text")
-    root = str(tmp_path / "dedup")
-    for part in range(3):
-        ES.merge_dedup_labels(
-            docs.filter(F.col("doc_id") % 3 == part), root, part)
-    want = sorted(map(tuple,
-                      spark.read.parquet(f"{root}/labels/v2").collect()))
-
-    with pytest.raises(ValueError, match="keep"):
-        ES.expire_label_snapshots(root, keep=1)
-    assert ES.expire_label_snapshots(root, keep=2) == [0]
-    assert ES._version_dirs(f"{root}/labels") == [1, 2]
-    assert ES._version_dirs(f"{root}/bands") == [0, 1, 2]
-    assert ES._version_dirs(f"{root}/corpus") == [0, 1, 2]
-
-    # replay of the last batch against the retained chain is still exact
-    shutil.rmtree(f"{root}/labels/v2")
-    ES.merge_dedup_labels(spark.read.parquet(f"{root}/corpus/v2"), root, 2)
-    got = sorted(map(tuple,
-                     spark.read.parquet(f"{root}/labels/v2").collect()))
-    assert got == want
-    assert os.path.isdir(f"{root}/labels/v1")
-
-
-def test_compact_band_index(spark, sf_smoke, tmp_path):
-    """Band-index compaction: the probe's read set shrinks from O(batches)
-    directories to keep+1 while the ROW SET is exactly preserved; the
-    newest `keep` drops stay uncompacted (replay floor); re-running is a
-    no-op; and a simulated crash (an original dir surviving next to the
-    combined one) self-heals on the next compaction via the canonical
-    dropDuplicates."""
-    import shutil
-
-    from extract_address_ner_spark.entry_queries_data import dup_documents
-
-    docs = dup_documents(spark, sf_smoke).select("doc_id", "text")
-    root = str(tmp_path / "dedup")
-    for part in range(5):
-        ES.merge_dedup_labels(
-            docs.filter(F.col("doc_id") % 5 == part), root, part)
-
-    def band_rows():
-        vs = ES._version_dirs(f"{root}/bands")
-        return sorted(map(tuple, spark.read.parquet(
-            *[f"{root}/bands/v{v}" for v in vs]).dropDuplicates().collect()))
-
-    before = band_rows()
-    want_labels = sorted(map(tuple,
-                             spark.read.parquet(f"{root}/labels/v4").collect()))
-
-    assert ES.compact_band_index(spark, root, keep=2) == [0, 1]
-    assert ES._version_dirs(f"{root}/bands") == [2, 3, 4]
-    assert band_rows() == before
-    assert ES.compact_band_index(spark, root, keep=2) == []  # no-op now
-
-    # replay of the last batch probes the compacted index identically
-    shutil.rmtree(f"{root}/labels/v4")
-    ES.merge_dedup_labels(spark.read.parquet(f"{root}/corpus/v4"), root, 4)
-    got_labels = sorted(map(tuple,
-                            spark.read.parquet(f"{root}/labels/v4").collect()))
-    assert got_labels == want_labels
-
-    # crash sim: an already-merged original survives (rm step died) — the
-    # next compaction absorbs the duplicate rows without changing the set
-    spark.read.parquet(f"{root}/bands/v2").limit(50).write.parquet(
-        f"{root}/bands/v1")
-    assert ES.compact_band_index(spark, root, keep=2) == [1]
-    assert ES._version_dirs(f"{root}/bands") == [2, 3, 4]
-    assert band_rows() == before
-
-
-def test_merge_dedup_labels_empty_batch(spark, sf_smoke, tmp_path):
-    """A foreachBatch body must survive an EMPTY micro-batch (possible
-    under non-availableNow triggers): the label chain advances with an
-    unchanged table, the (empty) band/corpus drops stay readable, and a
-    subsequent real batch merges normally."""
-    from extract_address_ner_spark.entry_queries_data import dup_documents
-
-    docs = dup_documents(spark, sf_smoke).select("doc_id", "text")
-    root = str(tmp_path / "dedup")
-    ES.merge_dedup_labels(docs.filter(F.col("doc_id") % 2 == 0), root, 0)
-    v0 = sorted(map(tuple, spark.read.parquet(f"{root}/labels/v0").collect()))
-
-    ES.merge_dedup_labels(docs.limit(0), root, 1)  # empty batch
-    v1 = sorted(map(tuple, spark.read.parquet(f"{root}/labels/v1").collect()))
-    assert v1 == v0
-    assert ES._version_dirs(f"{root}/bands") == [0, 1]
-
-    ES.merge_dedup_labels(docs.filter(F.col("doc_id") % 2 == 1), root, 2)
-    got = {r["doc_id"]: r["component_id"]
-           for r in spark.read.parquet(f"{root}/labels/v2").collect()}
-    from extract_address_ner_spark.operators import dedup
-    want = {r["doc_id"]: r["component_id"]
-            for r in dedup.connected_components(
-                docs, dedup.lsh_verified_pairs(docs)).collect()}
-    assert got == want
-
-
-def test_compact_band_index_rename_window_recovery(spark, sf_smoke, tmp_path):
-    """The one dangerous compaction crash window — original displaced to
-    .old, combined dir not yet published — must self-heal on the next
-    probe read or compaction (code-review finding r05: without recovery,
-    the index silently lost v<high>'s rows forever)."""
-    import os
-
-    from extract_address_ner_spark.entry_queries_data import dup_documents
-
-    docs = dup_documents(spark, sf_smoke).select("doc_id", "text")
-    root = str(tmp_path / "dedup")
-    for part in range(4):
-        ES.merge_dedup_labels(
-            docs.filter(F.col("doc_id") % 4 == part), root, part)
-    vs = ES._version_dirs(f"{root}/bands")
-
-    def band_rows():
-        cur = ES._version_dirs(f"{root}/bands")
-        return sorted(map(tuple, spark.read.parquet(
-            *[f"{root}/bands/v{v}" for v in cur]).dropDuplicates().collect()))
-
-    before = band_rows()
-    # simulate: crash between rename(final, .old) and rename(staged, final)
-    os.rename(f"{root}/bands/v1", f"{root}/bands/v1.old")
-    assert ES._version_dirs(f"{root}/bands") != vs  # the loss is real...
-    ES._restore_displaced_bands(root)               # ...and healed
-    assert ES._version_dirs(f"{root}/bands") == vs
-    assert band_rows() == before
-
-    # the heal also runs implicitly: displace again, then a REPLAY of the
-    # last batch (the probe-read path) must see the full index
-    os.rename(f"{root}/bands/v1", f"{root}/bands/v1.old")
-    want = sorted(map(tuple,
-                      spark.read.parquet(f"{root}/labels/v3").collect()))
-    import shutil
-    shutil.rmtree(f"{root}/labels/v3")
-    ES.merge_dedup_labels(spark.read.parquet(f"{root}/corpus/v3"), root, 3)
-    got = sorted(map(tuple,
-                     spark.read.parquet(f"{root}/labels/v3").collect()))
-    assert got == want
-    assert ES._version_dirs(f"{root}/bands") == vs

@@ -61,16 +61,6 @@ def test_job_entry_incremental_edges(tmp_path):
         assert f"incremental merge v{drop}: rewrote " in stdout
 
 
-def test_job_entry_incremental_dedup(tmp_path):
-    """Round-5: the shipped job can run NEAR-dup dedup-on-arrival — the
-    corpus replayed as 3 drops through merge_dedup_labels with retention
-    and band compaction inline — and its own printed check pins keeper-set
-    equality with the one-shot dedup_near."""
-    stdout = _run_job(tmp_path,
-                      ["--master", "local[2]", "--incremental-dedup", "3"])
-    assert "keeper_set_equals_one_shot=true" in stdout
-
-
 def test_job_entry_export_ntriples(tmp_path):
     """Round-5: the shipped job serializes the edge stage as W3C N-Triples
     text and pins parse-back identity against the edge table."""
