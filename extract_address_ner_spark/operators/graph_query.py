@@ -389,13 +389,7 @@ def comention_pairs(edges: DataFrame, cap: int = 100) -> DataFrame:
 
 
 def pagerank(
-    edges: DataFrame,
-    iterations: int = 3,
-    damping: float = 0.85,
-    src_col: str = "subj",
-    dst_col: str = "obj",
-    tol: float | None = None,
-    weight_col: str | None = None,
+    edges: DataFrame, iterations: int = 3, damping: float = 0.85
 ) -> DataFrame:
     """Fixed-iteration PageRank over the KG edge table (round 4) —
     (node, pagerank) after exactly ``iterations`` rounds of
@@ -420,50 +414,14 @@ def pagerank(
     per-round rank persists are markers the single materialization fills.
     Output is rounded to 6dp — the per-engine float-summation-order noise
     is ~1e-16 relative, far below the rounding grain, which is what makes
-    the result exactly oracle-comparable.
-
-    Round-5 options (VERDICT r04 #7 — the driver query stays on the
-    fixed-iteration default, oracle-pinned):
-
-    - ``tol``: CONVERGENCE mode — stop when the L1 rank delta between
-      rounds drops below ``tol``, capped at ``iterations`` (which becomes
-      max_iter). Each round then costs one extra tiny action (the L1 delta
-      aggregate — one driver scalar, the same price connected_components
-      pays per round for its convergence probe), and the rank vector is
-      ``localCheckpoint``-ed per round instead of persisted — tol runs go
-      10s of rounds deep and the analyzed plan would otherwise grow
-      linearly with rounds (same plan-truncation rationale, incl. the
-      reliable-storage caveat for real clusters, as
-      connected_components_star — dedup.py:563). Production rank
-      stability is worth the per-round action, driver-check determinism
-      is not, hence opt-in.
-    - ``weight_col``: confidence-weighted influence — parallel predicate
-      edges collapse to max(weight) per (src, dst) (the edge table's own
-      max-merge semantics), and a source's rank splits ∝ edge weight
-      instead of 1/outdeg. Same shuffle shape: the weighted outdeg is one
-      map-side-combinable sum."""
-    if weight_col is None:
-        ed = _persist(
-            edges.select(
-                F.col(src_col).alias("_u"), F.col(dst_col).alias("_v")
-            ).distinct()
-        )
-        outdeg = ed.groupBy("_u").agg(
-            F.count(F.lit(1)).cast("double").alias("_deg")
-        )
-        wcol = F.lit(1.0)
-    else:
-        ed = _persist(
-            edges.select(
-                F.col(src_col).alias("_u"),
-                F.col(dst_col).alias("_v"),
-                F.col(weight_col).cast("double").alias("_w"),
-            )
-            .groupBy("_u", "_v")
-            .agg(F.max("_w").alias("_w"))
-        )
-        outdeg = ed.groupBy("_u").agg(F.sum("_w").alias("_deg"))
-        wcol = F.col("_w")
+    the result exactly oracle-comparable."""
+    ed = _persist(
+        edges.select(F.col("subj").alias("_u"), F.col("obj").alias("_v"))
+        .distinct()
+    )
+    outdeg = ed.groupBy("_u").agg(
+        F.count(F.lit(1)).cast("double").alias("_deg")
+    )
     nodes = _persist(
         ed.select(F.col("_u").alias("node"))
         .union(ed.select(F.col("_v").alias("node")))
@@ -483,10 +441,10 @@ def pagerank(
             ed_deg.join(ranks, ed_deg["_u"] == ranks["node"])
             .select(
                 F.col("_v").alias("node"),
-                (F.col("_pr") * wcol / F.col("_deg")).alias("_c"),
+                (F.col("_pr") / F.col("_deg")).alias("_c"),
             )
         )
-        new_ranks = nodes.join(
+        new_ranks = _persist(nodes.join(
             contrib.groupBy("node").agg(F.sum("_c").alias("_s")),
             "node",
             "left",
@@ -496,22 +454,9 @@ def pagerank(
                 F.lit(teleport)
                 + F.lit(damping) * F.coalesce(F.col("_s"), F.lit(0.0))
             ).alias("_pr"),
-        )
-        if tol is not None:
-            new_ranks = new_ranks.localCheckpoint()  # truncate per-round plan
-            # one scalar per round
-            l1 = (
-                new_ranks.withColumnRenamed("_pr", "_new")
-                .join(ranks, "node")
-                .agg(F.sum(F.abs(F.col("_new") - F.col("_pr"))))
-                .collect()[0][0]
-            )
-        else:
-            new_ranks = _persist(new_ranks)
+        ))
         ranks.unpersist()
         ranks = new_ranks
-        if tol is not None and l1 < tol:
-            break
     return ranks.select(
         "node", F.round("_pr", 6).cast("double").alias("pagerank")
     )

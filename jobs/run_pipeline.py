@@ -13,17 +13,8 @@ Sandbox usage (synthetic corpus):
     python jobs/run_pipeline.py --synthesize 100000 \\
         --warehouse /tmp/kg_warehouse --run-id r1
 
-Single-box DEPLOYMENT shape (the measured-fastest way to use all cores of
-one machine — BENCH.md: 4×8-core executor JVMs ran the full KG job 27%
-faster than one local[32] JVM on the same cores):
-
-    python jobs/run_pipeline.py --synthesize 1000000 \\
-        --local-cluster 4,8 --warehouse /tmp/kg_warehouse --run-id r1
-
-``--local-cluster N,C`` starts N REAL worker JVMs × C cores via Spark's
-local-cluster master, each with container-quota-sized GC/JIT threads
-(exactly what a cgroup-aware YARN/K8s executor gets automatically); heap
-is sized ∝ cores. ``--master`` passes any master URL through verbatim.
+``--master`` passes any master URL through verbatim; without it the
+session's default applies (``SPARK_GRAFT_MASTER``, else local[<CPUs>]).
 
 ``--bucketed-edges`` additionally materializes the edge stage BUCKETED by
 subj into the session catalog (``<warehouse>/tables``) and runs the
@@ -38,13 +29,6 @@ snapshot-versioned edge table (partition-incremental `merge_edge_snapshot`
 + keep-2 `expire_snapshots` retention), with per-merge touched-bucket /
 bytes stats printed and the final snapshot verified equal to the batch
 edge stage.
-
-``--embed DIM,EPOCHS`` trains TransE KG embeddings on the built edge
-stage (numpy mapInPandas gradient pass, one groupBy reduce + model
-broadcast per epoch), writes (kind, name, vec) under
-``<warehouse>/kg_embeddings``, prints the loss-curve endpoints and the
-trained positive-vs-corrupted-negative mean-distance separation, and
-fails the job if the hinge loss did not decrease.
 
 ``--integrity-gate`` runs the eight-invariant integrity report
 (operators/graph_query.integrity_report) over the built edge/node stages
@@ -82,10 +66,6 @@ def main() -> int:
     ap.add_argument("--eval-gold", help="optional gold-mentions parquet for a span-P/R report")
     ap.add_argument("--master", help="Spark master URL override (verbatim)")
     ap.add_argument(
-        "--local-cluster", metavar="N_EXEC,CORES",
-        help="single-box deployment shape: N real executor JVMs x CORES "
-             "cores each (quota-sized GC; heap ∝ cores)")
-    ap.add_argument(
         "--bucketed-edges", action="store_true",
         help="additionally materialize the edge stage BUCKETED by subj "
              "(bucketBy+sortBy into the session catalog under "
@@ -110,15 +90,6 @@ def main() -> int:
              "stats, and verify the final snapshot equals the batch edge "
              "stage exactly")
     ap.add_argument(
-        "--embed", metavar="DIM,EPOCHS",
-        help="train TransE KG embeddings on the built edge stage (numpy "
-             "mapInPandas gradient pass + one groupBy reduce per epoch; "
-             "model broadcast per epoch), write (kind, name, vec) under "
-             "<warehouse>/kg_embeddings, print the loss curve endpoints "
-             "and the trained pos-vs-corrupted-neg mean-distance "
-             "separation, and FAIL the job if the hinge loss did not "
-             "decrease (a non-learning run is a broken run)")
-    ap.add_argument(
         "--integrity-gate", action="store_true",
         help="run the eight-invariant KG integrity report (dangling "
              "endpoints, orphans, duplicate triples, self-loops, "
@@ -128,50 +99,15 @@ def main() -> int:
     args = ap.parse_args()
     if not args.corpus and not args.synthesize:
         ap.error("one of --corpus / --synthesize is required")
-    if args.master and args.local_cluster:
-        ap.error("--master and --local-cluster are mutually exclusive")
-    embed_dim = embed_epochs = None
-    if args.embed:  # validate BEFORE the pipeline runs, not hours into it
-        try:
-            embed_dim, embed_epochs = (int(x) for x in args.embed.split(","))
-        except ValueError:
-            ap.error("--embed expects DIM,EPOCHS (e.g. 16,10)")
-        if embed_dim < 1 or embed_epochs < 2:
-            # epochs >= 2: the learning gate compares losses[-1] < losses[0],
-            # which needs two loss points — a 1-epoch run would always print
-            # NOT-LEARNING and fail the job even when nothing is wrong
-            # (ADVICE r05)
-            ap.error("--embed DIM must be >= 1 and EPOCHS >= 2")
-
-    master, extra_conf = args.master, {}
-    if args.local_cluster:
-        try:
-            n_exec, exec_cores = (int(x) for x in args.local_cluster.split(","))
-        except ValueError:
-            ap.error("--local-cluster expects N_EXEC,CORES (e.g. 4,8)")
-        if n_exec < 1 or exec_cores < 1:
-            ap.error("--local-cluster N_EXEC and CORES must be >= 1")
-        mem_mb = max(2048, 14336 * exec_cores // 8)
-        master = f"local-cluster[{n_exec},{exec_cores},{mem_mb}]"
-        extra_conf = {
-            "spark.executor.memory": f"{mem_mb}m",
-            # quota-sized JVMs: without these, co-running bare JVMs each
-            # size ~23 GC threads for the whole box and thrash during
-            # overlapping collections (measured 6.6x collapse — session.py)
-            "spark.executor.extraJavaOptions": (
-                f"-XX:ParallelGCThreads={exec_cores} -XX:ConcGCThreads=2"
-                f" -XX:ActiveProcessorCount={exec_cores}"
-            ),
-        }
 
     # the session catalog's table root (bucketing metadata lives in the
     # catalog — plain .parquet() writes cannot carry it) is co-located with
     # the stage warehouse so --bucketed-edges artifacts travel with the run
-    extra_conf["spark.sql.warehouse.dir"] = str(
-        Path(args.warehouse).resolve() / "tables"
-    )
+    extra_conf = {
+        "spark.sql.warehouse.dir": str(Path(args.warehouse).resolve() / "tables")
+    }
     spark = get_spark(
-        app_name=f"kg-construct-{args.run_id}", master=master,
+        app_name=f"kg-construct-{args.run_id}", master=args.master,
         extra_conf=extra_conf,
     )
     if args.force:
@@ -380,45 +316,6 @@ def main() -> int:
         print(f"integrity_gate: {'CLEAN' if n_viol == 0 else 'VIOLATED'} "
               f"({detail})")
         if n_viol > 0:
-            ok = False
-    if args.embed:
-        from pyspark.sql import functions as F
-
-        from extract_address_ner_spark.operators.kg_embed import (
-            score_triples,
-            train_transe,
-        )
-        from extract_address_ner_spark.operators.kg_export import (
-            corruption_pairs,
-        )
-
-        # pairs built ONCE (persisted), shared between the training epochs
-        # and the separation report below; released at stage end
-        pairs = corruption_pairs(out["edges"], k=2, seed=7).persist()
-        try:
-            emb, losses = train_transe(
-                out["edges"], dim=embed_dim, epochs=embed_epochs, seed=7,
-                pairs=pairs,
-            )
-            emb.write.mode("overwrite").parquet(
-                f"{args.warehouse}/kg_embeddings"
-            )
-            pos = out["edges"].select("subj", "pred", "obj").distinct()
-            neg = pairs.select(
-                "subj", "pred", F.col("neg_obj").alias("obj")
-            )
-            dp = score_triples(pos, emb).agg(F.avg("dist")).collect()[0][0]
-            dn = score_triples(neg, emb).agg(F.avg("dist")).collect()[0][0]
-        finally:
-            pairs.unpersist()
-        learned = losses[-1] < losses[0]
-        print(
-            f"embed: dim={embed_dim} epochs={embed_epochs} "
-            f"loss {losses[0]:.3f} -> {losses[-1]:.3f} "
-            f"pos_dist={dp:.4f} neg_dist={dn:.4f} "
-            f"{'LEARNED' if learned else 'NOT-LEARNING'}"
-        )
-        if not learned:
             ok = False
     if args.eval_gold:
         gold = spark.read.parquet(args.eval_gold)

@@ -144,12 +144,16 @@ def test_validate_divergence_pinned(spark):
         assert (mention in gated) is passes_gate, mention
 
 
-def test_pagerank_matches_reference_implementation(spark):
+def test_pagerank_matches_reference_implementation(spark, jobs_run_by):
     """pagerank (round 4) against an independent driver-side reference on a
     small fixed graph: same fixed-iteration, dangling-mass-dropped
     semantics, exact to the 6dp output rounding. The graph mixes a hub, a
     chain, a dangling sink, and a parallel-predicate duplicate edge (which
-    must NOT double-count — the operator works on distinct (src, dst))."""
+    must NOT double-count — the operator works on distinct (src, dst)).
+    The rounds build one lazy plan: a round that ran an action of its own
+    would run it while the plan is built, so doubling the rounds must not
+    add a job there. (The collect itself runs more jobs for more rounds:
+    AQE submits each of its query stages as a job.)"""
     rows = [
         ("a", "p1", "b"), ("a", "p2", "b"),  # parallel edge: counts once
         ("a", "p1", "c"), ("b", "p1", "c"),
@@ -157,10 +161,20 @@ def test_pagerank_matches_reference_implementation(spark):
         ("e", "p1", "a"),
     ]
     edges = spark.createDataFrame(rows, "subj string, pred string, obj string")
+    from extract_address_ner_spark.operators.dedup import dedup_cache_scope
     from extract_address_ner_spark.operators.graph_query import pagerank
 
-    got = {r["node"]: r["pagerank"]
-           for r in pagerank(edges, iterations=3).collect()}
+    def build_jobs(iterations):
+        # a scope per call: the second call must not read the first's cache
+        with dedup_cache_scope():
+            ranked, n_jobs = jobs_run_by(
+                lambda: pagerank(edges, iterations=iterations))
+            return ranked.collect(), n_jobs
+
+    rows3, jobs3 = build_jobs(3)
+    _, jobs6 = build_jobs(6)
+    assert jobs3 == jobs6, (jobs3, jobs6)
+    got = {r["node"]: r["pagerank"] for r in rows3}
 
     pairs = sorted({(s, o) for s, _p, o in rows})
     nodes = sorted({n for p in pairs for n in p})
@@ -178,88 +192,6 @@ def test_pagerank_matches_reference_implementation(spark):
         assert got[v] == round(pr[v], 6), (v, got[v], pr[v])
     # dangling mass is dropped, so total rank sums to < 1 here
     assert sum(got.values()) < 1.0
-
-
-def test_pagerank_convergence_mode(spark):
-    """Round-5 (VERDICT r04 #7): tol-mode must stop early once the L1 rank
-    delta falls below tol and land on the same fixed point a long fixed-
-    iteration run reaches; the driver query's fixed-3-round default is
-    untouched."""
-    rows = [
-        ("a", "p1", "b"), ("a", "p1", "c"), ("b", "p1", "c"),
-        ("c", "p1", "d"), ("e", "p1", "a"), ("d", "p1", "a"),
-    ]
-    edges = spark.createDataFrame(rows, "subj string, pred string, obj string")
-    from extract_address_ner_spark.operators.graph_query import pagerank
-
-    tol = 2e-4
-    converged = {r["node"]: r["pagerank"]
-                 for r in pagerank(edges, iterations=60, tol=tol).collect()}
-    # driver-side power iteration with the IDENTICAL stop rule — both sides
-    # run the same number of rounds, so values agree to float noise
-    pairs = sorted({(s, o) for s, _p, o in rows})
-    nodes = sorted({n for p in pairs for n in p})
-    n, d = len(nodes), 0.85
-    outdeg = {u: sum(1 for a, _ in pairs if a == u) for u in nodes}
-    pr = {u: 1.0 / n for u in nodes}
-    rounds = 0
-    for _ in range(60):
-        nxt = {
-            v: (1 - d) / n
-            + d * sum(pr[u] / outdeg[u] for u, w in pairs if w == v)
-            for v in nodes
-        }
-        delta = sum(abs(nxt[v] - pr[v]) for v in nodes)
-        pr = nxt
-        rounds += 1
-        if delta < tol:
-            break
-    assert rounds < 60, "fixture must converge before the cap"
-    # value agreement at the reference's early-stop round count proves the
-    # Spark run stopped at the SAME round (one extra round would move the
-    # hub ranks by ~tol, far above the 1e-6 comparison grain)
-    for v in nodes:
-        assert abs(converged[v] - pr[v]) < 1e-6, (v, converged[v], pr[v])
-    # and the early-stopped vector is within tol of the true fixed point
-    one_more = {
-        v: (1 - d) / n
-        + d * sum(pr[u] / outdeg[u] for u, w in pairs if w == v)
-        for v in nodes
-    }
-    assert sum(abs(one_more[v] - pr[v]) for v in nodes) < tol
-
-
-def test_pagerank_confidence_weighted(spark):
-    """weight_col mode: parallel predicate edges collapse to max(weight)
-    per (src, dst) and influence splits ∝ weight — checked against a
-    driver-side weighted reference."""
-    rows = [
-        ("a", "p1", "b", 0.9), ("a", "p2", "b", 0.5),  # max → 0.9
-        ("a", "p1", "c", 0.3), ("b", "p1", "c", 1.0),
-        ("c", "p1", "a", 0.7),
-    ]
-    edges = spark.createDataFrame(
-        rows, "subj string, pred string, obj string, confidence double")
-    from extract_address_ner_spark.operators.graph_query import pagerank
-
-    got = {r["node"]: r["pagerank"]
-           for r in pagerank(edges, iterations=5,
-                             weight_col="confidence").collect()}
-    w = {}
-    for s, _p, o, c in rows:
-        w[(s, o)] = max(w.get((s, o), 0.0), c)
-    nodes = sorted({n for p in w for n in p})
-    n, d = len(nodes), 0.85
-    wdeg = {u: sum(c for (a, _), c in w.items() if a == u) for u in nodes}
-    pr = {u: 1.0 / n for u in nodes}
-    for _ in range(5):
-        pr = {
-            v: (1 - d) / n
-            + d * sum(pr[u] * c / wdeg[u] for (u, t), c in w.items() if t == v)
-            for v in nodes
-        }
-    for v in nodes:
-        assert got[v] == round(pr[v], 6), (v, got[v], pr[v])
 
 
 def test_k_hop_reachability_min_hops(spark):

@@ -1,7 +1,4 @@
-"""Smoke tests for the spark-submit job entry (jobs/run_pipeline.py),
-including the round-3 ``--local-cluster`` deployment shape (VERDICT r02 #8:
-the 367k-triples/s 4x8 executor shape must be reproducible from the shipped
-entry point, not only from bench internals)."""
+"""Smoke tests for the spark-submit job entry (jobs/run_pipeline.py)."""
 
 import subprocess
 import sys
@@ -70,13 +67,6 @@ def test_job_entry_export_ntriples(tmp_path):
     assert "export_ntriples:" in stdout
 
 
-def test_job_entry_local_cluster(tmp_path):
-    """The deployment shape: 2 real executor JVMs x 2 cores, quota-sized
-    GC — the same master the 367k-triples/s bench leg uses."""
-    stdout = _run_job(tmp_path, ["--local-cluster", "2,2"])
-    assert "master=local-cluster[2,2," in stdout
-
-
 def test_job_entry_spark_submit_py_files(tmp_path):
     """The north-rule deployment mode VERBATIM: ``spark-submit --py-files
     deps.zip jobs/run_pipeline.py``, with the package importable ONLY from
@@ -132,14 +122,3 @@ def test_job_entry_integrity_gate(tmp_path):
                   "confidence_out_of_range", "unknown_pred",
                   "domain_range_violation"):
         assert f"{check}=0" in stdout
-
-
-def test_job_entry_embed(tmp_path):
-    """Round-5: the shipped job's --embed stage trains TransE embeddings on
-    the built edge stage, writes the (kind, name, vec) table under the
-    warehouse, and gates on the hinge loss actually decreasing (training
-    behavior itself is pinned at operator level in tests/test_kg_embed.py)."""
-    stdout = _run_job(tmp_path, ["--master", "local[2]", "--embed", "8,6"])
-    assert "embed: dim=8 epochs=6" in stdout
-    assert "LEARNED" in stdout and "NOT-LEARNING" not in stdout
-    assert (tmp_path / "wh" / "kg_embeddings").exists()
